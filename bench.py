@@ -653,10 +653,6 @@ def _compact(full: dict, keep_ratios: bool = False, keep_cold: bool = True) -> d
 def main() -> None:
     # warm-cache mode, matching the reference's benchmark method
     os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-    # the sf30 leg sorts/writes 180M-row bucketed fact copies; give the
-    # single local-mode JVM headroom for 32 concurrent sort+write tasks
-    # (box has 128 GiB; the 16g default OOM'd the bucketed write)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     spark = get_spark(app_name="mini-log-lakehouse-bench")

@@ -151,24 +151,34 @@ WINDOW_DEFERRALS: dict[int, tuple[str, ...]] = {
 #: rewrite round exists, the record is inert — no cleanup edit needed.
 REWRITE_RESAMPLE: dict[str, int] = {
     # r15 optimization round: tier rewrites (OPTIMIZATION_r15.md §4-6)
-    "user_cooccurrence_triangles": 15,
-    "user_link_prediction": 15,
     "doc_repetition_stats": 15,
     # r16 optimization round: tier/plan rewrites (OPTIMIZATION_r16.md) —
     # entries already in the r16 window get their row this round and the
     # record goes inert; the rest are forced into r17.
-    "dedup_semantic_pairs": 16,
-    "dedup_embedding_cosine": 16,
-    "incremental_dedup_clusters": 16,
-    "user_wcc": 16,
-    "dedup_clusters": 16,
-    "dedup_cluster_representatives": 16,
     "benchmark_contamination": 16,
     "user_sssp_weighted": 16,
-    "ann_recall_report": 16,
+    # also rewritten in r17, but their r16 rewrite has no CORRECTNESS
+    # row yet: the older record already forces them into the r17 window,
+    # whose row postdates both rewrites (a 17 would defer that to r18)
     "user_clustering_coefficient": 16,
+    "user_wcc": 16,
+    "ann_recall_report": 16,
     "streaming_user_sessions": 16,
     "streaming_user_totals": 16,
+    # r17: the four driver-local tiers rebuilt on operators/local_tier.py
+    # (bounded pull, one broadcast slot per operator, strip byte budget),
+    # the cosine gate on cells, and orders_rolling_quarter's explicit
+    # NULL-month row. Seven of these replace r15/r16 records that a
+    # CORRECTNESS row already satisfied.
+    "dedup_ngram_jaccard": 17,
+    "dedup_clusters": 17,
+    "dedup_cluster_representatives": 17,
+    "incremental_dedup_clusters": 17,
+    "dedup_embedding_cosine": 17,
+    "dedup_semantic_pairs": 17,
+    "user_cooccurrence_triangles": 17,
+    "user_link_prediction": 17,
+    "orders_rolling_quarter": 17,
 }
 
 

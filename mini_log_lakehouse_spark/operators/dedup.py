@@ -34,6 +34,7 @@ from mini_log_lakehouse_spark.functions.hashing import (
     sql_portable_hash48,
 )
 from mini_log_lakehouse_spark import session
+from mini_log_lakehouse_spark.operators import local_tier
 from mini_log_lakehouse_spark.functions.text import char_shingles, text_or_empty
 from mini_log_lakehouse_spark.functions.vector import cosine
 from mini_log_lakehouse_spark.sources.registry import load_table
@@ -1188,122 +1189,126 @@ class JaccardCandidateBudgetExceeded(RuntimeError):
 _GUARD_PRE_SLOT: dict[tuple[str], DataFrame] = {}
 
 
-#: Dense-corpus GEMM tier caps for the exact-Jaccard verify (guide §4.2,
-#: same budget discipline as the triangle / link-prediction dense tiers).
-#: Engaged only when the distinct-text corpus is small enough that ALL
-#: pairwise shingle-intersection counts are one 0/1 doc×token matrix
-#: product: the r16 profile of the sf0.1 corpus measured 4,992 reps over
-#: only T = 2,041 distinct 5-gram shingles, where the prefix join emits
-#: 178 M occurrence rows / 8.2 M candidate pairs to find 241 real pairs
-#: (~90 s of join+distinct+array_intersect for a 1e11-flop product).
-NGRAM_GEMM_MAX_DOCS = 65_536  # cheap probe: never scan shingles past this
-NGRAM_GEMM_MAX_NNZ = 4_000_000  # driver pull budget (≈ tens of MB Arrow)
-NGRAM_GEMM_MAX_CELLS = 64_000_000  # R×T float32 broadcast ≤ 256 MB
-NGRAM_GEMM_MAX_FLOPS = 2 * 10**12  # 2·R²·T — a few seconds of BLAS
-
-#: Score-strip budget inside the GEMM kernel, in float32 CELLS: each
-#: task multiplies row sub-chunks of m = CELLS / R so the (m × R) strip
-#: stays ~128 MB regardless of corpus size.
-_NGRAM_GEMM_STRIP_CELLS = 32 * 1024 * 1024
+#: Dense tier of the exact-Jaccard verify: a cheap row-count probe
+#: never shingles past NGRAM_GEMM_MAX_DOCS documents, and the R×R×T
+#: product must stay within a few seconds of BLAS. The pull and matrix
+#: caps are local_tier's LOCAL_MAX_ROWS (shingle occurrences) and
+#: LOCAL_MAX_CELLS (R×T).
+NGRAM_GEMM_MAX_DOCS = 65_536
+NGRAM_GEMM_MAX_FLOPS = 2 * 10**12
 
 
-def _ngram_gemm_rep_pairs(toks_nn: DataFrame, threshold: float):
-    """Dense tier of ngram_jaccard_pairs: all-pairs shingle-intersection
-    counts as a blocked 0/1 matrix product, rep-pair output identical to
-    the prefix-join tier (see ngram_jaccard_pairs for the gate).
+def _raise_if_over_budget(mass: int, candidate_budget: int) -> None:
+    if mass > candidate_budget:
+        raise JaccardCandidateBudgetExceeded(
+            f"exact-Jaccard prefix join would generate {mass:,} candidate "
+            f"occurrence rows (> budget {candidate_budget:,}): this corpus "
+            "is in the lossless algorithm's intrinsic quadratic regime. "
+            "Run the MinHash-LSH production tier instead "
+            "(dedup_minhash_pairs / minhash_candidate_pairs), or raise "
+            "candidate_budget / pass candidate_budget=None on a cluster "
+            "sized for the shuffle."
+        )
 
-    ``toks_nn`` is (_fp, toks) at distinct-text grain, NULL texts already
-    excluded (exactly the fps the join tier's ``sh`` contains). The token
-    table rides to the driver once through Arrow (bounded by the caller's
-    nnz gate), tokens are integer-coded with ``dictionary_encode`` (an
-    injective exact mapping — intersection COUNTS are representation-
-    independent), and node blocks stream through ``mapInArrow``: each
-    task computes (block × T) @ (T × R) in float32 BLAS. Every product is
-    0/1 and every partial sum is an integer ≤ T < 2²⁴, so each count is
-    the exact integer |S_a ∩ S_b| (the triangle dense tier's argument).
-    The kernel emits only pairs with ≥ 1 shared token (exactly the pairs
-    the token join can generate) whose float64 quotient
-    i / (sz_a + sz_b − i) clears threshold − 1e-9; the authoritative
-    jaccard filter + round re-runs in the JVM on the exact integers, so
-    the output is value-identical by construction (|A∪B| = |A|+|B|−|A∩B|
-    for the distinct shingle sets — the same identity the DuckDB oracle
-    evaluates). Returns None when the post-pull caps (R×T cells, 2·R²·T
-    flops) fail — the caller falls back to the prefix join, which never
-    holds the corpus in memory."""
+
+def _prefix_join_mass(rep, tok, tok_dict, threshold: float) -> int:
+    """Σ bucket² over the prefix-token histogram, computed from the
+    (rep, token) occurrence arrays exactly as the join tier's Spark
+    aggregate does: tokens ordered by (document frequency, token),
+    prefix length sz − ⌈t·sz⌉ + 1. ``tok_dict`` holds the token strings;
+    Arrow sorts them by bytes, as Spark does."""
     import numpy as np
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from pyspark.sql import types as T
+    t_dim = len(tok_dict)
+    lex = pc.rank(tok_dict).to_numpy().astype(np.int64) - 1
+    dfreq = np.bincount(tok, minlength=t_dim)
+    order = np.lexsort((dfreq[tok] * t_dim + lex[tok], rep))
+    rep_s, tok_s = rep[order], tok[order]
+    sz = np.bincount(rep_s)
+    pos = np.arange(len(rep_s)) - (np.cumsum(sz) - sz)[rep_s]
+    plen = sz - np.ceil(threshold * sz).astype(np.int64) + 1
+    counts = np.bincount(tok_s[pos < plen[rep_s]], minlength=t_dim)
+    return int((counts * counts).sum())
 
-    from mini_log_lakehouse_spark.session import default_parallelism
 
-    spark = toks_nn.sparkSession
-    tbl = toks_nn.select("_fp", "toks").toArrow()
-    fps = np.asarray(tbl.column("_fp").to_pylist(), dtype=object)
-    n_reps = len(fps)
-    if n_reps < 2:
+def _ngram_row_bytes(n_reps: int, t_dim: int) -> int:
+    """Live bytes per strip row of _ngram_gemm_kernel: the gathered 0/1
+    row (4 B per token), float32 counts, float64 quotient and masks
+    (14 B per rep), and the emitted columns if every pair survives."""
+    return 4 * t_dim + 96 * n_reps
+
+
+def _ngram_gemm_kernel(payload, idx):
+    """Rep pairs (a < b in fp order) with ≥ 1 shared shingle whose
+    float64 Jaccard clears the threshold minus 1e-9."""
+    import numpy as np
+
+    fps, b_mat, sz, cut = payload
+    inter = b_mat[idx] @ b_mat.T  # exact integer counts ≤ T < 2²⁴
+    jac = np.add.outer(sz[idx], sz, dtype=np.float64)
+    jac -= inter  # |A ∪ B| ≥ 1
+    np.divide(inter, jac, out=jac)
+    keep = jac >= cut
+    keep &= inter >= 1.0
+    keep &= np.arange(len(fps)) > idx[:, None]
+    r, c = np.nonzero(keep)
+    a = idx[r]
+    return fps[a], fps[c], inter[r, c].astype(np.int64), sz[a], sz[c]
+
+
+def _ngram_gemm_rep_pairs(
+    occ: DataFrame, threshold: float, candidate_budget: int | None
+):
+    """Dense tier of ngram_jaccard_pairs over ``occ`` = (_fp, tok)
+    shingle occurrences of the non-NULL distinct texts — exactly the
+    fps the join tier's ``sh`` holds.
+
+    Exactness: with reps as rows of a 0/1 rep×token matrix in fp order,
+    every product and partial sum of the float32 GEMM is an integer
+    ≤ T < 2²⁴, so each count is the exact |S_a ∩ S_b|. Emitting column
+    index > row index is the join tier's _fp_a < _fp_b, ≥ 1 shared token
+    is the pairs a token join can generate, and the authoritative
+    jaccard filter and round re-run in the JVM on the exact integers
+    (|A∪B| = |A| + |B| − |A∩B|).
+
+    Gate: the pull fits LOCAL_MAX_ROWS, ≥ 2 reps, R×T ≤ LOCAL_MAX_CELLS
+    and 2·R²·T ≤ NGRAM_GEMM_MAX_FLOPS; otherwise None and the caller
+    runs the prefix join. The candidate budget guard runs on the
+    prefix-join mass either tier would see, before any kernel job."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    tbl = local_tier.bounded_pull(occ, local_tier.LOCAL_MAX_ROWS)
+    if tbl is None:
         return None
-    lists = tbl.column("toks").combine_chunks()
-    enc = lists.values.dictionary_encode()
-    tok_ids = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    t_dim = len(enc.dictionary)
+    fp_enc = tbl.column("_fp").combine_chunks().dictionary_encode()
+    tok_enc = tbl.column("tok").combine_chunks().dictionary_encode()
+    n_reps, t_dim = len(fp_enc.dictionary), len(tok_enc.dictionary)
     if (
-        n_reps * t_dim > NGRAM_GEMM_MAX_CELLS
+        n_reps < 2
+        or n_reps * t_dim > local_tier.LOCAL_MAX_CELLS
         or 2 * n_reps * n_reps * t_dim > NGRAM_GEMM_MAX_FLOPS
     ):
         return None
-    sz = np.diff(lists.offsets.to_numpy(zero_copy_only=False)).astype(np.int64)
-    # index order = lexicographic fp order (ASCII md5 hex), so emitting
-    # column index > row index IS the join tier's _fp_a < _fp_b rule.
-    order = np.argsort(fps)
-    inv = np.empty(n_reps, dtype=np.int64)
-    inv[order] = np.arange(n_reps)
-    fps_s, sz_s = fps[order], sz[order]
+    order = pc.sort_indices(fp_enc.dictionary).to_numpy()  # Spark's order
+    rep = np.argsort(order)[fp_enc.indices.to_numpy(zero_copy_only=False)]
+    tok = tok_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    if candidate_budget is not None:
+        mass = _prefix_join_mass(rep, tok, tok_enc.dictionary, threshold)
+        _raise_if_over_budget(mass, candidate_budget)
     b_mat = np.zeros((n_reps, t_dim), dtype=np.float32)
-    b_mat[inv[np.repeat(np.arange(n_reps), sz)], tok_ids] = 1.0
-    bc = spark.sparkContext.broadcast((fps_s, b_mat, sz_s))
-    cut = threshold - 1e-9
-
-    def gemm_pairs(batches):
-        fps_b, b_b, sz_b = bc.value
-        r_n = b_b.shape[0]
-        cols = np.arange(r_n)
-        chunk = max(1, _NGRAM_GEMM_STRIP_CELLS // max(1, r_n))
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            idx = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            for lo in range(0, len(idx), chunk):
-                ii = idx[lo : lo + chunk]
-                inter = b_b[ii] @ b_b.T  # exact integer counts ≤ T < 2²⁴
-                union = (sz_b[ii, None] + sz_b[None, :]).astype(np.float64) - inter
-                jac = inter.astype(np.float64) / union  # union ≥ 1: sz ≥ 1
-                keep = (cols[None, :] > ii[:, None]) & (inter >= 1.0) & (jac >= cut)
-                r, c = np.nonzero(keep)
-                if not len(r):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(fps_b[ii[r]], type=pa.string()),
-                        pa.array(fps_b[c], type=pa.string()),
-                        pa.array(inter[r, c].astype(np.int64), type=pa.int64()),
-                        pa.array(sz_b[ii[r]], type=pa.int64()),
-                        pa.array(sz_b[c], type=pa.int64()),
-                    ],
-                    names=["_fp_a", "_fp_b", "_i", "_sz_a", "_sz_b"],
-                )
-
-    kern = spark.range(0, n_reps, 1, min(default_parallelism(), n_reps)).mapInArrow(
-        gemm_pairs,
-        T.StructType(
-            [
-                T.StructField("_fp_a", T.StringType()),
-                T.StructField("_fp_b", T.StringType()),
-                T.StructField("_i", T.LongType()),
-                T.StructField("_sz_a", T.LongType()),
-                T.StructField("_sz_b", T.LongType()),
-            ]
-        ),
+    b_mat[rep, tok] = 1.0
+    fps = fp_enc.dictionary.take(order).to_numpy(zero_copy_only=False)
+    payload = (fps, b_mat, np.bincount(rep, minlength=n_reps), threshold - 1e-9)
+    kern = local_tier.block_map(
+        occ.sparkSession,
+        "ngram_jaccard",
+        _ngram_gemm_kernel,
+        payload,
+        n_reps,
+        "_fp_a string, _fp_b string, _i long, _sz_a long, _sz_b long",
+        _ngram_row_bytes(n_reps, t_dim),
     )
     jac = F.col("_i") / (F.col("_sz_a") + F.col("_sz_b") - F.col("_i"))
     return kern.filter(jac >= threshold).select(
@@ -1332,6 +1337,12 @@ def ngram_jaccard_pairs(
     join on prefix tokens finds every qualifying pair, and the output
     provably equals the quadratic all-pairs filter — which is what the
     DuckDB oracle computes at driver scale.
+
+    Two tiers, identical output: a corpus of ≤ NGRAM_GEMM_MAX_DOCS
+    documents whose shingle occurrences fit one bounded pull takes the
+    dense GEMM tier (_ngram_gemm_rep_pairs); every other corpus takes
+    the prefix join below, which never holds the corpus in memory. The
+    ``candidate_budget`` guard fires on both, before any join or kernel.
 
     Scale shape: one map pass for shingles, a DF count + re-sort pass
     (below), explode ~(1−t)·|S| prefix tokens per doc (half the tokens
@@ -1389,49 +1400,23 @@ def ngram_jaccard_pairs(
     reps = docs.select(
         F.md5(F.col(text_col)).alias("_fp"), F.col(text_col).alias("_rtext")
     ).dropDuplicates(["_fp"])
-    # DENSE TIER (r16, guide §4.2): when the distinct-text corpus is
-    # bounded (one cheap count probes it — the triangle tier's
-    # edges.count() discipline) and its shingle nnz fits the driver-pull
-    # budget, every pairwise intersection count is one blocked 0/1
-    # matrix product — candidate generation, the distinct shuffle, and
-    # the per-pair array_intersect verify all collapse into BLAS
-    # (measured at sf0.1: 4,992 reps × 2,041 distinct shingles; the
-    # prefix join spends ~90 s materializing 8.2 M candidates to keep
-    # 241). NULL-text classes are excluded exactly as the join tier
-    # excludes them (explode emits their single NULL token, which the
-    # dfreq inner join drops). The candidate_budget guard below is a
-    # prefix-JOIN-mass guard and so applies only to that tier; the dense
-    # tier bounds its own work by the nnz/cells/flops caps and emits
-    # only qualifying pairs. Corpora past any cap (real token-diverse
-    # corpora at scale, the r14 saturated heavy profile) fall through to
-    # the unchanged prefix join, which never holds the corpus in memory.
-    rep_pairs = None
-    if docs.count() <= NGRAM_GEMM_MAX_DOCS:
-        toks_nn = reps.filter(F.col("_rtext").isNotNull()).select(
-            "_fp",
-            F.array_distinct(char_shingles(F.col("_rtext"), shingle_n)).alias(
-                "toks"
-            ),
-        )
-        gate = toks_nn.agg(
-            F.count(F.lit(1)).alias("r"),
-            F.sum(F.array_size("toks")).alias("nnz"),
-        ).first()
-        if int(gate["r"] or 0) >= 2 and int(gate["nnz"] or 0) <= NGRAM_GEMM_MAX_NNZ:
-            rep_pairs = _ngram_gemm_rep_pairs(toks_nn, threshold)
-    if rep_pairs is not None:
-        # sh-membership ⇔ the class has ≥ 1 non-null shingle ⇔ its text
-        # is non-null (char_shingles of non-null text always yields ≥ 1
-        # non-null token) — the intra gate below needs no shingle pass.
-        shfps = reps.filter(F.col("_rtext").isNotNull()).select(
-            F.col("_fp").alias("_shfp")
-        )
-        return _ngram_pair_tail(members, rep_pairs, shfps, threshold)
-    toks = reps.select(
+    # (_fp, shingle) occurrences of the non-NULL texts: a NULL text's
+    # single NULL shingle never joins, so neither tier pairs it
+    texts = reps.filter(F.col("_rtext").isNotNull())
+    ex = texts.select(
         "_fp",
-        F.array_distinct(char_shingles(F.col("_rtext"), shingle_n)).alias("toks"),
+        F.explode(F.array_distinct(char_shingles(F.col("_rtext"), shingle_n))).alias(
+            "tok"
+        ),
     )
-    ex = toks.select("_fp", F.explode("toks").alias("tok"))
+    if docs.count() <= NGRAM_GEMM_MAX_DOCS:
+        rep_pairs = _ngram_gemm_rep_pairs(ex, threshold, candidate_budget)
+        if rep_pairs is not None:
+            # sh-membership ⇔ the class has ≥ 1 shingle ⇔ its text is
+            # non-null (char_shingles of non-null text always yields ≥ 1
+            # token) — the intra gate below needs no shingle pass.
+            shfps = texts.select(F.col("_fp").alias("_shfp"))
+            return _ngram_pair_tail(members, rep_pairs, shfps, threshold)
     dfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     sh = (
         ex.join(dfreq, "tok")
@@ -1479,15 +1464,7 @@ def ngram_jaccard_pairs(
         if mass > candidate_budget:
             _GUARD_PRE_SLOT.pop(skey, None)
             pre.unpersist(blocking=False)  # nothing will consume it
-            raise JaccardCandidateBudgetExceeded(
-                f"exact-Jaccard prefix join would generate {mass:,} candidate "
-                f"occurrence rows (> budget {candidate_budget:,}): this corpus "
-                "is in the lossless algorithm's intrinsic quadratic regime. "
-                "Run the MinHash-LSH production tier instead "
-                "(dedup_minhash_pairs / minhash_candidate_pairs), or raise "
-                "candidate_budget / pass candidate_budget=None on a cluster "
-                "sized for the shuffle."
-            )
+        _raise_if_over_budget(mass, candidate_budget)
     a = pre.select(F.col("_fp").alias("_fp_a"), F.col("sz").alias("sz_a"), "tok")
     b = pre.select(F.col("_fp").alias("_fp_b"), F.col("sz").alias("sz_b"), "tok")
     cands = (
@@ -1739,29 +1716,22 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- near-dup clustering (connected components) -------------------------------
 
-#: Edge cap for the driver-local connected-components tier: the edge
-#: list rides to the driver ONCE as two int64 Arrow columns (4 M edges
-#: = 64 MB — the same bounded-pull budget as LP_DENSE_MAX_EDGES) and
-#: min-label propagation runs as vectorized numpy sweeps. Above the cap
-#: the distributed join loop runs (never collects the graph) — the
-#: 100 TB tier. The win is per-ROUND floors, not arithmetic: each
-#: distributed round is ~4 jobs (join, agg, changed-probe, checkpoint)
-#: that cost the same on a 100-edge delta graph as the whole local
-#: fixpoint does in microseconds (guide §2.4 — remove shuffles
-#: outright; measured on incremental_dedup_clusters' warm increment,
-#: see OPTIMIZATION_r16.md).
-CC_LOCAL_MAX_EDGES = 4_000_000
+def _cc_not_converged(max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter + 1} rounds "
+        "(component diameter exceeds max_iter); raise max_iter or use "
+        "a large-star/small-star variant for deep graphs"
+    )
 
 
-def _cc_local(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Driver-local tier of connected_components: the SAME min-label
-    propagation (one adoption sweep per round, quiet-round convergence,
-    loud failure past max_iter — behavior-identical to the distributed
-    loop, including the deep-graph raise) over numpy arrays."""
+def _cc_local(spark: SparkSession, tbl, max_iter: int) -> DataFrame:
+    """Driver-local tier of connected_components over the pulled edge
+    table: the same min-label propagation (one adoption sweep per round,
+    a quiet round to observe convergence, the same raise past max_iter)
+    as numpy sweeps, so its output equals the distributed loop's."""
     import numpy as np
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
-    tbl = edges.toArrow()
     s = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
     d = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
     nodes, inv = np.unique(np.concatenate([s, d]), return_inverse=True)
@@ -1775,22 +1745,8 @@ def _cc_local(edges: DataFrame, max_iter: int) -> DataFrame:
             break
         lab = new
     else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter + 1} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "a large-star/small-star variant for deep graphs"
-        )
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("node", T.LongType()),
-            T.StructField("component", T.LongType()),
-        ]
-    )
-    return edges.sparkSession.createDataFrame(
-        pd.DataFrame({"node": nodes, "component": lab}), schema
-    )
+        raise _cc_not_converged(max_iter)
+    return spark.createDataFrame(pa.table({"node": nodes, "component": lab}))
 
 
 def connected_components(
@@ -1801,30 +1757,25 @@ def connected_components(
     itself and its neighbors until fixpoint. Returns (node, component)
     with component = the minimum node id in the component.
 
-    Two tiers, identical output (and identical deep-graph raise):
-    ≤ CC_LOCAL_MAX_EDGES edges runs the propagation driver-local over
-    numpy (the delta graphs of incremental cluster maintenance are
-    hundreds of edges — per-round join floors dwarfed them); above the
-    cap, the distributed shape: a driver-side loop of joins with
-    ``localCheckpoint`` per round to truncate lineage (else the plan
-    doubles every iteration), early exit on a converged round. Rounds
-    needed = graph diameter; near-dup clusters are shallow (a dup
-    cluster's diameter is rarely > 3-4), so the loop is short. For
+    Two tiers, identical output and identical deep-graph raise: a
+    long-typed edge list that fits local_tier.LOCAL_MAX_ROWS runs the
+    propagation on the driver (_cc_local); larger ones run a driver-side
+    loop of joins with ``localCheckpoint`` per round to truncate lineage
+    and an early exit on a converged round. Rounds needed = graph
+    diameter; near-dup clusters are shallow, so the loop is short. For
     web-scale graphs you'd switch to the large-star/small-star algorithm
     (same join primitives, O(log n) rounds)."""
-    # Materialize the edge list FIRST: nodes and the symmetric closure
-    # both re-read it, and the caller's edge plan may be expensive (here:
-    # the exact Jaccard join) — without this it would evaluate 3×.
+    # Checkpoint first: the caller's edge plan may be the whole exact-
+    # Jaccard join, and the pull, the node list and the symmetric closure
+    # all read it (a pull over the cap must not evaluate it again).
     edges = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint()
     src, dst = "src", "dst"
-    if (
-        isinstance(edges.schema["src"].dataType, LongType)
-        and isinstance(edges.schema["dst"].dataType, LongType)
-        and edges.count() <= CC_LOCAL_MAX_EDGES
-    ):
-        return _cc_local(edges, max_iter)
+    if all(isinstance(f.dataType, LongType) for f in edges.schema.fields):
+        tbl = local_tier.bounded_pull(edges, local_tier.LOCAL_MAX_ROWS)
+        if tbl is not None:
+            return _cc_local(edges.sparkSession, tbl, max_iter)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -1874,11 +1825,7 @@ def connected_components(
         # diameter > max_iter would exit here with intermediate labels —
         # silently splitting true clusters (and diverging from the exact
         # recursive-CTE oracle). Fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter + 1} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "a large-star/small-star variant for deep graphs"
-        )
+        raise _cc_not_converged(max_iter)
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -2101,18 +2048,11 @@ COSINE_DEDUP_THRESHOLD = 0.9
 _GATE_COSINE_THRESHOLD = 0.4
 
 
-#: Max rows of any single block for the vectorized within-block cosine
-#: tier: each task holds its whole block as a (n × dim) float64 matrix
-#: (1 M rows × 64 dims × 8 B = 512 MB) plus an A-sub-chunked score
-#: strip, so the bound is per-task memory — same tier discipline as
-#: TRIANGLE_BCAST_MAX_EDGES / LP_DENSE_MAX_EDGES. Above it the pair
-#: join runs (never holds a block in one task).
-COSINE_GEMM_MAX_BLOCK = 1_000_000
-
-#: Score-strip budget inside the kernel, in float64 CELLS: the A-side
-#: sub-chunk is sized m = CELLS / n so the (m × n) strip stays ~256 MB
-#: regardless of block size (m = whole block when blocks are small).
-_COSINE_GEMM_STRIP_CELLS = 32 * 1024 * 1024
+def _cosine_row_bytes(n: int) -> int:
+    """Live bytes per strip row of _fold_pair_scores over an n-row
+    block: float64 dots and denominators, masks, and the emitted
+    columns if every pair survives."""
+    return 96 * n
 
 
 def _fold_pair_scores(ids, mat, threshold):
@@ -2123,10 +2063,11 @@ def _fold_pair_scores(ids, mat, threshold):
     F.aggregate(zip_with(...)) evaluates — then sqrt / multiply / divide
     (all correctly rounded single ops) and the measured DuckDB zero-norm
     branch (denom == 0 → -1.0). Yields (id_a, id_b, raw_cos) numpy
-    arrays per A-sub-chunk; rows are pre-filtered to raw ≥ threshold −
-    5.1e-7 (round-half-up to 6 decimals can lift a value by at most
-    5e-7, so no surviving pair is dropped; the exact round + ≥ filter
-    re-runs in the JVM on the raw double)."""
+    arrays per A-side strip of local_tier.strip_rows rows; rows are
+    pre-filtered to raw ≥ threshold − 5.1e-7 (round-half-up to 6
+    decimals can lift a value by at most 5e-7, so no surviving pair is
+    dropped; the exact round + ≥ filter re-runs in the JVM on the raw
+    double)."""
     import numpy as np
 
     n, d = mat.shape
@@ -2135,16 +2076,19 @@ def _fold_pair_scores(ids, mat, threshold):
         nrm2 += mat[:, k] * mat[:, k]
     nrm = np.sqrt(nrm2)
     cut = threshold - 5.1e-7
-    chunk = max(1, _COSINE_GEMM_STRIP_CELLS // max(1, n))
+    chunk = local_tier.strip_rows(_cosine_row_bytes(n))
     for lo in range(0, n, chunk):
         hi = min(lo + chunk, n)
         dots = np.zeros((hi - lo, n))
+        tmp = np.empty_like(dots)
         for k in range(d):
-            dots += np.multiply.outer(mat[lo:hi, k], mat[:, k])
-        denom = np.multiply.outer(nrm[lo:hi], nrm[:])
+            dots += np.multiply.outer(mat[lo:hi, k], mat[:, k], out=tmp)
+        denom = np.multiply.outer(nrm[lo:hi], nrm, out=tmp)
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom == 0.0, -1.0, dots / denom)
-        keep = (ids[lo:hi, None] < ids[None, :]) & (cos >= cut)
+            cos = np.divide(dots, denom, out=dots)
+        cos[denom == 0.0] = -1.0
+        keep = ids[lo:hi, None] < ids[None, :]
+        keep &= cos >= cut
         r, c = np.nonzero(keep)
         if len(r):
             yield ids[lo + r], ids[c], cos[r, c]
@@ -2157,7 +2101,8 @@ def _blocked_cosine_pairs(
     vec_id, embedding) rows — the ONE body behind embedding_cosine_pairs
     and semantic_dedup_pairs. Two tiers, identical output:
 
-    - **vectorized** (max block ≤ COSINE_GEMM_MAX_BLOCK rows): one
+    - **vectorized** (max block rows × embedding dim ≤
+      local_tier.LOCAL_MAX_CELLS, the block one task holds): one
       applyInArrow task per block computes every within-block score as
       d rank-1 float64 updates (bit-identical to the interpreted fold —
       see _fold_pair_scores) and emits only near-threshold survivors;
@@ -2179,13 +2124,13 @@ def _blocked_cosine_pairs(
     src = blocked.select(
         F.col(block_col).alias("_blk"), F.col("vec_id"), F.col("embedding")
     ).filter(F.col("_blk").isNotNull() & F.col("embedding").isNotNull())
-    max_block = (
+    max_cells = (
         src.groupBy("_blk")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(F.max("_n").alias("_m"))
-        .first()["_m"]
+        .agg(F.count(F.lit(1)).alias("_n"), F.max(F.size("embedding")).alias("_d"))
+        .agg(F.max(F.col("_n") * F.col("_d")).alias("_cells"))
+        .first()["_cells"]
     )
-    if max_block is not None and max_block <= COSINE_GEMM_MAX_BLOCK:
+    if max_cells is not None and max_cells <= local_tier.LOCAL_MAX_CELLS:
         import pyarrow as pa
 
         from pyspark.sql import types as T

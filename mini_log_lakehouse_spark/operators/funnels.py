@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mini_log_lakehouse_spark.operators import local_tier
 from mini_log_lakehouse_spark.operators.sessions import sql_session_ids_cte
 from mini_log_lakehouse_spark.sources.registry import load_table
 
@@ -462,118 +463,102 @@ def user_cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_counts(cooccurrence_edges(spark, sf_dir)).orderBy("user_id")
 
 
-#: Directed-edge count under which triangle_counts uses the
-#: adjacency-broadcast intersection tier: the broadcast hash relation
-#: holds one sorted long array per vertex totalling ~16 B per directed
-#: edge (8 M directed edges ≈ 128 MB per executor — the same order as
-#: the dedup estimate-join broadcast tier). Above it, the wedge-close
-#: join tier runs — it never holds adjacency in memory.
-TRIANGLE_BCAST_MAX_EDGES = 8_000_000
-
-#: Dense-graph GEMM tier bounds for triangle_counts — the same caps and
-#: density estimate as link prediction's dense tier (one V×V float32
-#: 0/1 adjacency broadcast, 4096² × 4 B = 64 MB; edge list pulled once,
-#: ≤ 4 M rows ≈ 64 MB), engaged only when V² is below the wedge mass.
-TRIANGLE_DENSE_MAX_NODES = 4096
-TRIANGLE_DENSE_MAX_EDGES = 4_000_000
-
-
-def _dense_adjacency(edges: DataFrame):
-    """(sorted node ids, V×V float32 0/1 adjacency) pulled to the
-    driver ONCE through Arrow — the shared build for the dense-graph
-    GEMM tiers (triangle_counts, _lp_candidates). Callers gate on
-    their edge/node caps; at the caps the pull is ≤ 64 MB and the
-    matrix ≤ 64 MB — the same bounded-driver-pull budget as a broadcast
-    small side."""
+def _dense_adjacency(tbl):
+    """(sorted node ids, V×V float32 0/1 adjacency) from a pulled (u, v)
+    edge table, or None unless the graph is small and dense enough that
+    V² work in BLAS beats wedge-mass work in the JVM:
+    0 < V ≤ local_tier.DENSE_MAX_NODES and V² < Σ deg·(deg−1)/2. The
+    shared payload of the dense-graph tiers (triangle_counts,
+    _lp_candidates)."""
     import numpy as np
 
-    tbl = edges.select("u", "v").toArrow()
-    us = tbl.column("u").to_numpy(zero_copy_only=False).astype("int64")
-    vs = tbl.column("v").to_numpy(zero_copy_only=False).astype("int64")
-    ids = np.unique(np.concatenate([us, vs]))
-    a_mat = np.zeros((len(ids), len(ids)), dtype=np.float32)
-    ui, vi = np.searchsorted(ids, us), np.searchsorted(ids, vs)
+    us = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
+    vs = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
+    ids, inv = np.unique(np.concatenate([us, vs]), return_inverse=True)
+    deg = np.bincount(inv)
+    n_nodes = len(ids)
+    if not (
+        0 < n_nodes <= local_tier.DENSE_MAX_NODES
+        and n_nodes * n_nodes < int((deg * (deg - 1)).sum()) // 2
+    ):
+        return None
+    a_mat = np.zeros((n_nodes, n_nodes), dtype=np.float32)
+    ui, vi = inv[: len(us)], inv[len(us) :]
     a_mat[ui, vi] = 1.0
     a_mat[vi, ui] = 1.0
     return ids, a_mat
 
 
-def _dense_graph_gate(und: DataFrame, max_nodes: int) -> bool:
-    """True when the graph is small AND dense enough that V² work in
-    BLAS beats wedge-mass work in the JVM: V ≤ max_nodes and
-    V² < Σ deg·(deg−1)/2 (the one-aggregate estimate both dense tiers
-    share). ``und`` is the symmetric closure with a ``src`` column."""
-    deg_stats = (
-        und.groupBy("src")
-        .count()
-        .agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum(F.col("count") * (F.col("count") - 1)).alias("wedges2"),
-        )
-        .first()
+def _dense_row_bytes(n_nodes: int) -> int:
+    """Live bytes per strip row of the dense-graph kernels: the gathered
+    adjacency row and its float32 common-neighbor counts (8 B per node),
+    masks, and the emitted columns if every pair survives."""
+    return 64 * n_nodes
+
+
+def _dense_graph_tier(edges: DataFrame, op: str, kernel, schema: str):
+    """(whether the edge list fit one bounded pull, the dense tier's
+    frame or None): the pull and gate the dense-graph tiers share."""
+    tbl = local_tier.bounded_pull(edges.select("u", "v"), local_tier.LOCAL_MAX_ROWS)
+    adj = None if tbl is None else _dense_adjacency(tbl)
+    if adj is None:
+        return tbl is not None, None
+    n_nodes = len(adj[0])
+    return True, local_tier.block_map(
+        edges.sparkSession, op, kernel, adj, n_nodes, schema, _dense_row_bytes(n_nodes)
     )
-    n_nodes = int(deg_stats["v"] or 0)
-    wedge_mass = int(deg_stats["wedges2"] or 0) // 2
-    return 0 < n_nodes <= max_nodes and n_nodes * n_nodes < wedge_mass
+
+
+def _triangle_kernel(payload, idx):
+    """(user_id, n_triangles > 0) for nodes ``idx``: closed wedges at x
+    are Σ_y A_xy·(A²)_xy, and T(x) is that sum DIV 2."""
+    import numpy as np
+
+    ids, a_mat = payload
+    blk = a_mat[idx]
+    cn = blk @ a_mat  # |N(x)∩N(y)|: exact integers ≤ V < 2²⁴
+    cn *= blk
+    t = cn.sum(axis=1, dtype=np.float64).astype(np.int64) // 2  # sums ≤ V² < 2⁵³
+    keep = t > 0
+    return ids[idx[keep]], t[keep]
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle counts over an undirected (u < v once) edge
-    list. Three tiers, identical output (vertices in ≥ 1 triangle):
+    list. Three tiers, identical output (vertices in ≥ 1 triangle); one
+    bounded pull of the edges decides between them:
 
-    - **dense GEMM** (≤ TRIANGLE_DENSE_MAX_EDGES edges, V ≤
-      TRIANGLE_DENSE_MAX_NODES, and V² below the wedge mass): closed
-      wedges at x are Σ_y A_xy·(A²)_xy, so T(x) = that sum DIV 2 —
-      node blocks stream through mapInArrow, each task computes
-      (block × V) @ (V × V) in float32 BLAS ((A²)_xy = |N(x)∩N(y)| ≤
-      V < 2²⁴, exact; the final reduction runs in float64 where sums ≤
-      V² < 2⁵³, exact). The SAME arithmetic as the intersection tier
-      — |N(x)∩N(y)| per directed edge, summed and halved — executed as
-      a matrix product instead of 2|E| interpreted array walks (guide
-      §4.2: hand whole batches to vectorized native code; measured on
-      the sf0.1 near-clique — 1.03 M edges, avg degree 1380 — the
-      array_intersect tier spends ~29 s walking Σ deg² ≈ 2.9 B array
-      cells in the JVM, the GEMM ~2 s; see OPTIMIZATION_r16.md).
-
-    - **adjacency-intersection** (≤ TRIANGLE_BCAST_MAX_EDGES directed
-      edges): per directed edge (a, b), |N(a) ∩ N(b)| via
+    - **dense GEMM** (the pull fits local_tier.LOCAL_MAX_ROWS and
+      _dense_adjacency accepts the graph): per node strip,
+      (strip × V) @ (V × V) common-neighbor counts in float32 BLAS,
+      exact as integers ≤ V < 2²⁴; the closed-wedge sums run in float64,
+      exact below 2⁵³, and are halved as integers — the intersection
+      tier's arithmetic as a matrix product.
+    - **adjacency-intersection** (the pull fits, the graph is sparse or
+      big): per directed edge (a, b), |N(a) ∩ N(b)| via
       ``array_intersect`` over broadcast sorted neighbor arrays; each
       triangle {x,y,z} is counted at x once via (x,y) and once via
-      (x,z), so T(x) = Σ_cn / 2 exactly. No wedge row is ever
-      materialized, probed, or aggregated (guide §1.2; 117 s → 33 s on
-      the sf0.1 graph, see OPTIMIZATION_r15.md). The tier for graphs
-      too big to ride as one dense matrix but whose adjacency lists
-      still broadcast — real sparse graphs, where V² ≫ wedge mass and
-      the GEMM estimate correctly declines.
-
-    - **wedge-close join** (bigger graphs): the node-ordered
+      (x,z), so T(x) = Σ_cn / 2 exactly. At the cap the broadcast holds
+      ~16 B per directed edge, ~128 MB per executor.
+    - **wedge-close join** (the pull is over the cap): the node-ordered
       wedge-close enumeration (see user_cooccurrence_triangles) — never
-      holds adjacency in memory, the scale-out tier at 100 TB where
-      per-executor adjacency no longer fits; there the broadcast cap —
-      not a collect — decides, same discipline as dedup's three-tier
-      estimate join."""
-    n_edges = edges.count()
-    n_directed = 2 * n_edges
-    if n_edges <= TRIANGLE_DENSE_MAX_EDGES:
-        und_s = edges.select(F.col("u").alias("src")).unionAll(
-            edges.select(F.col("v").alias("src"))
-        )
-        if _dense_graph_gate(und_s, TRIANGLE_DENSE_MAX_NODES):
-            return _triangle_counts_dense(edges)
-    if n_directed <= TRIANGLE_BCAST_MAX_EDGES:
+      holds adjacency in memory, the scale-out tier."""
+    fits, dense = _dense_graph_tier(
+        edges, "triangle_counts", _triangle_kernel, "user_id long, n_triangles long"
+    )
+    if dense is not None:
+        return dense
+    if fits:
         und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
             edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
         )
         # ONE adjacency aggregation, broadcast ONCE: the two sides join
         # the same relation under plain SubqueryAliases (erased in
         # physical planning), so the second BroadcastExchange
-        # canonicalizes equal to the first and ReusedExchange serves it
-        # — r15 aliased the columns per side, which put a differing
-        # Project UNDER each exchange and defeated reuse, doubling both
-        # the aggregation and the per-executor broadcast memory that
-        # sized TRIANGLE_BCAST_MAX_EDGES (ADVICE r15; plan evidence
-        # plans/r16/triangle_bcast_tier_reuse.txt — ReusedExchange on a
-        # sparse fixture that takes this tier).
+        # canonicalizes equal to the first and ReusedExchange serves it;
+        # aliasing the columns per side would put a differing Project
+        # under each exchange and defeat the reuse (plan evidence:
+        # plans/r16/triangle_bcast_tier_reuse.txt).
         adj = und.groupBy(F.col("a").alias("n_id")).agg(
             F.array_sort(F.collect_list("b")).alias("nbrs")
         )
@@ -615,59 +600,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
     return verts.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
-    )
-
-
-def _triangle_counts_dense(edges: DataFrame) -> DataFrame:
-    """Dense tier of triangle_counts (see its docstring for the gate and
-    the exactness argument): per node block, (block × V) @ (V × V)
-    common-neighbor counts in float32 BLAS, closed-wedge reduction in
-    float64, integer halving at the end."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from mini_log_lakehouse_spark.session import spread_cpu
-
-    spark = edges.sparkSession
-    ids, a_mat = _dense_adjacency(edges)
-    bc = spark.sparkContext.broadcast((ids, a_mat))
-
-    def tri_blocks(batches):
-        b_ids, b_a = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            uids = batch.column(0).to_numpy(zero_copy_only=False)
-            bi = np.searchsorted(b_ids, uids)
-            blk = b_a[bi]  # (m, V) 0/1
-            cn = blk @ b_a  # (m, V): |N(x)∩N(y)|, exact ints ≤ V < 2²⁴
-            closed = (cn * blk).astype(np.float64).sum(axis=1)
-            t = closed.astype(np.int64) // 2  # even by double-counting
-            keep = t > 0
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uids[keep], type=pa.int64()),
-                    pa.array(t[keep], type=pa.int64()),
-                ],
-                names=["user_id", "n_triangles"],
-            )
-
-    nodes = spread_cpu(
-        spark.createDataFrame(
-            [(int(x),) for x in ids],
-            T.StructType([T.StructField("user_id", T.LongType())]),
-        ),
-        "user_id",
-    )
-    return nodes.mapInArrow(
-        tri_blocks,
-        T.StructType(
-            [
-                T.StructField("user_id", T.LongType()),
-                T.StructField("n_triangles", T.LongType()),
-            ]
-        ),
     )
 
 
@@ -826,92 +758,39 @@ LP_TOP_N = 100
 LP_JACCARD_SCALE = 10**6
 
 
-#: Dense-graph tier bounds for link_prediction's candidate generation:
-#: the whole adjacency rides as ONE (V × V) float32 matrix (0/1 cells)
-#: broadcast to the GEMM tasks — 4096² × 4 B = 64 MB at the node cap —
-#: and the edge list is pulled to the driver once to build it (Arrow
-#: path, ≤ LP_DENSE_MAX_EDGES rows). Beyond either bound the wedge-join
-#: tier runs (never holds the graph in memory).
-LP_DENSE_MAX_NODES = 4096
-LP_DENSE_MAX_EDGES = 4_000_000
+def _lp_kernel(payload, idx):
+    """(u, v, cn) for non-adjacent pairs u < v with u in ``idx`` and
+    ≥ 1 common neighbor."""
+    import numpy as np
+
+    ids, a_mat = payload
+    blk = a_mat[idx]
+    cn = blk @ a_mat  # common-neighbor counts: exact integers ≤ V < 2²⁴
+    cn[blk != 0] = 0
+    cn[np.arange(len(ids)) <= idx[:, None]] = 0
+    r, c = np.nonzero(cn)
+    return ids[idx[r]], ids[c], cn[r, c].astype(np.int64)
 
 
 def _lp_candidates(edges: DataFrame, und: DataFrame) -> DataFrame:
     """Non-adjacent (u < v) pairs with ≥1 common neighbor and their
     common-neighbor count — two tiers, identical output.
 
-    **Dense tier** (V ≤ LP_DENSE_MAX_NODES, |E| ≤ LP_DENSE_MAX_EDGES,
-    and V² below the wedge mass Σ deg·(deg−1)/2): common-neighbor
-    counts for ALL pairs at once as one blocked 0/1-matrix product —
-    node blocks stream through mapInArrow, each task computes
-    (block × V) @ (V × V) in float32 BLAS (counts ≤ V < 2²⁴, so every
-    float32 value is the exact integer) and emits only the surviving
-    (u < v, non-adjacent, cn > 0) cells. On the sf0.1 near-clique
-    co-occurrence graph the wedge join enumerates Σ deg² ≈ 2.9 B rows
-    through a groupBy to produce 1.1 M candidate pairs; the GEMM does
-    the same arithmetic inside BLAS without materializing a row per
-    wedge (guide §1.2 — fix the algorithm first; same dense-graph
-    rationale as triangle_counts' intersection tier, same
-    driver-held-small-matrix idiom as similarity.knn_join_vectorized).
+    **Dense tier** (the edge pull fits local_tier.LOCAL_MAX_ROWS and
+    _dense_adjacency accepts the graph): common-neighbor counts for all
+    pairs as one blocked 0/1-matrix product in float32 BLAS — every
+    count ≤ V < 2²⁴ is the exact integer — emitting only the
+    (u < v, non-adjacent, cn > 0) cells.
 
-    **Wedge tier** (everything else, and any tie): the node-ordered
-    wedge enumeration — und ⋈ und on the middle vertex, endpoints
-    ordered, counted per pair. Never collects or holds the graph; the
-    100 TB shape (wedge mass on a REAL sparse power-law graph is near
-    linear in |E|, exactly where the dense tier's V² loses)."""
-    n_edges = edges.count()
-    dense = n_edges <= LP_DENSE_MAX_EDGES and _dense_graph_gate(
-        und, LP_DENSE_MAX_NODES
+    **Wedge tier** (everything else): und ⋈ und on the middle vertex,
+    endpoints ordered, counted per pair. Never collects or holds the
+    graph; on a real sparse power-law graph the wedge mass is near
+    linear in |E|, exactly where the dense tier's V² loses."""
+    _, dense = _dense_graph_tier(
+        edges, "link_prediction", _lp_kernel, "u long, v long, cn long"
     )
-    if dense:
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        spark = edges.sparkSession
-        ids, a_mat = _dense_adjacency(edges)
-        bc = spark.sparkContext.broadcast((ids, a_mat))
-
-        def cn_blocks(batches):
-            b_ids, b_a = bc.value
-            cols = np.arange(len(b_ids))
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                uids = batch.column(0).to_numpy(zero_copy_only=False)
-                bi = np.searchsorted(b_ids, uids)
-                blk = b_a[bi]
-                cn = blk @ b_a
-                keep = (cn > 0) & (blk == 0) & (cols[None, :] > bi[:, None])
-                r, c = np.nonzero(keep)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(uids[r], type=pa.int64()),
-                        pa.array(b_ids[c], type=pa.int64()),
-                        pa.array(cn[r, c].astype("int64"), type=pa.int64()),
-                    ],
-                    names=["u", "v", "cn"],
-                )
-
-        from mini_log_lakehouse_spark.session import spread_cpu
-
-        nodes = spread_cpu(
-            spark.createDataFrame(
-                [(int(x),) for x in ids],
-                T.StructType([T.StructField("user_id", T.LongType())]),
-            ),
-            "user_id",
-        )
-        return nodes.mapInArrow(
-            cn_blocks,
-            T.StructType(
-                [
-                    T.StructField("u", T.LongType()),
-                    T.StructField("v", T.LongType()),
-                    T.StructField("cn", T.LongType()),
-                ]
-            ),
-        )
+    if dense is not None:
+        return dense
     m1, m2 = und.alias("m1"), und.alias("m2")
     return (
         m1.join(

@@ -525,9 +525,16 @@ def orders_rolling_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed. Runs over pre-aggregated monthly rows (≤ #priorities ×
     #months through the window sort), the same bounded-grain discipline
     as the other global windows here; the frame key is epoch seconds
-    because Spark's rangeBetween needs a numeric ordering column."""
+    because Spark's rangeBetween needs a numeric ordering column.
+
+    Orders with a NULL date form one NULL-month row per priority whose
+    ``orders_90d`` is its own count: the window runs over dated orders
+    only, so neither engine's NULL-peer RANGE frame semantics can reach
+    the result. Both engines split on ``o_orderdate IS NULL`` at the
+    scan (DuckDB 1.0 folds ``date_trunc(...) IS NULL`` to false)."""
     o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
+    dated = o.filter(F.col("o_orderdate").isNotNull())
+    monthly = dated.groupBy(
         F.col("o_orderpriority").alias("priority"),
         F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
     ).agg(F.count(F.lit(1)).alias("orders"))
@@ -537,15 +544,24 @@ def orders_rolling_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(epoch)
         .rangeBetween(-90 * 86400, 0)
     )
-    return (
-        monthly.select(
-            "priority",
-            "month",
-            "orders",
-            F.sum("orders").over(w).cast("long").alias("orders_90d"),
-        )
-        .orderBy("priority", "month")
+    rolled = monthly.select(
+        "priority",
+        "month",
+        "orders",
+        F.sum("orders").over(w).cast("long").alias("orders_90d"),
     )
+    undated = (
+        o.filter(F.col("o_orderdate").isNull())
+        .groupBy(F.col("o_orderpriority").alias("priority"))
+        .agg(F.count(F.lit(1)).alias("orders"))
+        .select(
+            "priority",
+            F.lit(None).cast("date").alias("month"),
+            "orders",
+            F.col("orders").cast("long").alias("orders_90d"),
+        )
+    )
+    return rolled.unionByName(undated).orderBy("priority", "month")
 
 
 def customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1665,6 +1681,7 @@ ORACLES: dict[str, str] = {
                    CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
                    COUNT(*) AS orders
             FROM orders
+            WHERE o_orderdate IS NOT NULL
             GROUP BY 1, 2
         )
         SELECT priority, month, orders,
@@ -1674,6 +1691,11 @@ ORACLES: dict[str, str] = {
                    RANGE BETWEEN 7776000 PRECEDING AND CURRENT ROW
                ) AS BIGINT) AS orders_90d
         FROM monthly
+        UNION ALL
+        SELECT o_orderpriority, CAST(NULL AS DATE), COUNT(*), CAST(COUNT(*) AS BIGINT)
+        FROM orders
+        WHERE o_orderdate IS NULL
+        GROUP BY 1
         ORDER BY priority, month
     """,
     "customer_balance_quartiles": """

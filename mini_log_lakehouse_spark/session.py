@@ -54,6 +54,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory (MemTotal on Linux) as a JVM heap
+    size: local mode runs every task inside the driver JVM, and the
+    Python workers and the OS need the other half."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "mini-log-lakehouse-spark",
     master: str | None = None,
@@ -71,7 +79,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Managed tables (bucketed warehouse layer, CTAS) land in /tmp by
         # default, never in the repo working tree.

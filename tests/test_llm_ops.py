@@ -6,10 +6,14 @@ gets determinism checks there)."""
 
 from __future__ import annotations
 
+import math
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
-from mini_log_lakehouse_spark.operators import dedup, similarity, textstats
+from mini_log_lakehouse_spark.operators import dedup, local_tier, similarity, textstats
 
 
 @pytest.fixture(scope="module")
@@ -110,40 +114,57 @@ def test_ngram_jaccard_verifies_exactly(docs_with_dups):
     assert 0.5 <= pairs[(0, 2)] < 1.0
 
 
-def test_ngram_jaccard_candidate_budget_guard(spark, docs_with_dups):
-    """Judge r14 task 6: the lossless tier must fail fast, with a message
+def _prefix_mass(texts, n=5, t=0.5):
+    """Σ bucket² of the prefix-token histogram, from its definition: the
+    distinct shingle sets of the distinct texts, each ordered by
+    (document frequency, shingle), prefixes of |S| − ⌈t·|S|⌉ + 1."""
+    sets = [
+        {x[i : i + n] for i in range(max(len(x) - n + 1, 1))} for x in set(texts)
+    ]
+    dfreq = Counter(tok for s in sets for tok in s)
+    hist = Counter()
+    for s in sets:
+        ordered = sorted(s, key=lambda tok: (dfreq[tok], tok))
+        hist.update(ordered[: len(s) - math.ceil(t * len(s)) + 1])
+    return sum(c * c for c in hist.values())
+
+
+@pytest.mark.parametrize("tier", ["dense", "join"])
+def test_ngram_jaccard_candidate_budget_guard(spark, monkeypatch, tier):
+    """The lossless join must fail fast on either tier, with a message
     pointing at the MinHash production tier, when the prefix-token
     candidate mass (Σ bucket² — the exact occurrence-row count of the
     token self-join) exceeds the budget. A saturated profile (many
-    distinct near-dup texts sharing prefix shingles, the r14 measured
-    failure mode in miniature) trips a small budget BEFORE any join
-    runs; normal corpora sail under the production default."""
+    distinct near-dup texts sharing prefix shingles) trips a small
+    budget BEFORE any join or kernel job runs."""
+    if tier == "join":
+        monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
     base = (
         "the quick brown fox jumps over the lazy dog while the cat watches "
         "from the warm windowsill and the rain falls softly outside"
     )
     # 40 DISTINCT texts in one near-dup family: exact-dup collapse cannot
     # help, every rep shares most prefix tokens -> Σc² ~ tokens × 40².
-    saturated = spark.createDataFrame(
-        [(i, f"{base} variant token {i}") for i in range(40)],
-        ["doc_id", "text"],
-    )
+    texts = [f"{base} variant token {i}" for i in range(40)]
+    saturated = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
     with pytest.raises(
         dedup.JaccardCandidateBudgetExceeded,
         match="dedup_minhash_pairs",
     ) as exc:
         dedup.ngram_jaccard_pairs(saturated, candidate_budget=1000)
     assert "candidate_budget" in str(exc.value)  # remediation is named
+    # both tiers measure the same mass: the join tier's Spark aggregate
+    # and the dense tier's numpy histogram
+    mass = re.search(r"generate ([\d,]+) candidate", str(exc.value)).group(1)
+    mass = int(mass.replace(",", ""))
+    assert mass == _prefix_mass(texts)
 
-    # same corpus under the default (production) budget: runs to
-    # completion — the guard only bites in the quadratic regime
-    assert dedup.ngram_jaccard_pairs(saturated).count() > 0
-    # and budget=None restores the fully-lazy unguarded plan
-    assert (
-        dedup.ngram_jaccard_pairs(saturated, candidate_budget=None).count() > 0
-    )
-    # the driver-shaped tiny corpus never trips the default either
-    assert dedup.ngram_jaccard_pairs(docs_with_dups).count() > 0
+    # the guard is eager and bites only PAST the budget: at exactly the
+    # mass (so under the larger production default too) and with
+    # budget=None (the unguarded plan) the call returns its lazy plan.
+    # Running the plans is test_ngram_jaccard_tiers_identical's job.
+    dedup.ngram_jaccard_pairs(saturated, candidate_budget=mass)
+    dedup.ngram_jaccard_pairs(saturated, candidate_budget=None)
 
 
 def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):

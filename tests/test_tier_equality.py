@@ -10,14 +10,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mini_log_lakehouse_spark.operators import dedup, funnels
+from mini_log_lakehouse_spark.operators import dedup, funnels, local_tier
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.fixture()
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
 def dense_graph(spark):
     # Near-clique on 14 nodes (wedge mass ≫ V², so _lp_candidates'
     # density estimate picks the dense tier) with a few edges removed so
@@ -30,7 +34,7 @@ def dense_graph(spark):
         for v in nodes[i + 1 :]
         if (u, v) not in missing
     ]
-    return spark.createDataFrame(edges, "u long, v long")
+    return spark.createDataFrame(edges, "u long, v long").localCheckpoint()
 
 
 def test_triangle_tiers_identical(spark, dense_graph, monkeypatch):
@@ -38,9 +42,9 @@ def test_triangle_tiers_identical(spark, dense_graph, monkeypatch):
     # guard sanity check in the link-prediction test below proves
     # V² < wedge mass on the same graph)
     dense = _rows(funnels.triangle_counts(dense_graph))
-    monkeypatch.setattr(funnels, "TRIANGLE_DENSE_MAX_EDGES", 0)
+    monkeypatch.setattr(local_tier, "DENSE_MAX_NODES", 0)
     bcast = _rows(funnels.triangle_counts(dense_graph))
-    monkeypatch.setattr(funnels, "TRIANGLE_BCAST_MAX_EDGES", 0)
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
     wedge = _rows(funnels.triangle_counts(dense_graph))
     assert dense == bcast == wedge
     assert len(dense) > 0
@@ -48,7 +52,7 @@ def test_triangle_tiers_identical(spark, dense_graph, monkeypatch):
 
 def test_link_prediction_tiers_identical(spark, dense_graph, monkeypatch):
     dense = _rows(funnels.link_prediction(dense_graph))
-    monkeypatch.setattr(funnels, "LP_DENSE_MAX_EDGES", 0)
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
     wedge = _rows(funnels.link_prediction(dense_graph))
     assert dense == wedge
     assert len(dense) > 0
@@ -72,9 +76,17 @@ def test_blocked_cosine_tiers_identical(spark, monkeypatch):
     e = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    gemm = _rows(dedup.embedding_cosine_pairs(e, threshold=-1.0))
-    monkeypatch.setattr(dedup, "COSINE_GEMM_MAX_BLOCK", 0)
-    join = _rows(dedup.embedding_cosine_pairs(e, threshold=-1.0))
+    # largest block: label 0, 12 rows × 8 dims = 96 cells
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_CELLS", 96)
+    vec = dedup.embedding_cosine_pairs(e, threshold=-1.0)
+    assert "FlatMapGroupsInArrow" in _plan(vec)
+    gemm = _rows(vec)
+    # 12 rows are under a 95-cell cap read as rows, but 96 cells are over
+    # it: the block must not ride into one task
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_CELLS", 95)
+    pairs = dedup.embedding_cosine_pairs(e, threshold=-1.0)
+    assert "FlatMapGroupsInArrow" not in _plan(pairs)
+    join = _rows(pairs)
     assert gemm == join  # includes cos_sim values, bit-for-bit after round
     assert len(gemm) > 0
 
@@ -85,7 +97,7 @@ def test_connected_components_tiers_identical(spark, monkeypatch):
         "src long, dst long",
     )
     local = _rows(dedup.connected_components(edges))
-    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", -1)
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
     dist = _rows(dedup.connected_components(edges))
     assert local == dist
     assert len(local) == 9
@@ -96,12 +108,43 @@ def test_connected_components_distributed_tier_raises_on_deep_graph(
 ):
     # the deep-graph guard must hold on BOTH tiers (the local tier's
     # raise is covered by test_llm_ops.py's existing deep-graph test)
-    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", -1)
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(edges, max_iter=3)
+
+
+def test_ngram_jaccard_tiers_identical(spark, monkeypatch):
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    texts = [
+        base,
+        base,  # exact-duplicate class of three
+        base,
+        base.replace("river", "rivers"),
+        base.replace("quick", "slow"),
+        base.replace("lazy", "sleepy"),
+        "an unrelated line about parquet column pruning",
+        "an unrelated line about parquet column pruning!",
+        "abc",  # shorter than shingle_n: one shingle, its own class
+        "abc",
+        "",
+        None,  # NULL texts never pair
+        None,
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    # budget None: the guard has its own test; this one pins the rows
+    dense_df = dedup.ngram_jaccard_pairs(docs, candidate_budget=None)
+    assert "MapInArrow" in _plan(dense_df)
+    dense = _rows(dense_df)
+    monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
+    join_df = dedup.ngram_jaccard_pairs(docs, candidate_budget=None)
+    assert "MapInArrow" not in _plan(join_df)
+    assert dense == _rows(join_df)
+    ids = {(a, b) for a, b, _ in dense}
+    assert {(0, 1), (0, 2), (1, 2), (0, 3), (8, 9)} <= ids
+    assert not any(11 in p or 12 in p for p in ids)
 
 
 def test_sssp_early_fixpoint_matches_full_unroll(spark):

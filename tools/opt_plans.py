@@ -20,7 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     from mini_log_lakehouse_spark.entry_registry import QUERIES

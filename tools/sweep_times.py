@@ -23,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--iters", type=int, default=3)
