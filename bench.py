@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -439,6 +440,33 @@ def _bench_leg(spark, leg_dir: str, names, iters: int, warmup: int):
     return results, cold, baseline, out_rows, collect_once
 
 
+def scaled_dir_for(factor: int) -> str:
+    return os.environ.get(
+        f"BENCH_SCALED_DIR_{factor}", f"/tmp/mini_log_lakehouse_sfx{factor}"
+    )
+
+
+def _tree_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(path) for f in files
+    )
+
+
+def space_shortfall(sf_dir: str, scaled_dir: str, factor: int) -> str | None:
+    """``"<bytes needed>/<bytes free>"`` when the filesystem holding
+    ``scaled_dir`` cannot take a ``factor``× replica of ``sf_dir``, else
+    None. An already materialized replica (its marker is present) needs
+    no space."""
+    if os.path.exists(os.path.join(scaled_dir, f"_SCALED_x{factor}")):
+        return None
+    needed = factor * _tree_bytes(sf_dir)
+    probe = os.path.abspath(scaled_dir)
+    while not os.path.exists(probe):
+        probe = os.path.dirname(probe)
+    free = shutil.disk_usage(probe).free
+    return None if free >= needed else f"{needed}/{free}"
+
+
 def scaled_leg(
     spark,
     sf_dir: str,
@@ -452,9 +480,7 @@ def scaled_leg(
     from mini_log_lakehouse_spark.session import release_corpus_caches
     from mini_log_lakehouse_spark.sources.scaleup import materialize_scaled
 
-    scaled_dir = os.environ.get(
-        f"BENCH_SCALED_DIR_{factor}", f"/tmp/mini_log_lakehouse_sfx{factor}"
-    )
+    scaled_dir = scaled_dir_for(factor)
     materialize_scaled(spark, sf_dir, scaled_dir, factor)
     # Each leg is a different corpus: drop the previous leg's pinned
     # tables/signatures before warming this one (accumulated pins
@@ -594,7 +620,10 @@ def compact_line(payload: dict, budget: int = _LINE_BUDGET) -> str:
             if leg:
                 minimal[leg_name] = {
                     k: leg[k]
-                    for k in ("factor", "sf", "value", "ratio_total", "iso_ratio_total", "iso_ratios")
+                    for k in (
+                        "factor", "sf", "value", "ratio_total", "iso_ratio_total",
+                        "iso_ratios", "skipped",
+                    )
                     if k in leg
                 }
         line = json.dumps(minimal, separators=(",", ":"))
@@ -693,19 +722,26 @@ def main() -> None:
             spark, sf_dir, sf, SCALE_FACTOR_100, iso=True, incremental=True
         )
     if SCALE_FACTOR_300 > 1:
-        # heavy rows only; isolation auto-attaches to any >2x row, which
-        # is exactly the "retire top_customers_by_revenue or expose a
-        # real lever" experiment VERDICT r7 asked for
-        payload["scaled_300"] = scaled_leg(
-            spark,
-            sf_dir,
-            sf,
-            SCALE_FACTOR_300,
-            names=HEADLINE_HEAVY,
-            iters=ITERS_300,
-            iso=True,
-            incremental=True,
-        )
+        scaled_dir = scaled_dir_for(SCALE_FACTOR_300)
+        shortfall = space_shortfall(sf_dir, scaled_dir, SCALE_FACTOR_300)
+        if shortfall:
+            # the host cannot hold the replica: say so instead of failing
+            # mid-write and losing every leg already measured
+            payload["scaled_300"] = {"skipped": shortfall}
+        else:
+            # heavy rows only; isolation auto-attaches to any >2x row, which
+            # is exactly the "retire top_customers_by_revenue or expose a
+            # real lever" experiment VERDICT r7 asked for
+            payload["scaled_300"] = scaled_leg(
+                spark,
+                sf_dir,
+                sf,
+                SCALE_FACTOR_300,
+                names=HEADLINE_HEAVY,
+                iters=ITERS_300,
+                iso=True,
+                incremental=True,
+            )
 
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"

@@ -24,21 +24,34 @@ exact switch-on (delta-spark package + the two session confs:
 importable every method here routes to DeltaTable APIs and the snapshot
 fallback never engages.
 
-Scale notes: MERGE's fallback plan is the standard copy-on-write shape —
-``target LEFT ANTI JOIN source ∪ source`` — which Delta itself executes
-under the hood (rewrite files containing matches). At 100 TB you bound
-the rewrite by partitioning the table on the merge key's coarse prefix
-(date) so only touched partitions rewrite; ``merge`` takes an optional
-``prune`` predicate for exactly that.
+Scale notes: MERGE's fallback plan is the copy-on-write shape Delta
+executes under the hood — matched target rows are replaced, unmatched
+ones kept, source rows inserted — but the fallback republishes the whole
+table on every MERGE: snapshots are not partitioned, so there is no
+smaller unit to rewrite. ``merge``'s ``prune`` predicate only keeps the
+target rows outside it out of the key shuffle; they are still copied
+into the new version. Bounding the rewrite itself needs a partitioned
+snapshot (ROADMAP "Carried").
+
+Each version's commit-log entry (``v{N}._meta.json``) stores the exact
+schema it was written with, so ``read`` resolves a snapshot without a
+footer-inference job.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import operator
 import os
+import re
 import shutil
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -56,6 +69,41 @@ def delta_available() -> bool:
         return True
     except ImportError:
         return False
+
+
+_MERGE_SRC, _MERGE_N = "_merge_src", "_merge_n_src"
+_DUP_KEY_OPEN, _DUP_KEY_CLOSE = "[merge duplicate source key ", "]"
+_DUP_KEY_RE = re.compile(re.escape(_DUP_KEY_OPEN) + r"(\{.*?\})" + re.escape(_DUP_KEY_CLOSE))
+
+
+def _upsert_rows(
+    candidate: DataFrame | None, source: DataFrame, keys: list[str], merge_schema: bool
+) -> DataFrame:
+    """MERGE rows in one pass over ``candidate ∪ source`` partitioned on
+    ``keys``: every source row is kept, a candidate row only when no
+    source row shares its key, so the source plan is evaluated once.
+    The per-key source count is also the uniqueness check: a key with
+    more than one source row fails the job through ``raise_error``,
+    carrying the key as JSON. A NULL key never matches (equi-join
+    semantics), so a candidate row with one is always kept; duplicate
+    source rows are found on NULL keys too (GROUP BY semantics)."""
+    rows = source.withColumn(_MERGE_SRC, F.lit(True))
+    if candidate is not None:
+        rows = candidate.withColumn(_MERGE_SRC, F.lit(False)).unionByName(
+            rows, allowMissingColumns=merge_schema
+        )
+    n_src = F.sum(F.col(_MERGE_SRC).cast("int")).over(Window.partitionBy(*keys))
+    duplicate = F.raise_error(
+        F.concat(
+            F.lit(_DUP_KEY_OPEN), F.to_json(F.struct(*keys)), F.lit(_DUP_KEY_CLOSE)
+        )
+    )
+    null_key = functools.reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    keep = F.when(
+        F.col(_MERGE_SRC),
+        F.when(F.col(_MERGE_N) > 1, duplicate).otherwise(F.lit(True)),
+    ).otherwise(null_key | (F.col(_MERGE_N) == 0))
+    return rows.withColumn(_MERGE_N, n_src).filter(keep).drop(_MERGE_SRC, _MERGE_N)
 
 
 class LakehouseTable:
@@ -96,10 +144,15 @@ class LakehouseTable:
         cannot both create ``vN._claim``, so the loser fails with
         ConcurrentWriteError instead of silently clobbering the winner's
         directory — the same optimistic-concurrency contract as Delta's
-        log append (conflict = recompute and retry). A claim whose
-        version never published (writer crashed mid-write) permanently
-        burns that number; delete the orphaned ``._claim`` file to
-        recover, exactly like clearing a stale lock."""
+        log append (conflict = recompute and retry). A write that raises
+        removes its partial ``v{N}`` directory and releases the claim, so
+        the next writer publishes N. Only a writer process that dies
+        mid-write burns its number; delete the orphaned ``._claim`` file
+        to recover, exactly like clearing a stale lock.
+
+        The commit-log entry stores the snapshot's exact schema
+        (``spark_schema``, ``df.schema.json()``), which ``read`` hands to
+        the parquet reader instead of inferring it from footers."""
         v = self.latest_version() + 1
         os.makedirs(self.path, exist_ok=True)
         claim = os.path.join(self.path, f"v{v}._claim")
@@ -110,25 +163,44 @@ class LakehouseTable:
                 f"{self.name}: version {v} already claimed by another writer; "
                 "re-read the latest snapshot and retry"
             ) from None
-        df.write.mode("overwrite").parquet(self._version_dir(v))
-        # commit-log entry (DESCRIBE HISTORY analog): written before the
-        # pointer flip so a published version always has its metadata.
-        import json
-        import time
-
-        meta = {
-            "version": v,
-            "operation": operation,
-            "timestamp": time.time(),
-            "schema": [f"{name}:{dtype}" for name, dtype in df.dtypes],
-        }
-        with open(os.path.join(self.path, f"v{v}._meta.json"), "w") as fh:
-            json.dump(meta, fh)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
+        meta_path = self._meta_path(v)
+        try:
+            df.write.mode("overwrite").parquet(self._version_dir(v))
+            # commit-log entry (DESCRIBE HISTORY analog): written before
+            # the pointer flip so a published version always has it.
+            meta = {
+                "version": v,
+                "operation": operation,
+                "timestamp": time.time(),
+                "schema": [f"{name}:{dtype}" for name, dtype in df.dtypes],
+                "spark_schema": df.schema.json(),
+            }
+            with open(meta_path, "w") as fh:
+                json.dump(meta, fh)
+            tmp = self._pointer() + ".tmp"
+            with open(tmp, "w") as fh:
+                fh.write(str(v))
+        except BaseException:
+            shutil.rmtree(self._version_dir(v), ignore_errors=True)
+            for path in (meta_path, claim):
+                if os.path.exists(path):
+                    os.remove(path)
+            raise
         os.replace(tmp, self._pointer())
         return v
+
+    def _meta_path(self, v: int) -> str:
+        return os.path.join(self.path, f"v{v}._meta.json")
+
+    def _stored_schema(self, v: int) -> T.StructType | None:
+        """Version ``v``'s schema from its commit-log entry; None for a
+        version written without one (its reader infers from footers)."""
+        try:
+            with open(self._meta_path(v)) as fh:
+                stored = json.load(fh).get("spark_schema")
+        except FileNotFoundError:
+            return None
+        return T.StructType.fromJson(json.loads(stored)) if stored else None
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY analog: one dict per live version, newest
@@ -136,11 +208,9 @@ class LakehouseTable:
         removed by vacuum() drop out (their snapshot is gone; history
         follows, which is also Delta's behavior once the log is
         VACUUMed past)."""
-        import json
-
         out = []
         for v in range(self.latest_version(), -1, -1):
-            meta_path = os.path.join(self.path, f"v{v}._meta.json")
+            meta_path = self._meta_path(v)
             if not os.path.isdir(self._version_dir(v)):
                 continue
             if os.path.exists(meta_path):
@@ -160,7 +230,9 @@ class LakehouseTable:
         return self._publish(df, operation="WRITE")
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read; ``version`` is time travel (Delta versionAsOf)."""
+        """Snapshot read; ``version`` is time travel (Delta versionAsOf).
+        Runs no Spark job when the version's commit-log entry carries its
+        schema; a version from an older writer falls back to inference."""
         if delta_available():  # pragma: no cover
             r = self.spark.read.format("delta")
             if version is not None:
@@ -169,7 +241,11 @@ class LakehouseTable:
         v = self.latest_version() if version is None else version
         if v < 0 or not os.path.isdir(self._version_dir(v)):
             raise FileNotFoundError(f"{self.name}: no version {version!r}")
-        return self.spark.read.parquet(self._version_dir(v))
+        reader = self.spark.read
+        schema = self._stored_schema(v)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._version_dir(v))
 
     def _evolve_schemas(
         self, target: DataFrame, source: DataFrame, merge_schema: bool
@@ -216,10 +292,10 @@ class LakehouseTable:
         WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *.
 
         ``prune``: optional predicate selecting the target region that can
-        contain matches (e.g. ``col("date").isin(touched_dates)``); rows
-        outside it are kept verbatim without joining — the fallback's
-        analog of Delta's file-level pruning, and the knob that bounds the
-        rewrite at 100 TB.
+        contain matches (e.g. ``col("date").isin(touched_dates)``). Rows
+        outside it are copied into the new version verbatim, without
+        joining; only the rows inside it are shuffled on ``keys``. The
+        whole table is still republished (see the module notes).
 
         ``merge_schema``: allow the source to ADD columns (schema
         evolution; see _evolve_schemas). Existing rows get nulls in the
@@ -234,8 +310,10 @@ class LakehouseTable:
 
         Source rows must be unique on ``keys`` — Delta MERGE raises
         "multiple source rows matched" in that case, and silently keeping
-        both rows (what the naive anti-join union would do) corrupts the
-        key invariant of the table; asserted here before the rewrite."""
+        both rows corrupts the key invariant of the table. The check
+        rides the published plan (see ``_upsert_rows``), so it costs no
+        job of its own; a violation raises ValueError and the version is
+        not published."""
         if delta_available():  # pragma: no cover - no delta in container
             from delta.tables import DeltaTable
 
@@ -249,21 +327,8 @@ class LakehouseTable:
                 .execute()
             )
             return -1
-        dup = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"{self.name}: MERGE source has multiple rows for key "
-                f"{ {k: dup[0][k] for k in keys} } — deduplicate the source "
-                "(Delta MERGE rejects this as 'multiple source rows matched')"
-            )
         if not self.exists():
-            return self._publish(source, operation="MERGE")
+            return self._publish_merge(_upsert_rows(None, source, keys, merge_schema), keys)
         target = self.read()
         self._evolve_schemas(target, source, merge_schema)
         if prune is not None:
@@ -285,11 +350,26 @@ class LakehouseTable:
             source = source.join(
                 candidate.select(*keys, *target_only), list(keys), "left"
             )
-        kept = candidate.join(source.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(source, allowMissingColumns=merge_schema)
+        merged = _upsert_rows(candidate, source, keys, merge_schema)
         if untouched is not None:
             merged = untouched.unionByName(merged, allowMissingColumns=merge_schema)
-        return self._publish(merged, operation="MERGE")
+        return self._publish_merge(merged, keys)
+
+    def _publish_merge(self, merged: DataFrame, keys: list[str]) -> int:
+        """Publish a MERGE result, turning the duplicate-source-key
+        failure raised inside the write into the ValueError callers see."""
+        try:
+            return self._publish(merged, operation="MERGE")
+        except PySparkException as exc:
+            found = _DUP_KEY_RE.search(str(exc))
+            if found is None:
+                raise
+            key = json.loads(found.group(1))
+            raise ValueError(
+                f"{self.name}: MERGE source has multiple rows for key "
+                f"{ {k: key.get(k) for k in keys} } — deduplicate the source "
+                "(Delta MERGE rejects this as 'multiple source rows matched')"
+            ) from None
 
     def change_feed(
         self,

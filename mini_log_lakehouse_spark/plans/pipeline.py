@@ -9,6 +9,8 @@ step a lazy DataFrame; only materialization points trigger jobs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from mini_log_lakehouse_spark.sources.logs import parse_logs, read_bronze, write_bronze
@@ -86,6 +88,32 @@ def init_lake(spark: SparkSession, bronze_root: str, lake_root: str):
     return lake
 
 
+def batch_dates(bronze_root: str, batch_id: str) -> list[str | None]:
+    """The ``date`` partitions under ``ingest_batch=<batch_id>`` in bronze,
+    read from the directory names the write produced: Hive-escaped
+    values are unescaped and ``__HIVE_DEFAULT_PARTITION__`` (a NULL
+    date) maps to None, as a ``distinct().collect()`` of the column
+    would give — without running a job."""
+    from urllib.parse import unquote
+
+    def value(name: str) -> str | None:
+        raw = name.split("=", 1)[1]
+        return None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+
+    def partitions(root: str, column: str) -> list[str]:
+        try:
+            names = os.listdir(root)
+        except FileNotFoundError:
+            return []
+        return [n for n in names if n.startswith(column + "=")]
+
+    for name in partitions(bronze_root, "ingest_batch"):
+        if value(name) == str(batch_id):
+            batch_dir = os.path.join(bronze_root, name)
+            return [value(d) for d in sorted(partitions(batch_dir, "date"))]
+    return []
+
+
 def merge_batch_into_lake(
     spark: SparkSession,
     batch: DataFrame,
@@ -99,9 +127,12 @@ def merge_batch_into_lake(
     the dates the batch touches — the bronze re-read filters on the
     string ``date`` partition key, so the scan is partition-pruned to
     those days regardless of table size — and MERGE the recomputed grains
-    into the managed fct on (date, hour, endpoint). The ``prune``
-    predicate bounds the copy-on-write rewrite to touched dates, exactly
-    how a partitioned Delta MERGE bounds rewritten files.
+    into the managed fct on (date, hour, endpoint). The touched dates
+    come from the ``date=`` directories the bronze write produced
+    (``batch_dates``), so the batch is parsed once and no job runs to
+    find them; a batch with no parsed rows publishes nothing. The
+    ``prune`` predicate keeps untouched dates out of the MERGE's key
+    shuffle (the snapshot itself is republished whole).
 
     Recomputing whole touched days (not deltas) keeps non-mergeable
     measures exact — p95 cannot be combined incrementally, counts could.
@@ -113,9 +144,8 @@ def merge_batch_into_lake(
     write landed but whose pointer flip didn't will re-run) overwrites
     its own ``ingest_batch`` partition instead of appending a duplicate,
     so the recomputed days cannot double-count. Callers that can replay
-    must pass a stable id; ``None`` derives one from the batch's content
-    days plus a process-unique suffix — fine for run-once orchestration,
-    NOT for replayable callers.
+    must pass a stable id; ``None`` derives a process-unique one — fine
+    for run-once orchestration, NOT for replayable callers.
     """
     import uuid
 
@@ -123,16 +153,16 @@ def merge_batch_into_lake(
 
     from mini_log_lakehouse_spark.plans.lakehouse import LakehouseTable
 
-    touched = [r["date"] for r in batch.select("date").distinct().collect()]
-    if not touched:
-        return LakehouseTable(spark, lake_root, "fct_requests_hourly")
     if batch_id is None:
         batch_id = f"adhoc-{uuid.uuid4().hex[:12]}"
     write_bronze(batch, bronze_root, mode="append", batch_id=batch_id)
+    lake = LakehouseTable(spark, lake_root, "fct_requests_hourly")
+    touched = batch_dates(bronze_root, batch_id)
+    if not touched:
+        return lake
     stg = build_stg_logs(
         read_bronze(spark, bronze_root).filter(F.col("date").isin(touched))
     )
-    lake = LakehouseTable(spark, lake_root, "fct_requests_hourly")
     lake.merge(
         build_fct_requests_hourly(stg),
         keys=["date", "hour", "endpoint"],

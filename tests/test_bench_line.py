@@ -110,3 +110,29 @@ def test_tiny_payload_keeps_full_detail():
     assert len(got["queries"]) == 3
     assert "ratios" in got["scaled_300"]  # last leg keeps per-query ratios
     assert "queries" in got["scaled"]
+
+
+def test_skipped_leg_rides_the_line():
+    """A leg the host could not hold is ``{"skipped": "<needed>/<free>"}``;
+    the line keeps that marker, in the full and in the shed form."""
+    for n_queries, name_len in ((3, 4), (400, 120)):
+        payload = _payload(n_queries, name_len)
+        payload["scaled_300"] = {"skipped": "1500000000/1000"}
+        got = json.loads(bench.compact_line(payload))
+        assert got["scaled_300"] == {"skipped": "1500000000/1000"}
+        assert got["scaled"]["ratio_total"] == 1.23
+
+
+def test_space_shortfall(tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"x" * 1000)
+    scaled = tmp_path / "not" / "yet" / "made"
+    assert bench.space_shortfall(str(sf), str(scaled), 2) is None
+    short = bench.space_shortfall(str(sf), str(scaled), 10**15)
+    needed, free = map(int, short.split("/"))
+    assert needed == 1000 * 10**15 and free < needed
+    # a replica already materialized needs no space
+    scaled.mkdir(parents=True)
+    (scaled / "_SCALED_x1000000000000000").write_text("ok\n")
+    assert bench.space_shortfall(str(sf), str(scaled), 10**15) is None

@@ -13,7 +13,13 @@ from pyspark.sql import functions as F
 from mini_log_lakehouse_spark.plans.lakehouse import LakehouseTable, delta_available
 from mini_log_lakehouse_spark.plans.models import build_fct_requests_hourly, build_stg_logs
 from mini_log_lakehouse_spark.plans.pipeline import incremental_update, init_lake
-from mini_log_lakehouse_spark.sources.logs import parse_logs, read_bronze, write_bronze
+from mini_log_lakehouse_spark.sources.logs import (
+    BRONZE_SCHEMA,
+    parse_logs,
+    read_bronze,
+    write_bronze,
+)
+from tests.job_count import count_jobs
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "nginx_access.log")
 
@@ -406,3 +412,184 @@ def test_change_feed_maintains_downstream_aggregate(spark, tmp_path):
         .collect()
     }
     assert state == direct, (state, direct)
+
+
+# --- snapshot reads from the commit log -----------------------------------
+
+
+def _inferred_schema(spark, lake, v):
+    return spark.read.parquet(lake._version_dir(v)).schema
+
+
+def test_read_runs_no_spark_job(spark, lake_env):
+    """Resolving a snapshot takes its schema from the commit log: no
+    footer-inference job, for the latest version or a time-travel one."""
+    bronze, lake_root, batch2 = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    incremental_update(spark, batch2, bronze, lake_root)
+    for version in (None, 0, 1):
+        df, jobs = count_jobs(spark, lambda: lake.read(version))
+        assert jobs == 0, version
+        v = lake.latest_version() if version is None else version
+        assert df.schema == _inferred_schema(spark, lake, v)
+
+
+def test_time_travel_returns_each_versions_stored_schema(spark, tmp_path):
+    t = LakehouseTable(spark, str(tmp_path), "evolving")
+    t.write(spark.createDataFrame([(1, "a")], "k int, val string"))
+    t.merge(
+        spark.createDataFrame([(2, "b", 2.5)], "k int, val string, extra double"),
+        keys=["k"],
+        merge_schema=True,
+    )
+    for v, columns in ((0, ["k", "val"]), (1, ["k", "val", "extra"])):
+        df, jobs = count_jobs(spark, lambda: t.read(v))
+        assert jobs == 0
+        assert df.columns == columns
+        assert df.schema == _inferred_schema(spark, t, v)
+    assert sorted(tuple(r) for r in t.read(1).collect()) == [(1, "a", None), (2, "b", 2.5)]
+
+
+def test_read_version_without_stored_schema(spark, tmp_path):
+    """Versions from an older writer (no ``spark_schema`` in the commit
+    log, or no commit-log entry at all) still read, by inference."""
+    import json
+
+    t = LakehouseTable(spark, str(tmp_path), "old")
+    t.write(spark.createDataFrame([(1, "a")], "k bigint, val string"))
+    t.write(spark.createDataFrame([(2, "b")], "k bigint, val string"))
+    with open(t._meta_path(0)) as fh:
+        meta = json.load(fh)
+    del meta["spark_schema"]
+    with open(t._meta_path(0), "w") as fh:
+        json.dump(meta, fh)
+    os.remove(t._meta_path(1))
+    assert [tuple(r) for r in t.read(0).collect()] == [(1, "a")]
+    assert [tuple(r) for r in t.read().collect()] == [(2, "b")]
+    assert t.read().schema == _inferred_schema(spark, t, 1)
+
+
+def test_rejected_merge_leaves_no_trace(spark, lake_env):
+    """A duplicate-key MERGE fails inside its write: the version number
+    is released (no claim, no partial directory, no commit-log entry)
+    and the next MERGE publishes it."""
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    dup = lake.read().limit(1).unionAll(lake.read().limit(1))
+    with pytest.raises(ValueError, match="multiple source rows"):
+        lake.merge(dup, keys=["date", "hour", "endpoint"])
+    assert lake.latest_version() == 0
+    for leftover in ("v1", "v1._claim", "v1._meta.json"):
+        assert not os.path.exists(os.path.join(lake.path, leftover)), leftover
+    assert lake.merge(lake.read().limit(1), keys=["date", "hour", "endpoint"]) == 1
+
+
+def test_merge_duplicate_check_on_first_publish(spark, tmp_path):
+    """The uniqueness check also guards a MERGE that creates the table,
+    and finds duplicates on NULL keys (GROUP BY semantics)."""
+    t = LakehouseTable(spark, str(tmp_path), "fresh")
+    dup = spark.createDataFrame([(None, "a"), (None, "b"), (1, "c")], "k int, val string")
+    with pytest.raises(ValueError, match=r"multiple rows for key \{'k': None\}"):
+        t.merge(dup, keys=["k"])
+    assert not t.exists() and not os.path.exists(t._version_dir(0))
+
+
+def test_merge_keeps_null_key_target_rows(spark, tmp_path):
+    """An equi-join never matches a NULL key: the target's NULL-key row
+    survives a MERGE whose source also carries a NULL key."""
+    t = LakehouseTable(spark, str(tmp_path), "nulls")
+    t.write(spark.createDataFrame([(None, "old"), (1, "a"), (2, "b")], "k int, val string"))
+    t.merge(spark.createDataFrame([(None, "new"), (2, "b2"), (3, "c")], "k int, val string"), keys=["k"])
+    got = sorted((str(r["k"]), r["val"]) for r in t.read().collect())
+    assert got == [("1", "a"), ("2", "b2"), ("3", "c"), ("None", "new"), ("None", "old")]
+
+
+# --- merge_batch_into_lake --------------------------------------------------
+
+#: One batch touching two existing days.
+BATCH_TWO_DAYS = """\
+127.0.0.1 - - [10/Nov/2025:11:05:00 +0530] "GET /health HTTP/1.1" 500 10 "-" "curl/8.1.2"
+127.0.0.1 - - [11/Nov/2025:12:30:00 +0530] "GET /health HTTP/1.1" 200 20 "-" "curl/8.1.2"
+"""
+
+
+def test_merge_batch_spanning_two_days_equals_full_recompute(spark, lake_env, tmp_path):
+    from mini_log_lakehouse_spark.plans.pipeline import merge_batch_into_lake
+
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    raw = tmp_path / "two_days.log"
+    raw.write_text(BATCH_TWO_DAYS)
+    merge_batch_into_lake(spark, parse_logs(spark, str(raw)), bronze, lake_root, batch_id="two")
+    assert lake.latest_version() == 1
+    full = build_fct_requests_hourly(build_stg_logs(read_bronze(spark, bronze)))
+    assert _rows(lake.read()) == _rows(full)
+    merged = {
+        (str(r["date"]), r["hour"], r["endpoint"]): (r["requests"], r["errors"])
+        for r in lake.read().collect()
+    }
+    # each day's grain gained the batch's one line on top of the fixture's
+    assert merged[("2025-11-10", "11", "/health")] == (2, 1)
+    assert merged[("2025-11-11", "12", "/health")] == (2, 1)
+
+
+def test_merge_batch_without_parsed_rows_publishes_nothing(spark, lake_env, tmp_path):
+    from mini_log_lakehouse_spark.plans.pipeline import merge_batch_into_lake
+
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    raw = tmp_path / "garbage.log"
+    raw.write_text("not a log line\n\n")
+    merge_batch_into_lake(spark, parse_logs(spark, str(raw)), bronze, lake_root, batch_id="g")
+    assert lake.latest_version() == 0
+
+
+def test_batch_dates_unescapes_partition_names(tmp_path):
+    from mini_log_lakehouse_spark.plans.pipeline import batch_dates
+
+    batch = tmp_path / "ingest_batch=a%3Ab%2Fc"
+    for d in ("date=2025-11-10", "date=__HIVE_DEFAULT_PARTITION__", "date=x%25y"):
+        (batch / d).mkdir(parents=True)
+    (tmp_path / "ingest_batch=other" / "date=2025-01-01").mkdir(parents=True)
+    assert batch_dates(str(tmp_path), "a:b/c") == ["2025-11-10", None, "x%y"]
+    assert batch_dates(str(tmp_path), "missing") == []
+    assert batch_dates(str(tmp_path / "no_bronze"), "a:b/c") == []
+
+
+def test_batch_dates_match_a_collect_of_the_written_batch(spark, tmp_path):
+    """The directory names Spark writes round-trip to the values a
+    ``distinct().collect()`` of the batch gives, NULL included."""
+    from mini_log_lakehouse_spark.plans.pipeline import batch_dates
+
+    rows = [("2025-11-10",), (None,), ("a b:c%d",)]
+    batch = spark.createDataFrame(rows, "date string").select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in BRONZE_SCHEMA.fields[:-1]],
+        "date",
+    )
+    bronze = str(tmp_path / "bronze")
+    write_bronze(batch, bronze, mode="append", batch_id="odd id/1")
+    want = sorted(
+        (r["date"] for r in batch.select("date").distinct().collect()),
+        key=lambda d: (d is not None, d),
+    )
+    got = sorted(batch_dates(bronze, "odd id/1"), key=lambda d: (d is not None, d))
+    assert got == want
+
+
+# --- job budgets --------------------------------------------------------------
+
+
+def test_merge_batch_job_budget(spark, lake_env):
+    """A MERGE batch is the bronze write plus the published plan's jobs:
+    no schema probe, no touched-dates collect, no separate duplicate-key
+    check."""
+    from mini_log_lakehouse_spark.plans.pipeline import merge_batch_into_lake
+
+    bronze, lake_root, batch2 = lake_env
+    init_lake(spark, bronze, lake_root)
+    batch = parse_logs(spark, batch2)
+    lake, jobs = count_jobs(
+        spark, lambda: merge_batch_into_lake(spark, batch, bronze, lake_root, batch_id="b2")
+    )
+    assert lake.latest_version() == 1
+    assert jobs <= 5, jobs
