@@ -17,6 +17,8 @@ Spark-native replacement:
   mergeable so they stream; the exact p95 is NOT (it needs the full
   group) — at scale the streaming fact would carry a t-digest sketch;
   here the streaming fact publishes the mergeable measures only.
+- ``drain``: the one run-to-completion memory-sink drain behind every
+  streaming registry entry.
 
 State sizing at 100 TB: the window state is (days × hours × types) rows
 per watermark horizon — bounded and tiny. The watermark (1 hour) caps
@@ -27,33 +29,24 @@ lakehouse's lateness SLA.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mini_log_lakehouse_spark.session import tune
+from mini_log_lakehouse_spark.session import default_parallelism, tune
 from mini_log_lakehouse_spark.sources.logs import parse_lines
 
-#: Target SOURCE bytes per streaming state partition (env-overridable).
-#: Every shuffle partition of a stateful streaming operator owns its own
-#: state store instance — a stream-stream join keeps FOUR per partition
-#: (two sides x keyToNumValues/keyWithIndexToValue) — and every
-#: microbatch pays a per-store open/commit/delta-file write even when
-#: the store holds three rows. The state-partition count is therefore a
-#: SCALE knob, not a constant (guide §2: derive partitioning from input
-#: size, never tune it to either local mode or the cluster): size it to
-#: the replayed source, clamped to the session's parallelism. Measured
-#: at sf0.1 (2 MB events source, 32 shuffle partitions → 1):
-#: streaming_error_followups 21.0 s → see OPTIMIZATION_r15.md; results
-#: are partitioning-independent (same rows, oracle-gated). On a real
-#: 100 TB feed bytes/target saturates the clamp and production instead
-#: raises SPARK_GRAFT_CPUS (or this target) to keep per-partition state
-#: in the store's comfort zone — the local default only DOWN-sizes.
-_STREAM_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_TARGET_BYTES", str(8 << 20))
-)
+#: Target SOURCE bytes per streaming state partition. Every shuffle
+#: partition of a stateful streaming operator owns its own state store
+#: instance — a stream-stream join keeps FOUR per partition (two sides x
+#: keyToNumValues/keyWithIndexToValue) — and every microbatch pays a
+#: per-store open/commit/delta-file write even when the store holds
+#: three rows. So the state-partition count is sized to the replayed
+#: source, clamped to the session's parallelism; results do not depend
+#: on it (OPTIMIZATION_r15.md has the measurements). On a real feed
+#: bytes/target saturates the clamp: the local default only DOWN-sizes.
+_STREAM_STATE_TARGET_BYTES = 8 << 20
 
 
 def _path_bytes(path: str) -> int:
@@ -68,62 +61,74 @@ def _path_bytes(path: str) -> int:
     return 0
 
 
-def _stream_partitions(*paths: str, python_stateful: bool = False) -> int:
-    """State-partition count for a run-to-completion streaming query
-    replaying the given local source paths (see
-    _STREAM_STATE_TARGET_BYTES). Local-filesystem probe, matching the
-    driver contract's local sf_dir paths (same limitation as
-    read_events_stream's directory probe). When the probe finds NOTHING
-    (missing path, or a remote/non-local layout it cannot stat), fall
-    back to full session parallelism rather than flooring to 1 — a
-    layout change must not silently serialize every state store onto
-    one partition (ADVICE r15).
+def _stream_partitions(sf_dir: str, python_stateful: bool = False) -> int:
+    """State-partition count for a drain replaying ``sf_dir``'s events
+    table (see _STREAM_STATE_TARGET_BYTES). Local-filesystem probe, like
+    read_events_stream's. When it finds NOTHING (missing path, or a
+    remote layout it cannot stat) it falls back to full session
+    parallelism rather than flooring to 1, so a layout change never
+    serializes every state store onto one partition.
 
-    ``python_stateful``: for applyInPandasWithState /
-    transformWithStateInPandas operators the per-group work runs in
-    PYTHON workers, one per shuffle partition — the budget is CORES,
-    not state-store count (the spread_cpu rationale, guide §4): a
-    byte-sized count of 1 strands every group's fold on one worker.
-    Measured at sf0.1 on streaming_user_sessions: 1 partition 6.8 s /
-    8 partitions 2.0 s / 32 partitions 1.96 s (state-store overhead is
-    dwarfed by the Python compute it parallelizes). Bytes-based sizing
-    saturates at the same clamp on a real feed, so the two modes agree
-    at scale; JVM-stateful operators keep the byte-derived count."""
-    from mini_log_lakehouse_spark.session import default_parallelism
-
+    ``python_stateful``: applyInPandasWithState /
+    transformWithStateInPandas run each shuffle partition's groups in
+    one PYTHON worker, so their budget is CORES, not state-store count:
+    a byte-sized count of 1 would strand every group's fold on one
+    worker. The two modes agree at scale, where bytes saturate the
+    clamp."""
     if python_stateful:
         return default_parallelism()
-    total = sum(_path_bytes(p) for p in paths)
+    total = _path_bytes(os.path.join(sf_dir, "events.parquet"))
     if total <= 0:
         return default_parallelism()
-    n = max(1, -(-total // _STREAM_STATE_TARGET_BYTES))
-    return int(min(n, default_parallelism()))
+    return min(-(-total // _STREAM_STATE_TARGET_BYTES), default_parallelism())
 
 
-@contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Pin spark.sql.shuffle.partitions for the duration of one
-    streaming query's start→drain (the microbatch planner reads it at
-    query start; these queries run to completion inside the scope, so
-    nothing else sees the altered conf). Restores the previous value
-    even on failure.
+def drain(
+    df: DataFrame, name: str, mode: str, partitions: int | None = None
+) -> tuple[DataFrame, list]:
+    """Run the streaming ``df`` to completion (``availableNow``) into the
+    memory table ``name`` in output mode ``mode``; return that table and
+    the query's ``recentProgress``.
 
-    SERIAL-DRIVER ASSUMPTION (ADVICE r15): this mutates session-global
-    conf, so any query PLANNED concurrently on the same session would
-    see the altered value. The driver contract runs queries serially;
-    a concurrent caller must instead pass the partition count per query
-    (or serialize starts around this scope)."""
+    ``partitions`` pins spark.sql.shuffle.partitions (the state-partition
+    count, which the microbatch planner reads at query start) for the
+    start and the drain only, and restores the previous value even when
+    the query fails; ``None`` leaves the conf alone. The conf is
+    session-global, so a query PLANNED concurrently on the same session
+    would see the pinned value: callers drain serially."""
+    spark = df.sparkSession
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    if partitions is not None:
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(partitions))
     try:
-        yield
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     finally:
-        spark.conf.set(key, old)
+        if partitions is not None:
+            spark.conf.set(key, old)
+    return spark.table(name), q.recentProgress
 
 
-def _events_source_path(sf_dir: str) -> str:
-    return os.path.join(sf_dir, "events.parquet")
+def _data_batches(progress: list) -> int:
+    """Microbatches of a drain that read at least one row."""
+    return sum(1 for p in progress if (p.get("numInputRows") or 0) > 0)
+
+
+def _watermark_drops(progress: list) -> int:
+    """Rows a drain's stateful operators dropped as behind the watermark."""
+    return sum(
+        s.get("numRowsDroppedByWatermark") or 0
+        for p in progress
+        for s in (p.get("stateOperators") or [])
+    )
+
 
 def events_stream(
     spark: SparkSession, path: str, glob: str | None = None
@@ -186,12 +191,12 @@ def stream_ingest_logs(
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events table as a stream (per-file microbatches).
 
-    LIMITATION (ADVICE r12): the directory-shape probe below is
-    ``os.path.isdir`` — local-filesystem only, matching the driver
-    contract's local ``sf_dir`` paths. For a remote warehouse
-    (hdfs://, s3a://) a directory-shaped table would silently fall to
-    the single-file glob and read nothing; a remote deployment should
-    probe through the JVM Hadoop FileSystem instead
+    LIMITATION: the directory-shape probe below is ``os.path.isdir`` —
+    local-filesystem only, matching the entry contract's
+    (``__spark_entry__.py``) local ``sf_dir`` paths. For a remote warehouse (hdfs://, s3a://) a
+    directory-shaped table would silently fall to the single-file glob
+    and read nothing; a remote deployment should probe through the JVM
+    Hadoop FileSystem instead
     (``spark._jvm.org.apache.hadoop.fs.FileSystem`` getFileStatus
     isDirectory) — not wired here because remote inputs are out of the
     driver contract and the dead branch would be untestable in CI."""
@@ -206,21 +211,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_stream(spark, sf_dir, glob="events.parquet")
 
 
-def stream_hourly_fact(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def stream_hourly_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental hourly fact over the replayed events stream.
 
-    Runs to completion (availableNow) into a memory sink and returns the
-    final table — semantics identical to the batch hourly fact for the
-    mergeable measures, which the driver checks against a batch SQL
-    oracle.
+    Drains to completion into a memory sink and returns the final table
+    — semantics identical to the batch hourly fact for the mergeable
+    measures, which the oracle gate checks against batch SQL.
     """
     ev = read_events_stream(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
+        ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("requests"),
@@ -236,31 +236,14 @@ def stream_hourly_fact(
             "errors",
         )
     )
-    name = "stream_hourly_fact_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_hourly_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-contract wrapper (oracle: the equivalent batch SQL)."""
-    return stream_hourly_fact(spark, sf_dir)
+    out, _ = drain(
+        agg, "stream_hourly_fact_result", "complete", _stream_partitions(sf_dir)
+    )
+    return out
 
 
 def streaming_hourly_fact_p95(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-    accuracy: int = 10_000,
+    spark: SparkSession, sf_dir: str, accuracy: int = 10_000
 ) -> DataFrame:
     """The sketch path the module docstring promises: the hourly fact's
     p95 as ``percentile_approx`` — a mergeable KLL-style sketch, so it
@@ -279,7 +262,7 @@ def streaming_hourly_fact_p95(
     fall back to the sketch's error-bound contract (rows-only)."""
     ev = read_events_stream(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
+        ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("requests"),
@@ -293,19 +276,9 @@ def streaming_hourly_fact_p95(
             "p95_value",
         )
     )
-    name = "stream_hourly_fact_p95_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name)
+    out, _ = drain(
+        agg, "stream_hourly_fact_p95_result", "complete", _stream_partitions(sf_dir)
+    )
     # exactness-regime guard (see docstring): the oracle is only valid
     # while every group's sketch kept all samples (delta == 0, i.e.
     # count < accuracy/2). The table is an in-memory sink, so this max
@@ -322,9 +295,7 @@ def streaming_hourly_fact_p95(
     return out.orderBy("date", "hour", "event_type")
 
 
-def streaming_daily_active_users(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 day"
-) -> DataFrame:
+def streaming_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DAU: watermarked per-(user, day) dedup CHAINED into a
     count — distinct counts don't stream, so the streaming form is
     dedup-then-count, the multiple-stateful-operators pipeline.
@@ -338,12 +309,10 @@ def streaming_daily_active_users(
     events.parquet file drains in one microbatch, so no row can arrive
     behind a previous batch's watermark; a multi-batch out-of-order
     replay CAN drop late rows per the watermark SLA and undercount vs
-    the batch COUNT(DISTINCT) oracle. The drop regime is subtler than
-    the naive model (VERDICT r7 proved the round-7 test's version
-    wrong): the stateful operator's late-row filter lags the reported
-    watermark by a batch, so a row behind only the *immediately
-    preceding* batch's watermark still lands, while a row behind an
-    earlier batch's watermark is dropped on input
+    the batch COUNT(DISTINCT) oracle. The stateful operator's late-row
+    filter lags the reported watermark by a batch, so a row behind only
+    the *immediately preceding* batch's watermark still lands, while a
+    row behind an earlier batch's watermark is dropped on input
     (numRowsDroppedByWatermark). Both regimes are pinned empirically:
     tests/test_streaming.py::test_dau_two_file_replay_keeps_barely_late_rows
     (2-batch replay == batch oracle, late row kept) and
@@ -356,34 +325,19 @@ def streaming_daily_active_users(
     ev = read_events_stream(spark, sf_dir).filter(F.col("user_id").isNotNull())
     dd = (
         ev.select("user_id", "ts", F.to_date("ts").alias("date"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["user_id", "date"])
     )
     agg = dd.groupBy("date").agg(F.count(F.lit(1)).alias("dau"))
-    name = "stream_daily_active_users_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # single-microbatch exactness guard (same pattern as the p95 guard):
-    # with >1 data-carrying batch, rows behind the watermark of a batch
-    # two or more back are SLA-dropped on input (empirically pinned in
-    # test_dau_multi_batch_replay_drops_late_rows_undercount) and the
-    # COUNT(DISTINCT) oracle may legitimately disagree; where exactly
-    # the keep/drop boundary falls is an internal watermark-propagation
-    # detail (the filter lags the reported watermark by a batch), so
-    # only the single-batch drain is accepted — fail loudly, not
-    # hash-red.
-    data_batches = sum(
-        1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
+    out, progress = drain(
+        agg,
+        "stream_daily_active_users_result",
+        "complete",
+        _stream_partitions(sf_dir),
     )
+    # single-microbatch exactness guard (see docstring): fail loudly,
+    # not hash-red, when the replay took more than one data batch
+    data_batches = _data_batches(progress)
     if data_batches > 1:
         raise AssertionError(
             f"streaming_daily_active_users drained in {data_batches} "
@@ -392,7 +346,7 @@ def streaming_daily_active_users(
             "replay can SLA-drop late rows and undercount). Demote "
             "this entry to rows-only or replay from a single file."
         )
-    return spark.table(name).orderBy("date")
+    return out.orderBy("date")
 
 
 #: Late-replay predicate for the out-of-order replay entries (must stay
@@ -424,9 +378,8 @@ def _weekly_replay(spark: SparkSession, sf_dir: str):
     n_late_groups is the late slice's distinct (hour-window, event_type)
     count — the unit `numRowsDroppedByWatermark` reports, because the
     stateful aggregate's late filter runs AFTER the batch-local partial
-    aggregation (measured: 50 late rows at sf0.01 report 40 dropped =
-    their 40 distinct hour/type groups)."""
-    import os
+    aggregation (50 late rows at sf0.01 report 40 dropped = their 40
+    distinct hour/type groups)."""
     import tempfile
 
     from mini_log_lakehouse_spark.sources.registry import load_table
@@ -502,12 +455,24 @@ def _replay_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     )
 
 
+def _weekly_hourly_counts(stream: DataFrame) -> DataFrame:
+    # the 1-hour delay is FIXED: the oracles restate the drop set and the
+    # emission horizon with a literal INTERVAL 1 HOUR, so a parameterized
+    # delay would silently diverge from the gate
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("requests"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "requests")
+    )
+
+
 def streaming_append_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode hourly fact over a multi-file OUT-OF-ORDER replay —
-    the entry where dropping late data IS the defined semantics
-    (VERDICT r8 ask 6), converting the empirically pinned watermark
-    behavior (tests/test_streaming.py::test_append_windowed_agg_drops_
-    late_rows) into a driver-hash-gated contract.
+    the entry where dropping late data IS the defined semantics,
+    converting the empirically pinned watermark behavior
+    (tests/test_streaming.py::test_append_windowed_agg_drops_late_rows)
+    into a hash-gated registry contract.
 
     Replay construction (harness plumbing — at scale these files arrive
     from storage in exactly this shape: mostly-ordered with a stale
@@ -532,44 +497,20 @@ def streaming_append_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
       end == watermark EMITS — tests/test_streaming.py::
       test_append_emission_boundary_is_inclusive).
 
-    A runtime guard asserts numRowsDroppedByWatermark equals the late
+    A runtime guard asserts numRowsDroppedByWatermark covers the late
     slice's distinct (hour-window, event_type) group count (the late
     filter runs post-partial-aggregation, so it drops group rows, not
     raw rows — see _weekly_replay) and that the replay really ran one
     batch per file — if a Spark upgrade shifts the drop regime, the
     entry fails loudly instead of hash-red."""
     stream, n_batches, n_late_groups = _weekly_replay(spark, sf_dir)
-    agg = (
-        # the 1-hour delay is FIXED: the oracle restates the drop set and
-        # the emission horizon with a literal INTERVAL 1 HOUR, so a
-        # parameterized delay would silently diverge from the gate
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("requests"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "requests"
-        )
+    out, progress = drain(
+        _weekly_hourly_counts(stream),
+        "stream_append_hourly_result",
+        "append",
+        _stream_partitions(sf_dir),
     )
-    name = "stream_append_hourly_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    data_batches = sum(
-        1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
-    )
-    dropped = sum(
-        s.get("numRowsDroppedByWatermark") or 0
-        for p in q.recentProgress
-        for s in (p.get("stateOperators") or [])
-    )
+    data_batches, dropped = _data_batches(progress), _watermark_drops(progress)
     # >= not ==: the metric counts post-partial-agg rows PER MAP
     # PARTITION, so a late file that splits across input partitions at a
     # larger sf double-counts a group — more counted drops is not a
@@ -584,7 +525,7 @@ def streaming_append_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "what the engine did; fix the replay or re-pin the regime "
             "before trusting the hash gate."
         )
-    return spark.table(name).orderBy("window_start", "event_type")
+    return out.orderBy("window_start", "event_type")
 
 
 def streaming_update_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -610,37 +551,18 @@ def streaming_update_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     group count, and one emission per group (a re-emission would break
     the row-count gate anyway; the guard makes it loud)."""
     stream, n_batches, n_late_groups = _weekly_replay(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("requests"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "requests"
-        )
+    out, progress = drain(
+        _weekly_hourly_counts(stream),
+        "stream_update_hourly_result",
+        "update",
+        _stream_partitions(sf_dir),
     )
-    name = "stream_update_hourly_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    data_batches = sum(
-        1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
-    )
-    dropped = sum(
-        s.get("numRowsDroppedByWatermark") or 0
-        for p in q.recentProgress
-        for s in (p.get("stateOperators") or [])
-    )
-    out = spark.table(name)
-    n_rows = out.count()
-    n_groups = out.select("window_start", "event_type").distinct().count()
+    data_batches, dropped = _data_batches(progress), _watermark_drops(progress)
+    # one job over the memory table; the struct keeps a NULL event_type
+    # group countable (count_distinct skips rows with a NULL argument)
+    n_rows, n_groups = out.agg(
+        F.count(F.lit(1)), F.count_distinct(F.struct("window_start", "event_type"))
+    ).first()
     # same >= rationale as streaming_append_hourly's guard
     if data_batches != n_batches or dropped < n_late_groups or n_rows != n_groups:
         raise AssertionError(
@@ -680,19 +602,10 @@ def streaming_sliding_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "requests",
         )
     )
-    name = "stream_sliding_fact_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("window_start", "event_type")
+    out, _ = drain(
+        agg, "stream_sliding_fact_result", "complete", _stream_partitions(sf_dir)
+    )
+    return out.orderBy("window_start", "event_type")
 
 
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,19 +638,10 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "stream_session_window_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "session_start")
+    out, _ = drain(
+        agg, "stream_session_window_result", "append", _stream_partitions(sf_dir)
+    )
+    return out.orderBy("user_id", "session_start")
 
 
 ORACLES: dict[str, str] = {
@@ -886,7 +790,7 @@ ORACLES["streaming_session_window"] = """
 """
 
 QUERIES = {
-    "streaming_hourly_fact": streaming_hourly_fact,
+    "streaming_hourly_fact": stream_hourly_fact,
     "streaming_hourly_fact_p95": streaming_hourly_fact_p95,
     "streaming_daily_active_users": streaming_daily_active_users,
     "streaming_append_hourly": streaming_append_hourly,

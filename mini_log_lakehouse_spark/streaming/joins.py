@@ -25,31 +25,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_log_lakehouse_spark.streaming.ingest import (
-    _events_source_path,
-    _scoped_shuffle_partitions,
     _stream_partitions,
+    drain,
     read_events_stream,
 )
 
 
-def stream_error_followups(
-    spark: SparkSession,
-    sf_dir: str,
-    horizon: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def stream_error_followups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join the error stream to the same user's subsequent non-error
-    events within ``horizon``; returns the drained pair table.
+    events within 10 minutes, drain the pair table, and return per
+    follow-up type how many (error → action) pairs and how many distinct
+    affected users the join produced. The rollup keeps the compared
+    output small and deterministic; the streaming join
+    under it is the operator being verified (oracle: the equivalent
+    batch self-join in SQL, whose literal INTERVAL 10 MINUTE fixes the
+    horizon).
 
     Two filtered views of ONE replayed source stream — Spark treats them
     as independent stream sides with their own watermarks and buffers;
     the time-range conjunct in the join condition is what bounds both
-    state stores (see module docstring)."""
+    state stores (see module docstring), which stream-stream joins keep
+    FOUR of per shuffle partition (see ingest._STREAM_STATE_TARGET_BYTES)."""
     ev = read_events_stream(spark, sf_dir)
     errs = (
         ev.filter(F.col("event_type") == "error")
         .select("user_id", F.col("ts").alias("err_ts"))
-        .withWatermark("err_ts", watermark)
+        .withWatermark("err_ts", "1 hour")
     )
     acts = (
         ev.filter(F.col("event_type") != "error")
@@ -58,41 +59,18 @@ def stream_error_followups(
             F.col("event_type").alias("followup_type"),
             F.col("ts").alias("act_ts"),
         )
-        .withWatermark("act_ts", watermark)
+        .withWatermark("act_ts", "1 hour")
     )
     joined = errs.join(
         acts,
         (F.col("user_id") == F.col("act_user"))
         & (F.col("act_ts") > F.col("err_ts"))
-        & (F.col("act_ts") <= F.col("err_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("act_ts") <= F.col("err_ts") + F.expr("INTERVAL 10 minutes")),
         "inner",
     ).select("user_id", "err_ts", "followup_type", "act_ts")
-    name = "stream_error_followups_result"
-    # Stream-stream joins keep FOUR state stores per shuffle partition;
-    # size the partition count to the replayed source, not the session
-    # constant (see ingest._STREAM_STATE_TARGET_BYTES).
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_error_followups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: per follow-up type, how many (error → action) pairs
-    and how many distinct affected users the interval join produced.
-    The rollup over the drained pair table keeps the driver-compared
-    output small and fully deterministic; the streaming machinery under
-    it is the operator being verified (oracle: the equivalent batch
-    self-join in SQL)."""
-    pairs = stream_error_followups(spark, sf_dir)
+    pairs, _ = drain(
+        joined, "stream_error_followups_result", "append", _stream_partitions(sf_dir)
+    )
     return (
         pairs.groupBy("followup_type")
         .agg(
@@ -151,19 +129,10 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("high_value_errors"),
     )
-    name = "stream_static_enrichment_result"
-    with _scoped_shuffle_partitions(
-        spark, _stream_partitions(_events_source_path(sf_dir))
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("tier")
+    out, _ = drain(
+        agg, "stream_static_enrichment_result", "complete", _stream_partitions(sf_dir)
+    )
+    return out.orderBy("tier")
 
 
 ORACLES: dict[str, str] = {
@@ -206,6 +175,6 @@ ORACLES: dict[str, str] = {
 }
 
 QUERIES = {
-    "streaming_error_followups": streaming_error_followups,
+    "streaming_error_followups": stream_error_followups,
     "streaming_static_enrichment": streaming_static_enrichment,
 }

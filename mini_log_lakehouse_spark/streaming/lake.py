@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from mini_log_lakehouse_spark.session import tune
 from mini_log_lakehouse_spark.sources.logs import parse_lines
-from mini_log_lakehouse_spark.streaming.ingest import events_stream
+from mini_log_lakehouse_spark.streaming.ingest import drain, events_stream
 
 
 def stream_fct_maintenance(
@@ -77,13 +77,5 @@ def stream_dedup_events(
     tune(spark)
     ev = events_stream(spark, events_dir)
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
-    name = "stream_dedup_events_result"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    out, _ = drain(deduped, "stream_dedup_events_result", "append")
+    return out

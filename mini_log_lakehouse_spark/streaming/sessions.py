@@ -24,9 +24,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mini_log_lakehouse_spark.operators.sessions import SESSION_GAP_MINUTES
 from mini_log_lakehouse_spark.streaming.ingest import (
-    _events_source_path,
-    _scoped_shuffle_partitions,
     _stream_partitions,
+    drain,
     read_events_stream,
 )
 
@@ -96,20 +95,13 @@ def stream_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = "stream_closed_sessions_result"
-    with _scoped_shuffle_partitions(
-        spark,
-        _stream_partitions(_events_source_path(sf_dir), python_stateful=True),
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    closed, _ = drain(
+        out,
+        "stream_closed_sessions_result",
+        "append",
+        _stream_partitions(sf_dir, python_stateful=True),
+    )
+    return closed
 
 
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,9 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mini_log_lakehouse_spark.streaming.ingest import (
-    _events_source_path,
-    _scoped_shuffle_partitions,
     _stream_partitions,
+    drain,
     read_events_stream,
 )
 
@@ -170,26 +169,15 @@ def stream_user_totals(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    name = "stream_user_totals_result"
-    # Size state partitions to the replayed source; a caller-provided
-    # ``source`` stream has no local path to probe — keep the session
-    # conf for that (test-only) path.
-    if source is None:
-        n_parts = _stream_partitions(
-            _events_source_path(sf_dir), python_stateful=True
-        )
-    else:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _scoped_shuffle_partitions(spark, n_parts):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    # a caller-provided ``source`` stream has no local path to probe:
+    # it keeps the session's partition count
+    totals, _ = drain(
+        out,
+        "stream_user_totals_result",
+        "append",
+        _stream_partitions(sf_dir, python_stateful=True) if source is None else None,
+    )
+    return totals
 
 
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:

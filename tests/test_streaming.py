@@ -5,12 +5,18 @@ user's final (still-open) session."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mini_log_lakehouse_spark.operators.sessions import sessionize
 from mini_log_lakehouse_spark.sources.logs import parse_logs, read_bronze
 from mini_log_lakehouse_spark.sources.registry import load_table
-from mini_log_lakehouse_spark.streaming.ingest import stream_ingest_logs
+from mini_log_lakehouse_spark.streaming.ingest import (
+    _data_batches,
+    _watermark_drops,
+    drain,
+    stream_ingest_logs,
+)
 from mini_log_lakehouse_spark.streaming.sessions import stream_closed_sessions
 
 FIXTURE_DIR = "tests/fixtures"
@@ -223,37 +229,38 @@ def test_user_totals_accumulate_across_microbatches(spark, sf_dir, tmp_path):
     assert both > 0  # the split must actually exercise two-batch users
 
 
-def _replay_dau(spark, src_dir, files):
-    """Write ``files`` (list of DataFrames) one-per-microbatch (the file
-    source orders batches by modification time), run the DAU pipeline
-    shape from streaming_daily_active_users over them, and return
-    (result dict, recentProgress list, batch-oracle dict)."""
-    import time
+def _file_replay(spark, src, files):
+    """Write ``files`` (DataFrames) under ``src`` and replay them one
+    file per microbatch: the file source orders batches by modification
+    time, pinned here with os.utime."""
+    import os
 
     for i, df in enumerate(files):
-        df.coalesce(1).write.parquet(str(src_dir / f"f{i}"), mode="overwrite")
-        time.sleep(1.2)
-    stream = (
+        d = str(src / f"f{i}")
+        df.coalesce(1).write.parquet(d)
+        for root, _, fs in os.walk(d):
+            for f in fs:
+                os.utime(os.path.join(root, f), (1_000_000 + i * 10,) * 2)
+    return (
         spark.readStream.schema(files[0].schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir) + "/*/")
+        .parquet(str(src) + "/*/")
     )
+
+
+def _replay_dau(spark, src_dir, files):
+    """Replay ``files`` one per microbatch through the DAU pipeline shape
+    from streaming_daily_active_users and return (result dict,
+    recentProgress list, batch-oracle dict)."""
+    stream = _file_replay(spark, src_dir, files)
     dd = (
         stream.select("user_id", "ts", F.to_date("ts").alias("date"))
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["user_id", "date"])
     )
     agg = dd.groupBy("date").agg(F.count(F.lit(1)).alias("dau"))
-    name = f"dau_replay_{len(files)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {str(r["date"]): r["dau"] for r in spark.table(name).collect()}
+    out, progress = drain(agg, f"dau_replay_{len(files)}", "complete")
+    got = {str(r["date"]): r["dau"] for r in out.collect()}
     union = files[0]
     for f in files[1:]:
         union = union.unionByName(f)
@@ -264,7 +271,7 @@ def _replay_dau(spark, src_dir, files):
         .agg(F.countDistinct("user_id").alias("dau"))
         .collect()
     }
-    return got, q.recentProgress, batch
+    return got, progress, batch
 
 
 def _mk_users(spark, rows):
@@ -291,8 +298,7 @@ def test_dau_two_file_replay_keeps_barely_late_rows(spark, tmp_path):
         spark, [(99, "2025-01-08 00:00:00"), (4, "2025-01-10 12:00:00")]
     )
     got, progress, batch = _replay_dau(spark, tmp_path / "dau2", [f1, f2])
-    data_batches = sum(1 for p in progress if (p.get("numInputRows") or 0) > 0)
-    assert data_batches == 2, data_batches
+    assert _data_batches(progress) == 2
     assert batch == {"2025-01-10": 4, "2025-01-08": 1}
     # late (99, Jan 8) is KEPT — behind the reported watermark, but the
     # filter lags a batch, so streaming equals the batch oracle here
@@ -318,14 +324,8 @@ def test_dau_multi_batch_replay_drops_late_rows_undercount(spark, tmp_path):
         _mk_users(spark, [(1, "2025-01-10 23:00:00"), (5, "2025-01-10 22:00:00")]),
     ]
     got, progress, batch = _replay_dau(spark, tmp_path / "dau4", files)
-    data_batches = sum(1 for p in progress if (p.get("numInputRows") or 0) > 0)
-    assert data_batches == 4, data_batches
-    dropped = sum(
-        s.get("numRowsDroppedByWatermark") or 0
-        for p in progress
-        for s in (p.get("stateOperators") or [])
-    )
-    assert dropped == 2, dropped
+    assert _data_batches(progress) == 4
+    assert _watermark_drops(progress) == 2
     assert batch == {"2025-01-10": 3, "2025-01-12": 2}
     # user 5 (fresh, late) never counted: streaming undercounts Jan 10
     # by exactly the SLA-dropped row — THE divergence the runtime guard
@@ -341,8 +341,6 @@ def test_append_windowed_agg_drops_late_rows(spark, tmp_path):
     Windows the watermark never passes are withheld entirely — append
     mode trades completeness for finality, exactly the inverse of the
     complete-mode DAU contract above."""
-    import time
-
     src = tmp_path / "late_append"
     files = [
         # b0: the 13:00 "clock" row advances the watermark to 12:00
@@ -353,38 +351,16 @@ def test_append_windowed_agg_drops_late_rows(spark, tmp_path):
         # dropped; 4 @ 12:30's window end (13:00) is never passed -> withheld
         _mk_users(spark, [(99, "2025-01-10 10:30:00"), (4, "2025-01-10 12:30:00")]),
     ]
-    for i, df in enumerate(files):
-        df.coalesce(1).write.parquet(str(src / f"f{i}"), mode="overwrite")
-        time.sleep(1.2)
-    stream = (
-        spark.readStream.schema(files[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*/")
-    )
+    stream = _file_replay(spark, src, files)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.max("user_id").alias("max_user"))
         .select(F.col("w.start").alias("window_start"), "n", "max_user")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_append_agg")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = [
-        (str(r["window_start"]), r["n"], r["max_user"])
-        for r in spark.table("late_append_agg").collect()
-    ]
-    dropped = sum(
-        s.get("numRowsDroppedByWatermark") or 0
-        for p in q.recentProgress
-        for s in (p.get("stateOperators") or [])
-    )
-    assert dropped == 1, dropped
+    out, progress = drain(agg, "late_append_agg", "append")
+    got = [(str(r["window_start"]), r["n"], r["max_user"]) for r in out.collect()]
+    assert _watermark_drops(progress) == 1
     # one finalized window; 99 excluded; 12:00/13:00 windows withheld
     assert got == [("2025-01-10 10:00:00", 2, 2)], got
 
@@ -394,39 +370,20 @@ def test_append_emission_boundary_is_inclusive(spark, tmp_path):
     window whose END equals the final watermark IS emitted (max 13:00,
     delay 1h -> wm 12:00; the 11:00-12:00 window emits, the 13:00-14:00
     window is withheld)."""
-    import os
-
     src = tmp_path / "boundary"
     files = [
         _mk_users(spark, [(1, "2025-01-10 10:30:00"), (2, "2025-01-10 11:30:00")]),
         _mk_users(spark, [(3, "2025-01-10 13:00:00")]),
     ]
-    for i, df in enumerate(files):
-        d = str(src / f"f{i}")
-        df.coalesce(1).write.parquet(d)
-        for root, _, fs in os.walk(d):
-            for f in fs:
-                os.utime(os.path.join(root, f), (1_000_000 + i * 10,) * 2)
-    stream = (
-        spark.readStream.schema(files[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*/")
-    )
+    stream = _file_replay(spark, src, files)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.end").alias("window_end"), "n")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("boundary_probe")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ends = sorted(str(r["window_end"]) for r in spark.table("boundary_probe").collect())
+    out, _ = drain(agg, "boundary_probe", "append")
+    ends = sorted(str(r["window_end"]) for r in out.collect())
     assert ends == ["2025-01-10 11:00:00", "2025-01-10 12:00:00"], ends
 
 
@@ -522,3 +479,148 @@ def test_streaming_update_vs_append_horizon(spark, sf_dir):
     assert extra and all(
         k[0] + datetime.timedelta(hours=1) > horizon for k in extra
     )
+
+
+def _hourly_users(stream):
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def test_drain_pins_partitions_for_the_query_only(spark, tmp_path):
+    """``partitions`` sizes the query's state stores, the session conf
+    is back afterwards, and the returned progress feeds the guards'
+    helpers (two files -> two data batches, nothing late)."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    stream = _file_replay(
+        spark,
+        tmp_path / "pin",
+        [
+            _mk_users(spark, [(1, "2025-01-10 10:00:00")]),
+            _mk_users(spark, [(2, "2025-01-10 11:00:00")]),
+        ],
+    )
+    out, progress = drain(_hourly_users(stream), "drain_pinned", "complete", 2)
+    assert spark.conf.get(key) == before
+    assert sorted(r["n"] for r in out.collect()) == [1, 1]
+    assert _data_batches(progress) == 2
+    assert _watermark_drops(progress) == 0
+    assert {
+        s["numShufflePartitions"] for p in progress for s in p["stateOperators"]
+    } == {2}
+
+
+def test_drain_restores_partitions_when_the_query_fails(spark, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    stream = _file_replay(
+        spark, tmp_path / "fail", [_mk_users(spark, [(1, "2025-01-10 10:00:00")])]
+    )
+    failing = stream.select(F.raise_error(F.lit("drain probe")).alias("x"))
+    with pytest.raises(StreamingQueryException, match="drain probe"):
+        drain(failing, "drain_failing", "append", 2)
+    assert spark.conf.get(key) == before
+
+
+def test_drain_without_partitions_leaves_the_conf_alone(spark, tmp_path, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        sets.append(key)
+        real_set(self, key, value)
+
+    stream = _file_replay(
+        spark, tmp_path / "none", [_mk_users(spark, [(1, "2025-01-10 10:00:00")])]
+    )
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    _, progress = drain(_hourly_users(stream), "drain_unpinned", "complete")
+    assert sets == []
+    assert {
+        s["numShufflePartitions"] for p in progress for s in p["stateOperators"]
+    } == {session_parts}
+
+
+def test_stream_partitions_sizes_by_source_bytes(tmp_path, monkeypatch):
+    """Spark-free: one state partition per started 8 MB of the events
+    table (file or directory), clamped to the session's parallelism;
+    full parallelism when nothing can be measured or the operator's
+    state runs in Python workers."""
+    from mini_log_lakehouse_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "default_parallelism", lambda: 3)
+    mb = 1 << 20
+
+    def sized(path, n):  # sparse: the size is metadata only
+        with open(path, "wb") as fh:
+            fh.truncate(n)
+
+    one_file = tmp_path / "file"
+    one_file.mkdir()
+    sized(one_file / "events.parquet", 1)
+    assert ingest._stream_partitions(str(one_file)) == 1
+    sized(one_file / "events.parquet", 9 * mb)
+    assert ingest._stream_partitions(str(one_file)) == 2
+    assert ingest._stream_partitions(str(one_file), python_stateful=True) == 3
+
+    directory = tmp_path / "dir" / "events.parquet"
+    (directory / "date=1").mkdir(parents=True)
+    sized(directory / "part-0.parquet", 8 * mb)
+    sized(directory / "date=1" / "part-1.parquet", 1)
+    assert ingest._stream_partitions(str(tmp_path / "dir")) == 2
+    sized(directory / "part-2.parquet", 40 * mb)
+    assert ingest._stream_partitions(str(tmp_path / "dir")) == 3
+
+    assert ingest._stream_partitions(str(tmp_path / "missing")) == 3
+
+
+def test_p95_guard_raises_outside_the_exact_regime(spark, sf_dir):
+    from mini_log_lakehouse_spark.streaming.ingest import streaming_hourly_fact_p95
+
+    with pytest.raises(AssertionError, match=r"accuracy/2 \(1\)"):
+        streaming_hourly_fact_p95(spark, sf_dir, accuracy=2)
+
+
+def test_dau_guard_raises_on_a_multi_batch_replay(spark, sf_dir, tmp_path, monkeypatch):
+    from mini_log_lakehouse_spark.streaming import ingest
+
+    stream = _file_replay(
+        spark,
+        tmp_path / "dau_guard",
+        [
+            _mk_users(spark, [(1, "2025-01-10 10:00:00")]),
+            _mk_users(spark, [(2, "2025-01-10 11:00:00")]),
+        ],
+    )
+    monkeypatch.setattr(ingest, "read_events_stream", lambda _spark, _sf: stream)
+    with pytest.raises(AssertionError, match="drained in 2 data-carrying"):
+        ingest.streaming_daily_active_users(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "entry", ["streaming_append_hourly", "streaming_update_hourly"]
+)
+def test_replay_guard_raises_on_a_batch_count_mismatch(
+    spark, sf_dir, monkeypatch, entry
+):
+    """The output-mode entries fail loudly when the replay promised one
+    more microbatch than the drain ran."""
+    from mini_log_lakehouse_spark.streaming import ingest
+
+    real = ingest._weekly_replay
+
+    def one_batch_short(spark, sf_dir):
+        stream, n_batches, n_late_groups = real(spark, sf_dir)
+        return stream, n_batches + 1, n_late_groups
+
+    monkeypatch.setattr(ingest, "_weekly_replay", one_batch_short)
+    with pytest.raises(AssertionError, match=f"{entry} replay contract broken"):
+        getattr(ingest, entry)(spark, sf_dir)
