@@ -141,14 +141,15 @@ def time_fn(fn, warmup: int = WARMUP, iters: int = ITERS) -> float:
     return statistics.median(times)
 
 
-def _drop_pipeline_caches() -> None:
+def _drop_pipeline_caches(spark) -> None:
     """Evict persisted intermediates (MinHash/SimHash signature tables)
     so the next run pays the full pipeline cost. Input-table caches stay
     — the cold number isolates the operator, not the scan."""
     from mini_log_lakehouse_spark.operators import dedup
+    from mini_log_lakehouse_spark.session import forget
 
-    for key in list(dedup._SIG_CACHE):
-        dedup._SIG_CACHE.pop(key).unpersist(True)
+    for op in dedup.SIG_SLOTS:
+        forget(spark, ("dedup.sigs", op))
 
 
 def _quiet_heap(spark) -> None:
@@ -156,7 +157,7 @@ def _quiet_heap(spark) -> None:
     previous block planted, flush dirty pages (the dedup cold run
     writes GBs of shuffle/sig data whose writeback would otherwise land
     inside the NEXT block's timings), and ask for the full-GC wave NOW."""
-    _drop_pipeline_caches()
+    _drop_pipeline_caches(spark)
     try:
         os.sync()
     except OSError:
@@ -252,7 +253,7 @@ def bench_cache_bearing(spark, sf_dir: str, iters: int, warmup: int, names):
         # signature recompute (hash→band→verify), not first-run JVM
         # codegen compilation — the number a production re-ingest
         # would actually pay.
-        _drop_pipeline_caches()
+        _drop_pipeline_caches(spark)
         t0 = time.perf_counter()
         _noop_write(fn(spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 4)
@@ -262,23 +263,6 @@ def bench_cache_bearing(spark, sf_dir: str, iters: int, warmup: int, names):
         # the re-persisted 4.6 GB working set was resident by then.
         _quiet_heap(spark)
     return results, cold, out_rows, collect_once
-
-
-def bench_spark(spark, sf_dir: str, iters: int, warmup: int, names=HEADLINE):
-    """Comparable block first, cache-bearing block second (see the two
-    helpers for why the order is load-bearing); results re-emitted in
-    declared ``names`` order so artifact diffs stay column-stable."""
-    comparable = [n for n in names if n not in COLD_ALSO]
-    bearing = [n for n in names if n in COLD_ALSO]
-    results = bench_comparable(spark, sf_dir, iters, warmup, comparable)
-    cold: dict[str, float] = {}
-    if bearing:
-        warm_b, cold, _rows, _legacy = bench_cache_bearing(
-            spark, sf_dir, iters, warmup, bearing
-        )
-        results.update(warm_b)
-    results = {n: results[n] for n in names}
-    return results, cold
 
 
 #: DuckDB gets the SAME steady-state discipline as Spark at every leg:

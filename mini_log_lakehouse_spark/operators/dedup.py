@@ -74,12 +74,6 @@ _PAIR_JOIN_MAX_KEYS = 20_000
 #: shape — never SortMergeJoin on wide signature rows.
 _EST_BROADCAST_MAX_KEYS = 400_000
 
-#: Memoized per-corpus decisions keyed by (applicationId, corpus plan
-#: semanticHash) → (collapse?, n_keys at pairing grain) — the decision
-#: aggregate runs once per corpus per session, never per invocation.
-_COLLAPSE_CACHE: dict[tuple[str, int], tuple[bool, int]] = {}
-
-
 # --- exact ------------------------------------------------------------------
 
 def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,27 +284,27 @@ def _cached_expr(key: tuple, build) -> Column:
     return col
 
 
-#: One persisted signature table per operator per session. persist()
-#: registers in the session CacheManager, which holds a strong reference
-#: until unpersist — without this slot, every distinct corpus processed
-#: by a long-lived session would pin one more cached relation forever.
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
+#: Signature slots filled so far, by operator name: one persisted
+#: signature table per operator per session. persist() registers in the
+#: session CacheManager, which holds a strong reference until unpersist
+#: — without the slot, every distinct corpus processed by a long-lived
+#: session would pin one more cached relation forever.
+SIG_SLOTS: set[str] = set()
 
 
 def _persist_sigs(op: str, sigs: DataFrame) -> DataFrame:
-    """Persist ``sigs``, evicting the operator's previously persisted
-    table iff it was built from a semantically different plan (same
-    corpus → same canonical plan → the CacheManager entry is shared and
-    must NOT be dropped; dropping it would also defeat warm-cache reuse
-    across repeated invocations)."""
-    app_id = sigs.sparkSession.sparkContext.applicationId
-    key = (app_id, op)
-    session.evict_stale(_SIG_CACHE, app_id)
-    old = _SIG_CACHE.get(key)
+    """Persist ``sigs`` into the memo slot ``("dedup.sigs", op)``,
+    unpersisting the slot's previous table iff it was built from a
+    semantically different plan (same corpus → same canonical plan → the
+    CacheManager entry is shared and must NOT be dropped; dropping it
+    would also defeat warm-cache reuse across repeated invocations)."""
+    spark, key = sigs.sparkSession, ("dedup.sigs", op)
+    old = session.memo(spark, key, lambda: None)  # a lookup: None is never stored
     if old is not None and not old.sameSemantics(sigs):
-        old.unpersist()
+        session.forget(spark, key)
     sigs = sigs.persist()
-    _SIG_CACHE[key] = sigs
+    session.memo(spark, key, lambda: sigs)
+    SIG_SLOTS.add(op)
     return sigs
 
 
@@ -552,38 +546,38 @@ def minhash_candidate_pairs(
             ),
         )
 
+    def decide() -> tuple[bool, int]:
+        # One aggregate over the UNPERSISTED fingerprint plan (the memo
+        # guarantees it runs once per corpus per session): persisting
+        # here would pin a 16 B/doc table that the no-collapse path
+        # never reads again — the accumulated-pin pressure SCALING.md
+        # documents elsewhere. When the collapse does engage, _members()
+        # below re-runs the cheap md5 scan once and persists the copy
+        # that IS re-read.
+        fps = docs.select(F.md5(F.col(text_col)).alias("_fp"))
+        classes = fps.groupBy("_fp").agg(F.count(F.lit(1)).alias("_c"))
+        n_fps, n_docs, max_class = classes.agg(
+            F.count(F.lit(1)), F.sum("_c"), F.max("_c")
+        ).first()
+        # SUM/MAX over zero groups are NULL (an empty corpus slice is
+        # a routine shape at scale); COUNT is already 0
+        n_docs, max_class = int(n_docs or 0), int(max_class or 0)
+        do_collapse = bool(
+            (n_docs - n_fps) > _COLLAPSE_DUP_FRACTION * n_docs
+            or max_class > _COLLAPSE_MAX_CLASS
+        )
+        # n at pairing grain: reps when collapsing, docs otherwise —
+        # this also picks the candidate-pairing strategy (see
+        # _PAIR_JOIN_MAX_KEYS).
+        return do_collapse, int(n_fps if do_collapse else n_docs)
+
     n_keys: int | None = None
     if collapse is None:
-        app_id = docs.sparkSession.sparkContext.applicationId
-        dkey = (app_id, corpus_hash)
-        session.evict_stale(_COLLAPSE_CACHE, app_id, unpersist=False)
-        decided = _COLLAPSE_CACHE.get(dkey)
-        if decided is None:
-            # One aggregate over the UNPERSISTED fingerprint plan (the
-            # memo guarantees it runs once per corpus): persisting here
-            # would pin a 16 B/doc table that the no-collapse path never
-            # reads again — the accumulated-pin pressure SCALING.md
-            # documents elsewhere. When the collapse does engage,
-            # _members() below re-runs the cheap md5 scan once and
-            # persists the copy that IS re-read.
-            fps = docs.select(F.md5(F.col(text_col)).alias("_fp"))
-            classes = fps.groupBy("_fp").agg(F.count(F.lit(1)).alias("_c"))
-            n_fps, n_docs, max_class = classes.agg(
-                F.count(F.lit(1)), F.sum("_c"), F.max("_c")
-            ).first()
-            # SUM/MAX over zero groups are NULL (an empty corpus slice is
-            # a routine shape at scale); COUNT is already 0
-            n_docs, max_class = int(n_docs or 0), int(max_class or 0)
-            do_collapse = bool(
-                (n_docs - n_fps) > _COLLAPSE_DUP_FRACTION * n_docs
-                or max_class > _COLLAPSE_MAX_CLASS
-            )
-            # n at pairing grain: reps when collapsing, docs otherwise —
-            # this also picks the candidate-pairing strategy (see
-            # _PAIR_JOIN_MAX_KEYS).
-            decided = (do_collapse, int(n_fps if do_collapse else n_docs))
-            _COLLAPSE_CACHE[dkey] = decided
-        collapse, n_keys = decided
+        # (collapse?, n_keys at pairing grain), keyed by the corpus plan's
+        # semanticHash
+        collapse, n_keys = session.memo(
+            docs.sparkSession, ("dedup.collapse", corpus_hash), decide
+        )
     small = n_keys is not None and n_keys <= _PAIR_JOIN_MAX_KEYS
     k = bands * rows
     if not collapse:
@@ -1179,16 +1173,6 @@ class JaccardCandidateBudgetExceeded(RuntimeError):
     quadratic regime unwarned (judge r14 task 6)."""
 
 
-#: Single-slot persist of the guarded call's prefix frame, keyed
-#: (applicationId,): the guard aggregate and the join's two sides all
-#: consume ``pre`` (linear in the corpus — shingle explode, DF-count
-#: join, per-doc sort), so without a persist the guarded path recomputes
-#: that lineage per consumer. One slot bounds memory: each guarded call
-#: unpersists the previous call's frame (recompute-on-miss is always
-#: correct), and cross-session leftovers drop via the usual eviction.
-_GUARD_PRE_SLOT: dict[tuple[str], DataFrame] = {}
-
-
 #: Dense tier of the exact-Jaccard verify: a cheap row-count probe
 #: never shingles past NGRAM_GEMM_MAX_DOCS documents, and the R×R×T
 #: product must stay within a few seconds of BLAS. The pull and matrix
@@ -1442,18 +1426,12 @@ def ngram_jaccard_pairs(
         # and exhausts a single box, where real corpora measure 1.8e6
         # (sf0.01) / 1.8e8 (sf0.1). The prefix frame is persisted so the
         # guard's eager pass is the ONLY computation of the linear
-        # pipeline — the join's two sides below read the same cache
-        # (single slot, prior call evicted: _GUARD_PRE_SLOT).
-        skey = (docs.sparkSession.sparkContext.applicationId,)
-        session.evict_stale(_GUARD_PRE_SLOT, skey[0])
-        prior = _GUARD_PRE_SLOT.pop(skey, None)
-        if prior is not None:
-            try:
-                prior.unpersist(blocking=False)
-            except Exception:
-                pass  # owning context may already be gone
-        pre = pre.persist()
-        _GUARD_PRE_SLOT[skey] = pre
+        # pipeline — the join's two sides below read the same cache.
+        # One memo slot bounds memory: each guarded call unpersists the
+        # previous call's frame (recompute-on-miss is always correct).
+        spark, skey = docs.sparkSession, ("dedup.guard_pre",)
+        session.forget(spark, skey)
+        pre = session.memo(spark, skey, pre.persist)
         mass_row = (
             pre.groupBy("tok")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -1462,8 +1440,7 @@ def ngram_jaccard_pairs(
         )
         mass = int(mass_row["mass"] or 0)
         if mass > candidate_budget:
-            _GUARD_PRE_SLOT.pop(skey, None)
-            pre.unpersist(blocking=False)  # nothing will consume it
+            session.forget(spark, skey)  # nothing will consume it
         _raise_if_over_budget(mass, candidate_budget)
     a = pre.select(F.col("_fp").alias("_fp_a"), F.col("sz").alias("sz_a"), "tok")
     b = pre.select(F.col("_fp").alias("_fp_b"), F.col("sz").alias("sz_b"), "tok")
@@ -1595,17 +1572,6 @@ def simhash_from_base(hashes_col) -> Column:
         bit = F.when(votes * 2 > n, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         out = out.bitwiseOR(F.shiftleft(bit, j))
     return out
-
-
-def simhash96(text_col, shingle_n: int = 5) -> Column:
-    """struct<w0,w1> convenience form (shingle hashing inlined 96× — use
-    simhash_base_hashes + simhash_word_hashes + simhash_from_base across
-    select boundaries in pipelines)."""
-    base = simhash_base_hashes(text_col, shingle_n)
-    return F.struct(
-        simhash_from_base(simhash_word_hashes(base, 0)).alias("w0"),
-        simhash_from_base(simhash_word_hashes(base, 1)).alias("w1"),
-    )
 
 
 def simhash_near_pairs(
@@ -1829,28 +1795,19 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-#: Labeled-component table per (applicationId, sf_dir). The CC loop is a
-#: driver-side iteration over localCheckpoint'd frames, so Spark's
-#: canonicalized-plan cache can never recognize two invocations as the
-#: same work (checkpoint RDD ids differ) — unlike the signature tables,
-#: sharing must be an explicit memo.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _jaccard_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact-Jaccard pair graph, computed
     once per (session, corpus) and shared by ``dedup_clusters`` and
-    ``dedup_cluster_representatives`` — both are views over one labeling;
-    rebuilding the pair join + CC loop per query was pure waste."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cc = _CC_CACHE.get(key)
-    if cc is None:
-        session.evict_stale(_CC_CACHE, key[0])
-        d = load_table(spark, sf_dir, "documents")
-        pairs = ngram_jaccard_pairs(d).select("id_a", "id_b")
-        cc = connected_components(pairs, "id_a", "id_b").persist()
-        _CC_CACHE[key] = cc
-    return cc
+    ``dedup_cluster_representatives`` — both are views over one labeling.
+    The CC loop iterates over localCheckpoint'd frames, so Spark's
+    canonicalized-plan cache can never recognize two invocations as the
+    same work (checkpoint RDD ids differ): sharing must be a memo."""
+
+    def build() -> DataFrame:
+        pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
+        return connected_components(pairs.select("id_a", "id_b"), "id_a", "id_b").persist()
+
+    return session.memo(spark, ("dedup.cc", sf_dir), build)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

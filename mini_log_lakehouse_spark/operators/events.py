@@ -21,49 +21,36 @@ stats skip non-matching files).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_log_lakehouse_spark import session
-from mini_log_lakehouse_spark.sources.registry import load_events_range, load_table
+from mini_log_lakehouse_spark.sources.registry import load_events_range, load_table, warm_mode
 
 #: Fixed parameters for the parameterized serving queries (events span
 #: 2024-01-01..2024-01-30; TESTDATA.md).
 DAY = "2024-01-15"
 TOP_K = 3
 
-#: Serving-layer result memoization (reference serve/app.py:12-28
-#: ``st.cache_resource``/``st.cache_data``): in warm-cache mode the
-#: hourly fact is materialized once per (session, sf_dir) and every
-#: serving query re-aggregates its ~3k rows instead of the raw events.
-#: Cold mode (the driver's correctness gate) keeps the scan-with-pushdown
-#: plans — at 100 TB a *single* cold query should prune at the scan, but
-#: a *dashboard* should serve hundreds of requests from one materialized
-#: fact; both shapes live here, switched exactly like the table cache.
-_FCT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _serving_mode() -> bool:
-    return os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
-
-
 def _serving_fct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Keyed by applicationId, not id(spark): CPython reuses freed object
-    # addresses, so an id() key can alias a stopped session's entry and
-    # hand back a DataFrame bound to a dead SparkContext.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _FCT_CACHE.get(key)
-    if df is None:
-        session.evict_stale(_FCT_CACHE, key[0])
+    """Serving-layer result memoization (reference serve/app.py:12-28
+    ``st.cache_resource``/``st.cache_data``): in warm-cache mode the
+    hourly fact is materialized once per (session, sf_dir) and every
+    serving query re-aggregates its ~3k rows instead of the raw events.
+    Cold mode (the driver's correctness gate) keeps the scan-with-pushdown
+    plans — at 100 TB a *single* cold query should prune at the scan, but
+    a *dashboard* should serve hundreds of requests from one materialized
+    fact; both shapes live here, switched exactly like the table cache."""
+
+    def build() -> DataFrame:
         # The fact is tiny (days × hours × types, ~3k rows at any scale) —
         # hold it in ONE partition so every serving re-aggregate is a
         # single task instead of a 32-way shuffle of near-empty blocks.
         df = fct_events_hourly.__wrapped__(spark, sf_dir).coalesce(1).persist()
         df.count()  # materialize eagerly so first serve isn't penalized
-        _FCT_CACHE[key] = df
-    return df
+        return df
+
+    return session.memo(spark, ("events.fct", sf_dir), build)
 
 
 def _from_serving_fct(cold_fn):
@@ -77,7 +64,7 @@ def _from_serving_fct(cold_fn):
     @functools.wraps(cold_fn)
     def wrapper(spark: SparkSession, sf_dir: str, *args, **kwargs):
         rewrite = _WARM_REWRITES.get(cold_fn.__name__)
-        if rewrite is not None and _serving_mode() and not args and not kwargs:
+        if rewrite is not None and warm_mode() and not args and not kwargs:
             return rewrite(_serving_fct(spark, sf_dir))
         return cold_fn(spark, sf_dir, *args, **kwargs)
 

@@ -25,11 +25,6 @@ from mini_log_lakehouse_spark.sources.registry import load_table
 #: pair and a type first seen late yields an insert.
 CDC_CUTOFF = "2024-01-16"
 
-#: Per-(session, sf_dir) lake roots for lakehouse_change_feed — the
-#: table build is deterministic from the corpus, so one build per
-#: session is both correct and cheap.
-_CDC_LAKES: dict[tuple[str, str], str] = {}
-
 
 def lakehouse_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change Data Feed, driver-verified end-to-end: build a lakehouse
@@ -43,10 +38,11 @@ def lakehouse_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The ``value`` measure rides as exact integer cents
     (floor(x·100 + 0.5), the money-sum discipline) so the update
-    detection never compares order-dependent double sums."""
-    import tempfile
-
+    detection never compares order-dependent double sums. The table
+    build is deterministic from the corpus, so its lake root is memoized
+    per (session, sf_dir) under the session's scratch root."""
     from mini_log_lakehouse_spark.plans.lakehouse import LakehouseTable
+    from mini_log_lakehouse_spark.session import memo, scratch_dir
 
     def fact(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
@@ -56,15 +52,15 @@ def lakehouse_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_cents"),
         )
 
-    ev = load_table(spark, sf_dir, "events")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _CDC_LAKES.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="mlls_cdc_")
+    def build() -> str:
+        ev = load_table(spark, sf_dir, "events")
+        root = scratch_dir(spark, "mlls_cdc_")
         t = LakehouseTable(spark, root, "events_cdc")
         t.write(fact(ev.filter(F.col("ts") < F.lit(CDC_CUTOFF))))   # v0
         t.merge(fact(ev), keys=["event_type"])                       # v1
-        _CDC_LAKES[key] = root
+        return root
+
+    root = memo(spark, ("extensions.cdc_lake", sf_dir), build)
     feed = LakehouseTable(spark, root, "events_cdc").change_feed(
         1, keys=["event_type"]
     )

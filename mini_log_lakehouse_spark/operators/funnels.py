@@ -409,35 +409,26 @@ def cooccurrence_edges_from(
     )
 
 
-#: Session-memoized co-occurrence edge lists, keyed by
-#: (applicationId, sf_dir): five driver queries (triangles, pagerank,
-#: communities, bfs, clustering coefficient) consume the SAME edge
-#: build — the bucket pair self-join over events is the expensive part
-#: and is deterministic, so it is computed once per (session, corpus)
-#: and handed out as a localCheckpoint'd node/edge table (the
-#: _IVF_CENTROIDS / _MERGES_CACHE discipline).
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cooccurrence_edges(
     spark: SparkSession, sf_dir: str, bucket_cap: int = COOC_BUCKET_CAP
 ) -> DataFrame:
     """Loader wrapper over cooccurrence_edges_from for the testdata
-    events table; memoized per (session, corpus) at the default cap."""
+    events table. At the default cap it is memoized per (session,
+    corpus) as a localCheckpoint'd edge table: five driver queries
+    (triangles, pagerank, communities, bfs, clustering coefficient)
+    consume the SAME edge build, and the bucket pair self-join over
+    events is the expensive, deterministic part."""
     if bucket_cap != COOC_BUCKET_CAP:
         return cooccurrence_edges_from(
             load_table(spark, sf_dir, "events"), bucket_cap=bucket_cap
         )
-    from mini_log_lakehouse_spark.session import evict_stale
+    from mini_log_lakehouse_spark.session import memo
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    edges = _EDGES_CACHE.get(key)
-    if edges is None:
-        evict_stale(_EDGES_CACHE, key[0], unpersist=False)
-        edges = _EDGES_CACHE[key] = cooccurrence_edges_from(
-            load_table(spark, sf_dir, "events")
-        ).localCheckpoint()
-    return edges
+    return memo(
+        spark,
+        ("funnels.edges", sf_dir),
+        lambda: cooccurrence_edges_from(load_table(spark, sf_dir, "events")).localCheckpoint(),
+    )
 
 
 def user_cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2411,52 +2411,6 @@ AVI_FEATURES_SCHEMA = _long_schema(
     "pos_weighted_px", "motion_abs",
 )
 
-_MEDIA_BINARY_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
-
-def _media_table(spark: SparkSession, sf_dir: str, synth) -> DataFrame:
-    """One REAL binary payload per document id, synthesized in an
-    Arrow-batched pass (at scale this column arrives from storage; here
-    the deterministic synthesizer doubles as the ground truth the
-    oracle replays). One implementation for every codec family."""
-    # narrow (doc_id) rows — the _spread re-shuffle is 8 B/row even when
-    # it engages, and the synth+decode passes downstream are the most
-    # CPU-expensive Python in the package (LZW/Huffman/inflate per doc)
-    d = _spread(load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "content": pdf["doc_id"].map(lambda i: synth(int(i))),
-                }
-            )
-
-    return d.mapInPandas(run, schema=_MEDIA_BINARY_SCHEMA)
-
-
-def _extract_features(media: DataFrame, decode, schema) -> DataFrame:
-    """``decode`` over a binary media column — map-only Arrow pass, one
-    dict per row; feature columns are derived from the schema, so codec
-    families can't drift from their declared shape."""
-    cols = [f.name for f in schema.fields if f.name != "media_id"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode(c) for c in pdf["content"]]
-            out = {"media_id": pdf["media_id"].astype("int64")}
-            for k in cols:
-                out[k] = pd.Series([f[k] for f in feats], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=schema)
-
 
 def _synth_features(
     spark: SparkSession, sf_dir: str, synth, decode, schema
@@ -2465,10 +2419,8 @@ def _synth_features(
     doc_id crosses into Python and only the integer feature row crosses
     back — the synthesized payload bytes never transit the JVM↔Python
     boundary at all (guide §4.1: you control how many columns cross and
-    how often; the split _media_table → _extract_features shape ships
-    every payload across Arrow twice). The split functions remain the
-    library surface (callers that need the media table itself);
-    the driver queries use this fused path."""
+    how often; a split synthesize-then-decode shape would ship every
+    payload across Arrow twice)."""
     cols = [f.name for f in schema.fields if f.name != "media_id"]
     d = _spread(load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id")
 
@@ -2482,54 +2434,6 @@ def _synth_features(
             yield pd.DataFrame(out)
 
     return d.mapInPandas(run, schema=schema)
-
-
-def wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_wav)
-
-
-def extract_wav_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_wav, WAV_FEATURES_SCHEMA)
-
-
-def bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_bmp)
-
-
-def extract_bmp_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_bmp, BMP_FEATURES_SCHEMA)
-
-
-def png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_png)
-
-
-def extract_png_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_png, PNG_FEATURES_SCHEMA)
-
-
-def gif_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_gif)
-
-
-def extract_gif_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_gif, GIF_FEATURES_SCHEMA)
-
-
-def jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_jpeg)
-
-
-def extract_jpeg_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_jpeg_dc, JPEG_FEATURES_SCHEMA)
-
-
-def tiff_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _media_table(spark, sf_dir, synthesize_tiff)
-
-
-def extract_tiff_features(media: DataFrame) -> DataFrame:
-    return _extract_features(media, decode_tiff, TIFF_FEATURES_SCHEMA)
 
 
 # --- driver-contract queries --------------------------------------------------

@@ -42,8 +42,6 @@ distributed Lloyd's k-means (bit-reproducible fixed-point updates).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +49,7 @@ from pyspark.sql import types as T
 
 from mini_log_lakehouse_spark import session
 from mini_log_lakehouse_spark.functions.vector import cosine
-from mini_log_lakehouse_spark.sources.registry import load_table
+from mini_log_lakehouse_spark.sources.registry import load_table, warm_mode
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -251,32 +249,31 @@ def knn_join_vectorized(
     )
 
 
-#: Query-set cache, keyed by (applicationId, sf_dir): a serving layer
-#: holds its (tiny) query vectors; re-collecting 20 rows per request
-#: added a 2-job floor to every invocation for no information gain. The
-#: applicationId key is staleness protection — if the data under a path
-#: is regenerated between sessions, a fresh session re-reads it (same
-#: idiom as events._FCT_CACHE / dedup._SIG_CACHE).
-_KNN_QUERIES: dict[tuple[str, str], list[tuple[int, list[float]]]] = {}
+def _nonempty(rows):
+    """``rows``, or None when empty: session.memo never stores None, so
+    an empty corpus (a directory that may be mid-population) is re-read
+    on the next call instead of memoized."""
+    return rows if len(rows) else None
 
 
 def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The query set is memoized per (session, sf_dir), as a serving
+    layer holds its (tiny) query vectors: re-collecting 20 rows per
+    request added a 2-job floor to every invocation."""
     e = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    queries = _KNN_QUERIES.get(key)
-    if queries is None:
-        session.evict_stale(_KNN_QUERIES, key[0], unpersist=False)
-        queries = sorted(
-            (r["vec_id"], list(r["embedding"]))
-            for r in e.filter(F.col("vec_id") < KNN_QUERY_COUNT)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        if queries:
-            # never cache an empty query set (mid-population rule —
-            # see _MAX_VEC_ID)
-            _KNN_QUERIES[key] = queries
-    return knn_join_vectorized(e, queries)
+    queries = session.memo(
+        spark,
+        ("similarity.knn_queries", sf_dir),
+        lambda: _nonempty(
+            sorted(
+                (r["vec_id"], list(r["embedding"]))
+                for r in e.filter(F.col("vec_id") < KNN_QUERY_COUNT)
+                .select("vec_id", "embedding")
+                .collect()
+            )
+        ),
+    )
+    return knn_join_vectorized(e, queries or [])
 
 
 # --- tier 3: hyperplane LSH ---------------------------------------------------
@@ -532,29 +529,21 @@ def ivf_assign_cells(
     return _append_arrow_column(df, vec_col, "cell", compute)
 
 
-#: Trained centroids per (applicationId, sf_dir) — the serving layer
-#: holds its index metadata; retraining the quantizer per request would
-#: be a bug, not a convenience. Session-keyed for the same staleness
-#: reason as _KNN_QUERIES.
-_IVF_CENTROIDS: dict[tuple[str, str, int, int], np.ndarray] = {}
-
-
 def _ivf_centroids_for(
     spark: SparkSession,
     sf_dir: str,
     e: DataFrame,
     n_cells: int,
     train_max: int,
-) -> np.ndarray:
+) -> np.ndarray | None:
     """Session-memoized coarse quantizer for an explicit (n_cells,
-    train_max) geometry — the memo key carries the geometry so the
-    fixed-layout tiers (ann_ivf_topk/IVF-PQ at 16/256) and the
-    corpus-adaptive incremental entry can coexist in one session
-    without cross-talk."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, train_max)
-    cent = _IVF_CENTROIDS.get(key)
-    if cent is None:
-        session.evict_stale(_IVF_CENTROIDS, key[0], unpersist=False)
+    train_max) geometry, or None when the training sample is empty. The
+    serving layer holds its index metadata (retraining per request would
+    be a bug); the memo key carries the geometry so the fixed-layout
+    tiers (ann_ivf_topk/IVF-PQ at 16/256) and the corpus-adaptive
+    incremental entry can coexist in one session without cross-talk."""
+
+    def train() -> np.ndarray | None:
         sample = np.array(
             [
                 list(r["embedding"])
@@ -565,16 +554,13 @@ def _ivf_centroids_for(
             ],
             dtype="float64",
         )
-        cent = ivf_train_centroids(sample, n_cells=n_cells)
-        if cent.shape[0]:
-            # never cache an EMPTY quantizer: the dir may be
-            # mid-population (same rule as _MAX_VEC_ID / _PQ_CODEBOOKS)
-            _IVF_CENTROIDS[key] = cent
-    return cent
+        return _nonempty(ivf_train_centroids(sample, n_cells=n_cells))
+
+    return session.memo(spark, ("similarity.ivf_centroids", sf_dir, n_cells, train_max), train)
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> np.ndarray:
-    """Session-memoized coarse quantizer (see _IVF_CENTROIDS): trained
+    """Session-memoized coarse quantizer (see _ivf_centroids_for): trained
     once per (session, corpus) on the driver-held sample; shared by the
     IVF-flat and IVF-PQ tiers so both probe the SAME cell structure."""
     return _ivf_centroids_for(spark, sf_dir, e, IVF_N_CELLS, IVF_TRAIN_SAMPLE)
@@ -822,52 +808,30 @@ IVF_BATCH = 32
 #: fingerprint, so a persisted index under old semantics rebuilds.
 _IVF_INDEX_VERSION = 1
 
-#: Session-memoized incremental batch (list of (vec_id, embedding)) per
-#: (applicationId, sf_dir, source fingerprint) — the batch is a pure
-#: function of the corpus (the IVF_BATCH highest vec_ids), so
-#: re-collecting it per call would re-scan the corpus for 32 rows; the
-#: comparator memoizes its query set the same way (_KNN_QUERIES). The
-#: fingerprint component makes a mid-session append miss the memo
-#: (ADVICE r14) — same invalidation the persisted index pin gets.
-_INC_BATCH: dict[tuple[str, str, str], list] = {}
-
-#: Session-memoized (max vec_id, row count) per (applicationId, sf_dir,
-#: source fingerprint): the batch cutoff and the adaptive IVF layout are
-#: both data-derived; ONE tiny agg per corpus VERSION per session serves
-#: both. The fingerprint component (r15, from the r14 ADVICE follow-up):
-#: a mid-session append must invalidate the cutoff and layout TOGETHER
-#: with the batch memo — fingerprinting only _INC_BATCH left the
-#: re-collected batch using a stale `lo`, yielding a mixed old+new batch
-#: that matches neither the pre-append state nor a fresh session.
-_MAX_VEC_ID: dict[tuple[str, str, str], tuple[int, int]] = {}
-
-
 def _embeddings_stats(
     spark: SparkSession, sf_dir: str, e: DataFrame, src_fp: str | None = None
 ) -> tuple[int, int] | None:
-    """(max vec_id, corpus row count), or None on an empty corpus (None
-    is never cached — an empty dir may be mid-population and the probe
-    is one tiny agg). ``src_fp`` lets a caller that already computed the
-    source fingerprint share it; otherwise one is computed here (a stat
-    plus a 64 KiB-tail md5 — cheap beside even the tiny agg)."""
+    """(max vec_id, corpus row count), or None on an empty corpus.
+    Memoized per (session, sf_dir, source fingerprint): the batch cutoff
+    and the adaptive IVF layout are both data-derived, so ONE tiny agg
+    per corpus VERSION per session serves both. The fingerprint makes a
+    mid-session append invalidate the cutoff and layout TOGETHER with
+    the batch memo (incremental_ann_ivf_topk) — a batch re-collected
+    against a stale cutoff would mix old and new rows and match neither
+    the pre-append state nor a fresh session. ``src_fp`` lets a caller
+    that already computed the source fingerprint share it; otherwise one
+    is computed here (a stat plus a 64 KiB-tail md5 — cheap beside even
+    the tiny agg)."""
     from mini_log_lakehouse_spark.sources.registry import _source_fingerprint
 
     if src_fp is None:
         src_fp = _source_fingerprint(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, src_fp)
-    got = _MAX_VEC_ID.get(key)
-    if got is None:
-        session.evict_stale(_MAX_VEC_ID, key[0], unpersist=False)
+
+    def stats() -> tuple[int, int] | None:
         mx, cnt = e.agg(F.max("vec_id"), F.count(F.lit(1))).first()
-        if mx is None:
-            return None
-        got = _MAX_VEC_ID[key] = (int(mx), int(cnt))
-    return got
+        return None if mx is None else (int(mx), int(cnt))
 
-
-def _embeddings_max_id(spark: SparkSession, sf_dir: str, e: DataFrame) -> int | None:
-    stats = _embeddings_stats(spark, sf_dir, e)
-    return None if stats is None else stats[0]
+    return session.memo(spark, ("similarity.embeddings_stats", sf_dir, src_fp), stats)
 
 
 def _ivf_index_fp(fingerprint: str, centroids: "np.ndarray") -> str:
@@ -885,18 +849,6 @@ def _ivf_index_fp(fingerprint: str, centroids: "np.ndarray") -> str:
         np.ascontiguousarray(centroids, dtype=np.int64).tobytes()
     ).hexdigest()[:16]
     return f"{fingerprint}:v{_IVF_INDEX_VERSION}:{centroids.shape[0]}c:{cent_id}"
-
-
-#: Warm-mode (SPARK_GRAFT_CACHE_TABLES=1, the bench contract) pin of the
-#: attached IVF cell index, keyed (applicationId, table name) — the
-#: exact policy bucketed_table applies to the fact tables: the
-#: comparator the increment is measured against reads its corpus from
-#: the load_table RAM cache, so an unpinned index would hand the
-#: comparator a disk-vs-RAM head start that is NOT the thing being
-#: compared (index-probe fraction vs full-corpus GEMM is). Cold paths
-#: (tests, driver correctness) keep the bucketed FileScan — and its
-#: plan-tested SelectedBucketsCount bucket pruning — untouched.
-_IVF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def ivf_cell_index(
@@ -941,16 +893,17 @@ def ivf_cell_index(
         ),
     )
     out = spark.table(tbl)
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
-        ck = (spark.sparkContext.applicationId, tbl)
-        got = _IVF_INDEX_CACHE.get(ck)
-        if got is None:
-            session.evict_stale(_IVF_INDEX_CACHE, ck[0])
-            # the bucketed write SORTED BY (cell) keeps cached batches
-            # cell-clustered, so the probe IN-filter still prunes via
-            # in-memory batch stats instead of SelectedBucketsCount
-            got = _IVF_INDEX_CACHE[ck] = out.persist()
-        out = got
+    if warm_mode():
+        # Warm mode pins the attached index per (session, table), the
+        # policy load_table_bucketed applies to the fact tables: the
+        # comparator the increment is measured against reads its corpus
+        # from the load_table RAM cache, so an unpinned index would hand
+        # it a disk-vs-RAM head start that is NOT the thing being
+        # compared. Cold paths keep the bucketed FileScan and its
+        # plan-tested SelectedBucketsCount pruning. The bucketed write
+        # SORTED BY (cell) keeps cached batches cell-clustered, so the
+        # probe IN-filter still prunes via in-memory batch stats.
+        out = session.memo(spark, ("similarity.ivf_index", tbl), out.persist)
     return out
 
 
@@ -996,12 +949,7 @@ def ivf_index_append(
     )
     # a pinned warm-mode copy (ivf_cell_index) predates the append and
     # would silently miss the new rows — drop it; the next attach re-pins
-    stale = _IVF_INDEX_CACHE.pop((spark.sparkContext.applicationId, tbl), None)
-    if stale is not None:
-        try:
-            stale.unpersist()
-        except Exception:
-            pass
+    session.forget(spark, ("similarity.ivf_index", tbl))
 
 
 def ann_ivf_index_topk(
@@ -1047,7 +995,7 @@ def ann_ivf_index_topk(
 
     # ``batch`` may arrive pre-collected (list of (id, vector)) — the
     # incremental entry memoizes its batch per corpus exactly like the
-    # comparator memoizes _KNN_QUERIES, so a warm call pays no extra
+    # comparator memoizes its query set, so a warm call pays no extra
     # corpus scan just to re-read a 32-row batch it already holds
     rows = (
         batch
@@ -1166,7 +1114,7 @@ def incremental_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx, cnt = stats
     ncells, train_max = _ivf_layout(cnt)
     cent = _ivf_centroids_for(spark, sf_dir, e, ncells, train_max)
-    if cent.shape[0] == 0:
+    if cent is None:
         # a non-empty corpus whose ids all sit above the training cutoff
         # (e.g. a tail shard of an append-only id space) has no training
         # sample — no quantizer means no index to probe
@@ -1180,25 +1128,23 @@ def incremental_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_tail{IVF_BATCH}",
         fp,
     )
-    # ADVICE r14 follow-through (r15): batch memo AND the stats memo
-    # above share the source fingerprint, so a mid-session append
-    # invalidates cutoff, layout, and batch together — a batch
-    # re-collected against a stale `lo` would mix old and new rows and
-    # match neither the pre-append state nor a fresh session.
-    bkey = (spark.sparkContext.applicationId, sf_dir, src_fp)
-    brows = _INC_BATCH.get(bkey)
-    if brows is None:
-        session.evict_stale(_INC_BATCH, bkey[0], unpersist=False)
-        brows = [
-            (r[0], list(r[1]))
-            for r in e.filter(F.col("vec_id") >= lo)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        if brows:
-            # never cache an empty batch (mid-population rule)
-            _INC_BATCH[bkey] = brows
-    return ann_ivf_index_topk(brows, idx, cent)
+    # The batch (the IVF_BATCH highest vec_ids) is memoized per
+    # (session, sf_dir, source fingerprint) — the same fingerprint as the
+    # stats memo above, so a mid-session append invalidates cutoff,
+    # layout and batch together.
+    brows = session.memo(
+        spark,
+        ("similarity.inc_batch", sf_dir, src_fp),
+        lambda: _nonempty(
+            [
+                (r[0], list(r[1]))
+                for r in e.filter(F.col("vec_id") >= lo)
+                .select("vec_id", "embedding")
+                .collect()
+            ]
+        ),
+    )
+    return ann_ivf_index_topk(brows or [], idx, cent)
 
 
 #: Full-corpus k-means: clusters and Lloyd iterations for the driver
@@ -1502,26 +1448,17 @@ def kmeans_oracle_sql(
         ORDER BY 1"""
 
 
-#: Session-memoized full-corpus k-means centroids (default geometry),
-#: keyed by (applicationId, sf_dir): the cluster report and SemDeDup's
-#: blocking stage consume the IDENTICAL deterministic fit — running the
-#: 5-iteration corpus loop twice per session would be pure waste.
-_KMEANS_CENTS: dict[tuple[str, str], "np.ndarray"] = {}
-
-
 def corpus_kmeans_centroids(
     spark: SparkSession, sf_dir: str, e: DataFrame
 ) -> "np.ndarray":
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _KMEANS_CENTS.get(key)
-    if cents is None:
-        session.evict_stale(_KMEANS_CENTS, key[0], unpersist=False)
-        _, cents, _ = kmeans_fit(e)
-        if cents.shape[0]:
-            # never cache an empty-corpus model (mid-population rule —
-            # see _MAX_VEC_ID): a later non-empty read must refit
-            _KMEANS_CENTS[key] = cents
-    return cents
+    """Full-corpus k-means centroids (default geometry), memoized per
+    (session, sf_dir): the cluster report and SemDeDup's blocking stage
+    consume the IDENTICAL deterministic fit. An empty corpus gives the
+    empty (0, 0) model, refit on the next call."""
+    cents = session.memo(
+        spark, ("similarity.kmeans", sf_dir), lambda: _nonempty(kmeans_fit(e)[1])
+    )
+    return np.zeros((0, 0), dtype=np.int64) if cents is None else cents
 
 
 def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1679,36 +1616,29 @@ def pq_encode(
     return vectors.select("vec_id", vec_col).mapInArrow(run, schema=schema)
 
 
-#: Trained PQ codebooks per (applicationId, sf_dir) — same serving-
-#: layer memoization as _IVF_CENTROIDS: the code table and the IVF-PQ
-#: searcher share one set of codebooks.
-_PQ_CODEBOOKS: dict[tuple[str, str], list["np.ndarray"]] = {}
-
-
 def _pq_codebooks(
     spark: SparkSession, sf_dir: str, e: DataFrame
-) -> list["np.ndarray"]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CODEBOOKS.get(key)
-    if books is None:
-        session.evict_stale(_PQ_CODEBOOKS, key[0], unpersist=False)
-        probe = e.select("embedding").first()
-        if probe is None:
-            # empty corpus: no codebooks to train. Not cached — an empty
-            # dir may be mid-population; the probe costs one cheap job.
-            return None
-        dim = len(probe[0])
-        # honest gate: pq_oracle_sql() bakes dim=64 into the unrolled
-        # CTEs at import time; a regenerated corpus with another width
-        # must fail HERE with the cause named, not hash-red mysteriously
-        if dim != PQ_ORACLE_DIM:
-            raise AssertionError(
-                f"embeddings dim {dim} != PQ_ORACLE_DIM {PQ_ORACLE_DIM}; "
-                "regenerate the PQ oracle (pq_oracle_sql(dim=...)) before "
-                "trusting the hash gate on this corpus"
-            )
-        books = _PQ_CODEBOOKS[key] = pq_train(e.select("vec_id", "embedding"), dim)
-    return books
+) -> list["np.ndarray"] | None:
+    """Trained PQ codebooks per (session, sf_dir), or None on an empty
+    corpus: the code table and the IVF-PQ searcher share one set."""
+    return session.memo(spark, ("similarity.pq_codebooks", sf_dir), lambda: _pq_train_corpus(e))
+
+
+def _pq_train_corpus(e: DataFrame) -> list["np.ndarray"] | None:
+    probe = e.select("embedding").first()
+    if probe is None:
+        return None
+    dim = len(probe[0])
+    # honest gate: pq_oracle_sql() bakes dim=64 into the unrolled
+    # CTEs at import time; a regenerated corpus with another width
+    # must fail HERE with the cause named, not hash-red mysteriously
+    if dim != PQ_ORACLE_DIM:
+        raise AssertionError(
+            f"embeddings dim {dim} != PQ_ORACLE_DIM {PQ_ORACLE_DIM}; "
+            "regenerate the PQ oracle (pq_oracle_sql(dim=...)) before "
+            "trusting the hash gate on this corpus"
+        )
+    return pq_train(e.select("vec_id", "embedding"), dim)
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,13 +10,11 @@ grouped.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from mini_log_lakehouse_spark import session as session_mod
+from mini_log_lakehouse_spark import session
 from mini_log_lakehouse_spark.functions.text import (
     BPE_ISH_PATTERN,
     avg_token_len,
@@ -28,7 +26,7 @@ from mini_log_lakehouse_spark.functions.text import (
     token_shingles,
     ws_tokens,
 )
-from mini_log_lakehouse_spark.sources.registry import load_table
+from mini_log_lakehouse_spark.sources.registry import load_table, warm_mode
 
 #: Tiny per-language lexicons for the n-gram/lexicon language-ID heuristic.
 #: Real multilingual function words; deterministic, no model download.
@@ -39,11 +37,6 @@ LANG_LEXICONS: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "les", "de", "et", "un", "une", "est", "que", "pour"),
     "zh": ("的", "是", "了", "在", "和", "有", "我", "不", "人", "这"),
 }
-
-
-#: Memoized silver documents per (session, sf_dir) — see
-#: load_documents_staged.
-_STAGED_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _docs(spark, sf_dir: str):
@@ -72,38 +65,27 @@ def load_documents_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver table; cold paths get the same schema lazily so correctness
     runs are identical either way.
     """
-    cache = os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
-    # applicationId, not id(spark): CPython reuses freed addresses, so an
-    # id() key can alias a stopped session's entry (same lesson as
-    # events._FCT_CACHE).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if cache and key in _STAGED_CACHE:
-        return _STAGED_CACHE[key]
-    d = _docs(spark, sf_dir).withColumn(
-        "n_tokens", token_count(F.col("text")).cast("long")
-    )
-    if cache:
-        session_mod.evict_stale(_STAGED_CACHE, key[0])
-        d = d.persist()
-        _STAGED_CACHE[key] = d
-    return d
 
+    def staged() -> DataFrame:
+        return _docs(spark, sf_dir).withColumn(
+            "n_tokens", token_count(F.col("text")).cast("long")
+        )
 
-#: Serving-layer micro-fact for corpus stats, the documents twin of
-#: events._serving_fct: (lang, source)-grain counts/sums (~|langs|x
-#: |sources| rows at ANY corpus size), materialized once per (session,
-#: sf_dir) in warm-cache mode. Every stats request then re-aggregates a
-#: handful of rows in one task instead of re-scanning the silver table —
-#: at 100 TB the fact would be a written gold table; here it stands in
-#: as a 1-partition persisted frame.
-_DOC_FCT_CACHE: dict[tuple[str, str], DataFrame] = {}
+    if not warm_mode():
+        return staged()
+    return session.memo(spark, ("textstats.staged", sf_dir), lambda: staged().persist())
 
 
 def _doc_serving_fct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DOC_FCT_CACHE.get(key)
-    if df is None:
-        session_mod.evict_stale(_DOC_FCT_CACHE, key[0])
+    """Serving-layer micro-fact for corpus stats, the documents twin of
+    events._serving_fct: (lang, source)-grain counts/sums (~|langs|x
+    |sources| rows at ANY corpus size), materialized once per (session,
+    sf_dir) in warm-cache mode. Every stats request then re-aggregates a
+    handful of rows in one task instead of re-scanning the silver table —
+    at 100 TB the fact would be a written gold table; here it stands in
+    as a 1-partition persisted frame."""
+
+    def build() -> DataFrame:
         df = (
             load_documents_staged(spark, sf_dir)
             .groupBy("lang", "source")
@@ -116,8 +98,9 @@ def _doc_serving_fct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         df.count()  # eager, so the first serve isn't penalized
-        _DOC_FCT_CACHE[key] = df
-    return df
+        return df
+
+    return session.memo(spark, ("textstats.doc_fct", sf_dir), build)
 
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,7 +111,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-fact instead (value-identical: the fact's grain partitions the
     documents, and all inputs are integer sums); the driver's cold
     correctness gate keeps the silver-scan plan."""
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
+    if warm_mode():
         fct = _doc_serving_fct(spark, sf_dir)
         return (
             fct.groupBy("lang")

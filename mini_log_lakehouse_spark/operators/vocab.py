@@ -158,25 +158,19 @@ def learn_bpe_merges(
     return merges
 
 
-#: Memoized learned merge tables per (session, corpus, n_merges): the
-#: merge table is a pure function of the corpus, and both driver queries
-#: (doc_bpe_merge_table, doc_bpe_encode) need it — learning it twice
-#: would double the iterative vocab loop for no reason. Values are plain
-#: Python lists (no DataFrame handles), so eviction never unpersists.
-_MERGES_CACHE: dict[tuple[str, str, int], list[tuple[str, str]]] = {}
-
-
 def corpus_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_N_MERGES
 ) -> list[tuple[str, str]]:
-    from mini_log_lakehouse_spark.session import evict_stale
+    """The learned merge table, memoized per (session, corpus,
+    n_merges): it is a pure function of the corpus, and both driver
+    queries (doc_bpe_merge_table, doc_bpe_encode) need it."""
+    from mini_log_lakehouse_spark.session import memo
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    evict_stale(_MERGES_CACHE, key[0], unpersist=False)
-    if key not in _MERGES_CACHE:
-        d = load_table(spark, sf_dir, "documents")
-        _MERGES_CACHE[key] = learn_bpe_merges(d, n_merges=n_merges)
-    return _MERGES_CACHE[key]
+    return memo(
+        spark,
+        ("vocab.merges", sf_dir, n_merges),
+        lambda: learn_bpe_merges(load_table(spark, sf_dir, "documents"), n_merges=n_merges),
+    )
 
 
 def doc_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,9 +21,12 @@ configuration chosen for correctness parity with a DuckDB oracle and for
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable confs applied both to sessions we build and to foreign
 #: sessions handed to us (e.g. the verification driver's).
@@ -122,48 +125,84 @@ def spread_cpu(df, key: str):
     return df.repartition(n, F.col(key))
 
 
-def evict_stale(cache: dict, app_id: str, unpersist: bool = True) -> None:
-    """Drop cache entries from sessions other than ``app_id``.
+#: Per-session memo: ``(applicationId, *key)`` → value (see memo).
+_MEMO: dict[tuple, object] = {}
 
-    Session-scoped memo dicts key their entries by
-    ``(applicationId, ...)``; one session is live at a time in this
-    codebase, so on insert each cache drops entries belonging to stopped
-    sessions — a long-lived process cycling sessions otherwise
-    accumulates dead DataFrame handles forever. DataFrame-valued caches
-    also unpersist (best-effort: the owning context may already be
-    stopped, which is exactly the case being cleaned up)."""
-    for key in [k for k in cache if k[0] != app_id]:
-        value = cache.pop(key)
-        if unpersist:
-            try:
-                value.unpersist()
-            except Exception:
-                pass
+#: applicationId → that session's scratch root (see scratch_dir).
+_SCRATCH: dict[str, str] = {}
+
+
+def _unpersist(value) -> None:
+    """Best-effort: the owning context may already be stopped, which is
+    the case being cleaned up."""
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass
+
+
+def _drop_sessions(keep: str | None) -> None:
+    """Drop the memo entries and scratch roots of every session but
+    ``keep`` (all of them for None). Iterates over ``list()`` snapshots:
+    the ANN recall report memoizes from worker threads."""
+    for key in [k for k in list(_MEMO) if k[0] != keep]:
+        _unpersist(_MEMO.pop(key, None))
+    for app in [a for a in list(_SCRATCH) if a != keep]:
+        shutil.rmtree(_SCRATCH.pop(app), ignore_errors=True)
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """``build()``, computed once per session per ``key``.
+
+    Entries are keyed by applicationId, never by the session object's
+    ``id()``: CPython reuses freed addresses, so an id key can alias a
+    stopped session's entry. One session is live at a time, so an insert drops every other
+    session's entries (a long-lived process cycling sessions would
+    otherwise accumulate dead handles). ``None`` is never stored: a
+    build returns None for an empty corpus, which may be a directory
+    still being populated, and the next call builds again."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full in _MEMO:
+        return _MEMO[full]
+    value = build()
+    if value is not None:
+        _drop_sessions(full[0])
+        _MEMO[full] = value
+    return value
+
+
+def forget(spark: SparkSession, key: tuple) -> None:
+    """Drop one memo entry, unpersisting it if it is a DataFrame."""
+    _unpersist(_MEMO.pop((spark.sparkContext.applicationId, *key), None))
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory under this session's scratch root. The root
+    goes with the session's memo entries (a later session's first insert,
+    release_corpus_caches) and at interpreter exit."""
+    app = spark.sparkContext.applicationId
+    if app not in _SCRATCH:
+        _SCRATCH[app] = tempfile.mkdtemp(prefix="mlls_session_")
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH[app])
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    for root in _SCRATCH.values():
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def release_corpus_caches(spark: SparkSession) -> None:
-    """Unpin every persisted artifact and clear the per-corpus memo
-    dicts — for callers that switch to a DIFFERENT corpus in the same
-    session (the bench's scaled legs): the previous corpus's pinned
-    tables/signatures will never be read again, and at the 100× leg the
-    accumulated pins from earlier legs measurably pressure storage
-    memory. The memo dicts must clear together with the cache — a memo
-    returning an unpersisted DataFrame would silently lose warm-mode
-    caching for the rest of the session."""
-    from mini_log_lakehouse_spark.operators import dedup, similarity, textstats, vocab
-    from mini_log_lakehouse_spark.sources import registry
-
-    for cache in (
-        registry._TABLE_CACHE,
-        registry._BUCKETED_CACHE,
-        dedup._SIG_CACHE,
-        dedup._CC_CACHE,
-        textstats._STAGED_CACHE,
-        textstats._DOC_FCT_CACHE,
-        vocab._MERGES_CACHE,
-        similarity._IVF_INDEX_CACHE,
-    ):
-        cache.clear()
+    """Forget every memo entry, remove every scratch root and unpin
+    every persisted artifact — for callers that switch to a DIFFERENT
+    corpus in the same session (the bench's scaled legs): the previous
+    corpus's pinned tables/signatures will never be read again, and at
+    the 100× leg the accumulated pins from earlier legs measurably
+    pressure storage memory. The memo must clear together with the
+    cache — a memo returning an unpersisted DataFrame would silently
+    lose warm-mode caching for the rest of the session."""
+    _drop_sessions(None)
     spark.catalog.clearCache()
 
 

@@ -25,7 +25,6 @@ beyond-reference interchange surface next to JSONL.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,22 +100,17 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     )
 
 
-#: One materialized export per (session, sf_dir, format).
-_EXPORT_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _export(spark: SparkSession, sf_dir: str, fmt: str, write) -> str:
-    from mini_log_lakehouse_spark.session import evict_stale
+    """One materialized export per (session, sf_dir, format), under the
+    session's scratch root."""
+    from mini_log_lakehouse_spark.session import memo, scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    evict_stale(_EXPORT_CACHE, key[0], unpersist=False)
-    if key not in _EXPORT_CACHE:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix=f"{fmt}_export_"), "documents"
-        )
+    def build() -> str:
+        path = os.path.join(scratch_dir(spark, f"{fmt}_export_"), "documents")
         write(path)
-        _EXPORT_CACHE[key] = path
-    return _EXPORT_CACHE[key]
+        return path
+
+    return memo(spark, ("formats.export", sf_dir, fmt), build)
 
 
 def documents_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,7 +28,6 @@ beyond-reference LLM-pipeline surface.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,26 +71,20 @@ def read_jsonl(
     return spark.read.schema(schema).json(path)
 
 
-#: One materialized JSONL export per (session, sf_dir) — the export is
-#: deterministic from the corpus, so a session never needs two copies.
-_EXPORT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _exported_documents(spark: SparkSession, sf_dir: str) -> str:
-    from mini_log_lakehouse_spark.session import evict_stale
+    """One JSONL export per (session, sf_dir), under the session's
+    scratch root — the export is deterministic from the corpus, so a
+    session never needs two copies."""
+    from mini_log_lakehouse_spark.session import memo, scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_stale(_EXPORT_CACHE, key[0], unpersist=False)
-    if key not in _EXPORT_CACHE:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="jsonl_export_"), "documents"
-        )
-        d = load_table(spark, sf_dir, "documents")
+    def build() -> str:
+        path = os.path.join(scratch_dir(spark, "jsonl_export_"), "documents")
         # partition by lang: the Hive layout readers prune on (and the
         # partition column round-trips through the directory name)
-        write_jsonl(d, path, partition_by=("lang",))
-        _EXPORT_CACHE[key] = path
-    return _EXPORT_CACHE[key]
+        write_jsonl(load_table(spark, sf_dir, "documents"), path, partition_by=("lang",))
+        return path
+
+    return memo(spark, ("jsonl.export", sf_dir), build)
 
 
 def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mini_log_lakehouse_spark.session import default_parallelism, tune
+from mini_log_lakehouse_spark.session import default_parallelism, memo, scratch_dir, tune
 from mini_log_lakehouse_spark.sources.logs import parse_lines
 
 #: Target SOURCE bytes per streaming state partition. Every shuffle
@@ -355,14 +355,6 @@ def streaming_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 _APPEND_LATE_RESIDUE = 3
 
 
-#: Memoized replay corpora keyed by (applicationId, sf_dir) →
-#: (replay_dir, n_batches, n_late_groups): the split-write and the two
-#: scalar jobs run ONCE per corpus per session — without this, each of
-#: the two output-mode entries (plus their tests) re-writes a complete
-#: copy of the events table into a fresh temp dir per call.
-_REPLAY_CACHE: dict[tuple[str, str], tuple[str, int, int]] = {}
-
-
 def _weekly_replay(spark: SparkSession, sf_dir: str):
     """Shared out-of-order replay construction for the output-mode
     contract entries (streaming_append_hourly / streaming_update_hourly):
@@ -372,7 +364,9 @@ def _weekly_replay(spark: SparkSession, sf_dir: str):
     file, modification-time order pinned via os.utime so
     maxFilesPerTrigger=1 replays one file per microbatch. The written
     corpus is memoized per (session, sf_dir) and shared by both
-    entries; each call builds a fresh readStream over it.
+    entries (the split-write and the two scalar jobs run ONCE per
+    corpus per session, under the session's scratch root); each call
+    builds a fresh readStream over it.
 
     Returns (stream DataFrame, n_batches, n_late_groups) where
     n_late_groups is the late slice's distinct (hour-window, event_type)
@@ -380,16 +374,16 @@ def _weekly_replay(spark: SparkSession, sf_dir: str):
     stateful aggregate's late filter runs AFTER the batch-local partial
     aggregation (50 late rows at sf0.01 report 40 dropped = their 40
     distinct hour/type groups)."""
-    import tempfile
+    tune(spark)
+    replay_dir, n_batches, n_late_groups = memo(
+        spark, ("ingest.weekly_replay", sf_dir), lambda: _write_replay(spark, sf_dir)
+    )
+    return _replay_stream(spark, replay_dir), n_batches, n_late_groups
 
+
+def _write_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     from mini_log_lakehouse_spark.sources.registry import load_table
 
-    tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REPLAY_CACHE.get(key)
-    if cached is not None:
-        replay_dir, n_batches, n_late_groups = cached
-        return _replay_stream(spark, replay_dir), n_batches, n_late_groups
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "user_id")
     min_day = ev.agg(F.min(F.to_date("ts"))).first()[0]  # scalar, model-sized
     late = (F.to_date("ts") == F.lit(min_day)) & F.coalesce(
@@ -398,7 +392,7 @@ def _weekly_replay(spark: SparkSession, sf_dir: str):
     week = F.floor(
         F.datediff(F.to_date("ts"), F.lit(min_day)) / F.lit(7)
     ).cast("int")
-    replay_dir = tempfile.mkdtemp(prefix="weekly_replay_")
+    replay_dir = scratch_dir(spark, "weekly_replay_")
     # one partitioned write job: batch id = week for kept rows, a
     # sentinel ordering the late slice LAST; repartition on the batch id
     # so each directory holds exactly ONE file (one file == one
@@ -436,8 +430,7 @@ def _weekly_replay(spark: SparkSession, sf_dir: str):
         .distinct()
         .count()
     )
-    _REPLAY_CACHE[key] = (replay_dir, n_batches, n_late_groups)
-    return _replay_stream(spark, replay_dir), n_batches, n_late_groups
+    return replay_dir, n_batches, n_late_groups
 
 
 def _replay_stream(spark: SparkSession, replay_dir: str) -> DataFrame:

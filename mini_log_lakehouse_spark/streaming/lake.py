@@ -64,18 +64,15 @@ def stream_fct_maintenance(
     )
 
 
-def stream_dedup_events(
-    spark: SparkSession,
-    events_dir: str,
-    key: str = "event_id",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exactly-once-per-key event stream within the watermark horizon:
-    duplicates of ``key`` arriving within ``watermark`` of each other are
-    dropped; state for keys older than the horizon is evicted. Runs to
+def stream_dedup_events(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Exactly-once-per-``event_id`` event stream within a 2-hour
+    watermark horizon: duplicates arriving within 2 hours of each other
+    are dropped; state for ids older than the horizon is evicted. Runs to
     completion into a memory sink and returns the deduped table."""
     tune(spark)
     ev = events_stream(spark, events_dir)
-    deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
+    deduped = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
     out, _ = drain(deduped, "stream_dedup_events_result", "append")
     return out

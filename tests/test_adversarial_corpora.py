@@ -639,14 +639,25 @@ def test_doc_entry_matches_oracle_with_null_text(spark, nulltext_sf_dir, name):
     )
 
 
-def test_collapse_path_engaged_on_dup_corpus(spark, dup_sf_dir):
+def test_collapse_path_engaged_on_dup_corpus(spark, dup_sf_dir, monkeypatch):
     """The dup corpus must actually flip the minhash collapse pre-pass
-    ON (the code path this file exists to cover). Runs the entry, then
-    inspects the memoized decision."""
-    from mini_log_lakehouse_spark.operators import dedup
+    ON (the code path this file exists to cover). Runs the entry and
+    reads the (collapse?, n_keys) decision it gets from session.memo —
+    computed here or memoized by an earlier test in the session."""
+    from mini_log_lakehouse_spark import session
 
+    decisions = []
+    real_memo = session.memo
+
+    def spy(spark_, key, build):
+        value = real_memo(spark_, key, build)
+        if key[0] == "dedup.collapse":
+            decisions.append(value)
+        return value
+
+    monkeypatch.setattr(session, "memo", spy)
     QUERIES["dedup_minhash_pairs"](spark, dup_sf_dir).collect()
-    assert any(v[0] for v in dedup._COLLAPSE_CACHE.values()), (
+    assert decisions and any(collapse for collapse, _ in decisions), (
         "no corpus engaged the collapse pre-pass — raise the dup-class "
         "size here or the coverage of the representatives path is gone"
     )

@@ -74,7 +74,7 @@ def test_comparables_and_baselines_run_before_any_cache_bearing_query(
         lambda *a, **k: (calls.append("DUCKDB"), {"q_a": 0.1, "q_b": 0.1})[1],
     )
     monkeypatch.setattr(
-        bench, "_drop_pipeline_caches", lambda: calls.append("DROP")
+        bench, "_drop_pipeline_caches", lambda spark: calls.append("DROP")
     )
 
     results, cold, baseline, out_rows, collect_once = bench._bench_leg(

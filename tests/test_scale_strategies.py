@@ -315,24 +315,26 @@ def test_table_cache_cap_skips_persist_for_big_sources(spark, sf_dir, monkeypatc
     r10 sf30 contamination came from pinning the 3 GB lineitem, whose
     near-full heap turned every GC into a multi-second stall under OTHER
     queries' timings. Below the cap tables persist as before."""
+    from mini_log_lakehouse_spark.session import forget
     from mini_log_lakehouse_spark.sources import registry
 
     monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", "1")
+    key = ("registry.table", sf_dir, "lineitem")
     # cap below lineitem's size -> must not persist
     monkeypatch.setattr(registry, "_TABLE_CACHE_MAX_BYTES", 1)
-    registry._TABLE_CACHE.clear()
+    forget(spark, key)
     df = registry.load_table(spark, sf_dir, "lineitem")
     assert df.storageLevel.useMemory is False
     # memoized anyway (skip the size walk on repeat loads)
     assert registry.load_table(spark, sf_dir, "lineitem") is df
     # cap above -> persists, and serves the same rows
     monkeypatch.setattr(registry, "_TABLE_CACHE_MAX_BYTES", 1 << 40)
-    registry._TABLE_CACHE.clear()
+    forget(spark, key)
     cached = registry.load_table(spark, sf_dir, "lineitem")
     assert cached.storageLevel.useMemory is True
     assert cached.count() == df.count()
     cached.unpersist()
-    registry._TABLE_CACHE.clear()
+    forget(spark, key)
 
 
 def test_bucketed_table_reattaches_across_sessions(spark, sf_dir, monkeypatch):
@@ -343,6 +345,7 @@ def test_bucketed_table_reattaches_across_sessions(spark, sf_dir, monkeypatch):
     zero-exchange plan, same rows — instead of re-running the CTAS."""
     import os
 
+    from mini_log_lakehouse_spark.session import forget
     from mini_log_lakehouse_spark.sources import registry
 
     monkeypatch.setenv("SPARK_GRAFT_BUCKETED", "1")
@@ -376,7 +379,7 @@ def test_bucketed_table_reattaches_across_sessions(spark, sf_dir, monkeypatch):
     assert os.path.exists(os.path.join(loc, "_SUCCESS")), (
         "external bucketed table files must survive DROP TABLE"
     )
-    registry._BUCKETED_CACHE.clear()
+    forget(spark, ("registry.bucketed", sf_dir, name))
 
     df2 = registry.load_table_bucketed(spark, sf_dir, name, key)
     files_after = {
@@ -394,7 +397,7 @@ def test_bucketed_table_reattaches_across_sessions(spark, sf_dir, monkeypatch):
     # cleanup for other tests
     df2.unpersist()
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    registry._BUCKETED_CACHE.clear()
+    forget(spark, ("registry.bucketed", sf_dir, name))
     import shutil
 
     shutil.rmtree(loc, ignore_errors=True)
