@@ -1,50 +1,49 @@
-"""Benchmark harness (driver contract): runs the headline queries at
-$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+"""Benchmark harness: times the headline queries at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] against
+DuckDB on the same parquet, then on 10×, 100× and 300× replicas of it
+(the 300× leg runs only HEADLINE_HEAVY), and prints ONE JSON line:
 
     {"metric": "headline_query_median_total", "value": total_sec,
-     "unit": "sec", "queries": {name: median_sec, ...},
-     "queries_cold": {...}, "sf": ..., "baseline_total": ...,
-     "scaled": {...}, "scaled_100": {...}, "detail": "BENCH_DETAIL.json"}
+     "unit": "sec", "sf": ..., "iters": ..., "ratio_total": ...,
+     "iso_ratio_total": ..., "baseline_total": ...,
+     "queries": {name: median_sec}, "host": {cores, mem_gb, load1},
+     "scaled": {factor, sf, value, ratio_total, iso_ratio_total,
+                q: {name: median_sec}},
+     "scaled_100": {...}, "scaled_300": {...},
+     "detail": "BENCH_DETAIL.json"}
 
-The driver captures a bounded tail of stdout (~2000 chars; round 3's
-full-precision line outgrew it and the bench artifact recorded
-``parsed: null``), so the printed line is a COMPACT summary: seconds at
-2 decimals and per-query DuckDB baselines folded into per-leg
-``baseline_total``. The full-precision payload — per-query baselines,
-4-decimal timings, per-leg cold numbers — is written next to this file
-as ``BENCH_DETAIL.json`` in the same structure prior rounds printed.
+A leg the host has no disk for is ``{"skipped": "<needed>/<free>"}``.
+Seconds are at 2 decimals and the per-query maps hold only HEADLINE
+names, so the line's length has a fixed maximum under LINE_BUDGET. The
+full payload — per-query baselines and ratios, 4-decimal timings,
+isolation blocks, cold and collect()-timed numbers, corpus profiles and
+incremental blocks — is written next to this file as
+``BENCH_DETAIL.json``.
 
-Method mirrors the reference's README harness shape (warm-ups + N timed
+Method mirrors the reference's README harness (warm-ups + N timed
 iterations; reference README.md:196-215) applied per query, reported as
-the MEDIAN (a single GC pause in a low-iteration run would otherwise
-dominate; see time_fn). The ``baseline`` key holds DuckDB timings of the
-oracle SQL for the same queries on the same parquet — the BASELINE.md
-"within 2×" target is checked as value vs baseline, per query.
+the MEDIAN (see time_fn). The ``baseline`` key holds DuckDB timings of
+the oracle SQL for the same queries on the same parquet — the
+BASELINE.md "within 2×" target is checked as value vs baseline, per
+query.
 
 Warm-cache scope: input tables are cached (SPARK_GRAFT_CACHE_TABLES),
-and the MinHash pipeline's persisted signature table additionally
-survives across iterations via Spark's canonicalized-plan cache lookup —
-warm iterations of dedup_minhash_pairs time the banding join over
-precomputed signatures, which is the production shape (signatures are
-write-once artifacts; see dedup.minhash_candidate_pairs). So the scope
-is visible in the artifact, ``queries_cold`` reports the same query
-with the signature cache dropped first (cold pipeline, warm input
-tables): the full hash→band→verify cost per leg. Its DuckDB baseline
-is skipped anyway (BASELINE_SKIP), so no ratio is claimed against an
-engine doing the hashing per run.
+and the MinHash pipeline's persisted signature table survives across
+iterations, so warm iterations of dedup_minhash_pairs time the banding
+join over precomputed signatures (signatures are write-once artifacts;
+see dedup.minhash_candidate_pairs). ``queries_cold`` in the detail file
+reports the same query with the signature cache dropped first: the full
+hash→band→verify cost per leg. Its DuckDB baseline is skipped
+(BASELINE_SKIP), so no ratio is claimed against an engine doing the
+hashing per run.
 
-Two scaled legs (10× and 100× of the input, semantics-preserving — see
-sources/scaleup.py) show how the Spark/DuckDB ratio behaves as the
-per-job floor amortizes; a genuine plan defect would show as a query's
-ratio RISING from the 10× to the 100× leg. At 100× the scale-up's
-Caesar-shift alphabet wraps (26 letters), so cross-replica exact
-duplicate documents appear — realistic for a dedup corpus (mirrors,
-boilerplate). The MinHash pipeline collapses exact-duplicate classes to
-one representative before LSH (see dedup.minhash_candidate_pairs), so
-quadratic-size duplicate classes cost one signature each plus a cheap
-pair expansion — measured 189 s → ~8 s warm on the 100× leg; noted so
-the pair counts are not mistaken for drift.
+The scaled legs (semantics-preserving — see sources/scaleup.py) show how
+the Spark/DuckDB ratio behaves as the per-job floor amortizes; a plan
+defect shows as a query's ratio RISING with the factor. At 100× the
+scale-up's Caesar-shift alphabet wraps (26 letters), so cross-replica
+exact duplicate documents appear; the MinHash pipeline collapses each
+exact-duplicate class to one representative before LSH, so the pair
+counts grow without the cost growing quadratically.
 """
 
 from __future__ import annotations
@@ -59,7 +58,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mini_log_lakehouse_spark.entry_registry import ORACLES, QUERIES  # noqa: E402
-from mini_log_lakehouse_spark.session import get_spark  # noqa: E402
+from mini_log_lakehouse_spark.session import default_parallelism, get_spark  # noqa: E402
 
 #: Headline queries: the flagship serving shape, the scan-heavy aggregate,
 #: the shuffle-heavy join, a window, text analysis, fuzzy dedup, ANN, and
@@ -87,43 +86,32 @@ COLD_ALSO = ("dedup_minhash_pairs",)
 BASELINE_SKIP = frozenset({"dedup_minhash_pairs", "dedup_simhash_pairs"})
 
 WARMUP = 1
-ITERS = int(os.environ.get("BENCH_ITERS", "5"))
+ITERS = 5
 
 #: Scaled legs: replicate the sf dir this many × and re-run the headline
-#: set with fewer iters. Disable with BENCH_SCALED=0 / BENCH_SCALED_100=0.
+#: set. A factor of 0 or 1 disables the leg.
 SCALE_FACTOR = int(os.environ.get("BENCH_SCALED", "10"))
 SCALE_FACTOR_100 = int(os.environ.get("BENCH_SCALED_100", "100"))
-#: Third decade (sf30 from the sf0.1 base, ~5 GB on disk): VERDICT r7
-#: ask 6 — one more relative decade for the three HEAVIEST queries only
-#: (the floor-dominated sub-second rows prove nothing new at sf30, the
-#: heavy rows are where a plan defect would finally dominate the
-#: per-job floor). Fewer iterations: at this size a single run is
-#: seconds, not floor-noise. Disable with BENCH_SCALED_300=0.
+#: The 300× leg (sf30 from the sf0.1 base, ~5 GB on disk) runs only the
+#: heavy rows, where a plan defect would dominate the per-job floor, plus
+#: the two sub-second rows whose ratio should keep falling with scale.
 SCALE_FACTOR_300 = int(os.environ.get("BENCH_SCALED_300", "300"))
 HEADLINE_HEAVY = (
     "tpch_q1_pricing_summary",
     "top_customers_by_revenue",
     "dedup_minhash_pairs",
-    # the floor-flagged >2x rows ride along (sub-second cost): if their
-    # ratios keep falling with the decade, the floor-row account is
-    # confirmed with data rather than argued. top3 was confirmed at r8
-    # (0.83x at sf30); errors_by_type is the last >2x row without a
-    # largest-scale point (VERDICT r8 ask 2).
     "top3_customers_per_nation",
     "errors_by_type",
 )
-ITERS_300 = int(os.environ.get("BENCH_ITERS_300", "3"))
-#: 5 timed iterations at the scaled legs (was 3): the sub-second rows
-#: (top3, errors_by_type) wobbled 2-3.6x across rounds at 3 iters —
-#: the median of 5 plus the isolation re-runs below pins them.
-ITERS_SCALED = int(os.environ.get("BENCH_ITERS_SCALED", "5"))
-#: The scaled legs need 2 warmups, not 1: whole-stage-codegen JIT takes a
-#: couple of executions to reach steady state on the bigger plans
-#: (measured: 2.6 → 1.7 → 1.45 → 1.23s on the same query), and with only
-#: 3 measured iterations a half-warm first run drags the median. Both
-#: engines are timed warm — this reports steady-state throughput, the
-#: declared method.
-WARMUP_SCALED = int(os.environ.get("BENCH_WARMUP_SCALED", "2"))
+#: At sf30 one run takes seconds, so three iterations are not floor noise.
+ITERS_300 = 3
+#: The sub-second rows at the scaled legs need the median of 5.
+ITERS_SCALED = 5
+#: Whole-stage-codegen JIT takes a couple of executions to reach steady
+#: state on the bigger plans (measured: 2.6 → 1.7 → 1.45 → 1.23 s on the
+#: same query), so the scaled legs warm up twice; both engines are timed
+#: warm.
+WARMUP_SCALED = 2
 
 
 def time_fn(fn, warmup: int = WARMUP, iters: int = ITERS) -> float:
@@ -265,24 +253,23 @@ def bench_cache_bearing(spark, sf_dir: str, iters: int, warmup: int, names):
     return results, cold, out_rows, collect_once
 
 
-#: DuckDB gets the SAME steady-state discipline as Spark at every leg:
-#: 2 warm-ups (page cache + its own plan cache) and median of >=5 timed
-#: iterations. Round-3/4 artifacts showed sub-second baselines swinging
-#: up to 16x between rounds (errors_by_type sf10: 0.350s vs 0.022s) when
-#: the scaled legs timed DuckDB with 1 warmup / 3 iters while Spark got
-#: 2 / 3 — the ratio columns oscillated for baseline reasons, not Spark
-#: reasons.
+#: DuckDB gets the same steady-state discipline as Spark at every leg:
+#: 2 warm-ups (page cache + its own plan cache) and the median of >=5
+#: timed iterations; with fewer, sub-second baselines swing by up to 16x
+#: and the ratios move for baseline reasons, not Spark reasons.
 BASELINE_WARMUP = 2
 BASELINE_MIN_ITERS = 5
 
 
 def bench_duckdb(sf_dir: str, names, iters: int = ITERS) -> dict[str, float]:
+    """DuckDB medians of the oracle SQL on ``sf_dir``, on the same core
+    count Spark's local master gets."""
     import duckdb
 
     from mini_log_lakehouse_spark.sources.registry import TABLES
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}")
+    con.execute(f"SET threads TO {default_parallelism()}")
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):  # scaled tables are parquet directories
@@ -318,29 +305,24 @@ def _with_ratios(leg: dict) -> dict:
     return leg
 
 
-#: Isolation re-runs at the LARGEST leg: each of these queries gets a
-#: dedicated back-to-back block (ISO_ITERS medians for both engines,
-#: nothing interleaved) appended to the leg as ``isolation`` — the
-#: committed version of the "clean run" numbers that previously lived
-#: only in SCALING.md prose. The named set is the rows whose in-suite
-#: medians have historically been floor/noise-dominated (sub-second
-#: absolutes) plus doc_curation_summary (its in-suite 100x warm time
-#: doubled between rounds; the isolated number pins which measurement
-#: is the outlier). Any row whose in-suite ratio exceeds the 2x bar is
-#: added automatically so a new regression always ships with its
-#: isolation evidence.
+#: Isolation re-runs at every leg: each of these queries gets a dedicated
+#: back-to-back block (ISO_ITERS medians for both engines, nothing
+#: interleaved) appended to the leg as ``isolation``. The named set is
+#: the rows whose in-suite medians are floor/noise-dominated (sub-second
+#: absolutes), doc_curation_summary (its in-suite warm time has doubled
+#: between runs), and top_customers_by_revenue, so that every
+#: baseline-covered HEADLINE_HEAVY row is isolated and the 300× leg's
+#: iso_ratio_total is always defined. Any row whose in-suite ratio
+#: exceeds the 2x bar is added automatically so a new regression always
+#: ships with its isolation evidence.
 ISO_ALWAYS = (
     "tpch_q1_pricing_summary",
     "top3_customers_per_nation",
     "errors_by_type",
     "doc_curation_summary",
-    # the heaviest real query rides every isolation block so the
-    # largest leg's iso_ratio_total always covers the full
-    # baseline-covered set (r10: its in-suite ratio fell to 0.97x —
-    # below the >2x auto-add — leaving the iso total undefined)
     "top_customers_by_revenue",
 )
-ISO_ITERS = int(os.environ.get("BENCH_ITERS_ISO", "7"))
+ISO_ITERS = 7
 
 
 def isolation_runs(spark, con_dir: str, names, leg: dict) -> dict:
@@ -451,32 +433,16 @@ def space_shortfall(sf_dir: str, scaled_dir: str, factor: int) -> str | None:
     return None if free >= needed else f"{needed}/{free}"
 
 
-def scaled_leg(
-    spark,
-    sf_dir: str,
-    sf: float,
-    factor: int,
-    names=HEADLINE,
-    iters: int = ITERS_SCALED,
-    iso: bool = False,
-    incremental: bool = False,
-) -> dict:
-    from mini_log_lakehouse_spark.session import release_corpus_caches
-    from mini_log_lakehouse_spark.sources.scaleup import materialize_scaled
-
-    scaled_dir = scaled_dir_for(factor)
-    materialize_scaled(spark, sf_dir, scaled_dir, factor)
-    # Each leg is a different corpus: drop the previous leg's pinned
-    # tables/signatures before warming this one (accumulated pins
-    # measurably pressure storage memory by the 100x leg).
-    release_corpus_caches(spark)
+def measure_leg(spark, leg_dir: str, names, iters: int, warmup: int, **head) -> dict:
+    """One leg's payload: ``head`` fields, in-suite medians and DuckDB
+    baselines with their ratios, the cache-bearing queries' cold,
+    collect()-timed and output-row numbers, and the isolation block."""
     results, cold, baseline, out_rows, collect_once = _bench_leg(
-        spark, scaled_dir, names, iters, WARMUP_SCALED
+        spark, leg_dir, names, iters, warmup
     )
     leg = _with_ratios(
         {
-            "factor": factor,
-            "sf": round(sf * factor, 4),
+            **head,
             "value": round(sum(results.values()), 4),
             "queries": results,
             "queries_cold": cold,
@@ -489,11 +455,35 @@ def scaled_leg(
         # corpus-profile marker — see bench_cache_bearing's docstring
         leg["corpus_profile"] = out_rows
     if collect_once:
-        # legacy collect()-timed numbers (pre-r15 methodology), one run
-        # per query — see bench_cache_bearing's measurement-change note
+        # one collect()-timed run per cache-bearing query — see
+        # bench_cache_bearing's note on the noop sink
         leg["queries_collect"] = collect_once
-    if iso:
-        attach_isolation(spark, scaled_dir, names, leg)
+    attach_isolation(spark, leg_dir, names, leg)
+    return leg
+
+
+def scaled_leg(
+    spark,
+    sf_dir: str,
+    sf: float,
+    factor: int,
+    names=HEADLINE,
+    iters: int = ITERS_SCALED,
+    incremental: bool = False,
+) -> dict:
+    from mini_log_lakehouse_spark.session import release_corpus_caches
+    from mini_log_lakehouse_spark.sources.scaleup import materialize_scaled
+
+    scaled_dir = scaled_dir_for(factor)
+    materialize_scaled(spark, sf_dir, scaled_dir, factor)
+    # Each leg is a different corpus: drop the previous leg's pinned
+    # tables/signatures before warming this one (accumulated pins
+    # measurably pressure storage memory by the 100x leg).
+    release_corpus_caches(spark)
+    leg = measure_leg(
+        spark, scaled_dir, names, iters, WARMUP_SCALED,
+        factor=factor, sf=round(sf * factor, 4),
+    )
     if incremental:
         # Strictly after the graded blocks (in-suite + isolation): the
         # incremental entries build persisted warehouse indexes on first
@@ -502,17 +492,15 @@ def scaled_leg(
     return leg
 
 
-#: The pay-once-index entries (VERDICT r12 ask 4): measured at the
-#: scaled legs against their natural full-recompute comparators, so the
-#: incremental-index story carries the same artifact-backed treatment
-#: as the bucketed warehouse. Comparators: near-dup increment vs the
-#: full MinHash pipeline warm over the same corpus; ANN increment vs
-#: the exact GEMM kNN join of a batch against the full corpus.
+#: The pay-once-index entries, measured at the 100× and 300× legs
+#: against their full-recompute comparators: the near-dup increment vs
+#: the full MinHash pipeline warm over the same corpus; the ANN increment
+#: vs the exact GEMM kNN join of a batch against the full corpus.
 INCREMENTAL_ENTRIES = (
     ("incremental_minhash_pairs", "dedup_minhash_pairs"),
     ("incremental_ann_ivf_topk", "ann_knn_join"),
 )
-ITERS_INC = int(os.environ.get("BENCH_ITERS_INC", "3"))
+ITERS_INC = 3
 
 
 def incremental_block(spark, leg_dir: str, leg: dict) -> dict:
@@ -550,120 +538,67 @@ def incremental_block(spark, leg_dir: str, leg: dict) -> dict:
     return out
 
 
-#: Hard stdout budget: the driver keeps only the LAST ~2000 chars of
-#: stdout, and an over-long line truncates at the FRONT, breaking the
-#: JSON (round 3 lost its bench artifact exactly this way).
-_LINE_BUDGET = 1950
+#: The line's reader keeps only the last ~2000 chars of stdout; a longer
+#: line is cut at the front and no longer parses. summary_line's shape
+#: keeps the line under this budget for any payload
+#: (tests/test_bench_line.py checks the worst case).
+LINE_BUDGET = 1950
 
 
-def compact_line(payload: dict, budget: int = _LINE_BUDGET) -> str:
-    """The single JSON line the driver parses, shed to fit ``budget``.
-
-    Pure function of the full bench payload (unit-tested with oversized
-    inputs — tests/test_bench_line.py): if the compact form outgrows the
-    budget, shed per-query second dicts of the middle legs first (they
-    are diagnostics; BENCH_DETAIL.json keeps all) — never the ratio/iso
-    fields the 2x judgment reads. The last-resort shed (ADVICE r10)
-    rebuilds the line from only those judged fields and, if even that
-    overflows, drops iso_ratios then whole legs: a valid short line
-    beats a front-truncated corrupt one (an assert would crash before
-    ANY line prints, and vanish under python -O — strictly worse).
-    """
-    compact = _compact(payload)
-    legs = [
-        leg for leg in ("scaled", "scaled_100", "scaled_300") if leg in compact
-    ]
-    # per-query ratios ride the compact line only for the last leg (the
-    # 2000-char stdout-tail budget: r7's line was already 1626 chars);
-    # every leg keeps ratio_total + iso_ratios, BENCH_DETAIL has all
-    for leg in legs:
-        compact[leg] = _compact(
-            compact[leg], keep_ratios=(leg == legs[-1]), keep_cold=False
-        )
-    compact["detail"] = "BENCH_DETAIL.json"
-    line = json.dumps(compact, separators=(",", ":"))
-    for leg_name, key in (
-        ("scaled", "queries"),
-        ("scaled_100", "queries"),
-        (None, "queries_cold"),
-        ("scaled_100", "inc_speedup"),
-        ("scaled_300", "inc_speedup"),
-    ):
-        if len(line) <= budget:
-            break
-        target = compact.get(leg_name) if leg_name else compact
-        if target is None:
-            continue
-        target.pop(key, None)
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > budget:
-        keep = ("metric", "value", "unit", "sf", "iters", "ratio_total", "baseline_total", "detail")
-        minimal = {k: compact[k] for k in keep if k in compact}
-        for leg_name in ("scaled", "scaled_100", "scaled_300"):
-            leg = compact.get(leg_name)
-            if leg:
-                minimal[leg_name] = {
-                    k: leg[k]
-                    for k in (
-                        "factor", "sf", "value", "ratio_total", "iso_ratio_total",
-                        "iso_ratios", "skipped",
-                    )
-                    if k in leg
-                }
-        line = json.dumps(minimal, separators=(",", ":"))
-        for leg_name in ("scaled", "scaled_100", "scaled_300"):
-            if len(line) <= budget:
-                break
-            if leg_name in minimal:
-                minimal[leg_name].pop("iso_ratios", None)
-                line = json.dumps(minimal, separators=(",", ":"))
-        for leg_name in ("scaled", "scaled_100", "scaled_300"):
-            if len(line) <= budget:
-                break
-            minimal.pop(leg_name, None)
-            line = json.dumps(minimal, separators=(",", ":"))
-    return line
+def host() -> dict:
+    """The host a run measured on: the cores both engines are given, the
+    physical memory and the 1-minute load average at the time of the call."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return {
+        "cores": default_parallelism(),
+        "mem_gb": round(mem / 2**30, 1),
+        "load1": round(os.getloadavg()[0], 2),
+    }
 
 
-def _compact(full: dict, keep_ratios: bool = False, keep_cold: bool = True) -> dict:
-    """2-decimal summary of a leg payload with per-query baselines folded
-    to a total — the printed line must fit the driver's ~2000-char stdout
-    tail (exceeding it cuts the FRONT of the JSON line and breaks
-    parsing). Per-query ratios ride the compact line only for the leg the
-    2x bar is judged on (the largest); scaled legs drop their cold dicts
-    from the line (r9's line reached 1936 chars — ~64 of margin — and
-    the cold numbers are no-baseline diagnostics, not the 2x evidence);
-    every leg keeps ratio_total, and BENCH_DETAIL.json holds everything."""
-    out = {}
-    for k, v in full.items():
-        if k == "queries_cold" and not keep_cold:
-            continue
-        if k == "isolation":
-            # full isolation blocks live in BENCH_DETAIL.json; the
-            # compact line carries only the isolated ratios (the number
-            # the 2x judgment should read for floor/noise-flagged rows)
-            out["iso_ratios"] = {
-                q: d["ratio_isolated"] for q, d in v.items()
-            }
-        elif k == "incremental":
-            # full increment-vs-recompute blocks live in
-            # BENCH_DETAIL.json; the line carries only the speedups
-            out["inc_speedup"] = {q: d["speedup"] for q, d in v.items()}
-        elif k == "baseline":
-            out["baseline_total"] = round(sum(v.values()), 2)
-        elif k == "ratios":
-            if keep_ratios:
-                out[k] = v
-        elif k in ("queries", "queries_cold"):
-            out[k] = {q: round(t, 2) for q, t in v.items()}
-        elif k == "value":
-            out[k] = round(v, 2)
-        else:
-            out[k] = v
-    return out
+def _medians(queries: dict) -> dict:
+    return {n: round(queries[n], 2) for n in HEADLINE if n in queries}
+
+
+def summary_line(payload: dict) -> str:
+    """The single JSON line the run prints: a fixed key set, seconds at
+    2 decimals, per-query medians limited to HEADLINE names, so its
+    length is bounded by the shape (under LINE_BUDGET) and nothing is
+    dropped at run time. Everything else stays in BENCH_DETAIL.json."""
+
+    def leg_summary(leg: dict) -> dict:
+        if "skipped" in leg:
+            return {"skipped": leg["skipped"]}
+        return {
+            "factor": leg["factor"],
+            "sf": leg["sf"],
+            "value": round(leg["value"], 2),
+            "ratio_total": leg["ratio_total"],
+            "iso_ratio_total": leg.get("iso_ratio_total"),
+            "q": _medians(leg["queries"]),
+        }
+
+    line = {
+        "metric": payload["metric"],
+        "value": round(payload["value"], 2),
+        "unit": payload["unit"],
+        "sf": payload["sf"],
+        "iters": payload["iters"],
+        "ratio_total": payload["ratio_total"],
+        "iso_ratio_total": payload.get("iso_ratio_total"),
+        "baseline_total": round(sum(payload["baseline"].values()), 2),
+        "queries": _medians(payload["queries"]),
+        "host": payload.get("host"),
+    }
+    for leg in ("scaled", "scaled_100", "scaled_300"):
+        if leg in payload:
+            line[leg] = leg_summary(payload[leg])
+    line["detail"] = "BENCH_DETAIL.json"
+    return json.dumps(line, separators=(",", ":"))
 
 
 def main() -> None:
+    machine = host()
     # warm-cache mode, matching the reference's benchmark method
     os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -671,51 +606,28 @@ def main() -> None:
     spark = get_spark(app_name="mini-log-lakehouse-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    results, cold, baseline, out_rows, collect_once = _bench_leg(
-        spark, sf_dir, HEADLINE, ITERS, WARMUP
+    # Isolation runs at this leg too: per-query isolated medians tell an
+    # environment-wide slowdown (every row inflated alike) from a plan
+    # change.
+    payload = measure_leg(
+        spark, sf_dir, HEADLINE, ITERS, WARMUP,
+        metric="headline_query_median_total", unit="sec", sf=sf, host=machine,
     )
-
-    payload = _with_ratios(
-        {
-            "metric": "headline_query_median_total",
-            "value": round(sum(results.values()), 4),
-            "unit": "sec",
-            "queries": results,
-            "queries_cold": cold,
-            "sf": sf,
-            "baseline": baseline,
-            "iters": ITERS,
-        }
-    )
-    if out_rows:
-        payload["corpus_profile"] = out_rows
-    if collect_once:
-        payload["queries_collect"] = collect_once
-    # Isolation at the SMALL legs too (VERDICT r13 ask 5): the driver's
-    # fresh-rebuild environment inflated the r13 sf0.1 leg ~2x uniformly
-    # across all nine queries (7.90 s vs 2.9-3.1 s builder-pinned at
-    # identical code) with no plan change to blame; per-query isolated
-    # medians in the artifact make that floor attributable (environment
-    # vs plan) instead of a per-round forensic exercise.
-    attach_isolation(spark, sf_dir, HEADLINE, payload)
-
     if SCALE_FACTOR > 1:
-        payload["scaled"] = scaled_leg(spark, sf_dir, sf, SCALE_FACTOR, iso=True)
+        payload["scaled"] = scaled_leg(spark, sf_dir, sf, SCALE_FACTOR)
     if SCALE_FACTOR_100 > 1:
         payload["scaled_100"] = scaled_leg(
-            spark, sf_dir, sf, SCALE_FACTOR_100, iso=True, incremental=True
+            spark, sf_dir, sf, SCALE_FACTOR_100, incremental=True
         )
     if SCALE_FACTOR_300 > 1:
-        scaled_dir = scaled_dir_for(SCALE_FACTOR_300)
-        shortfall = space_shortfall(sf_dir, scaled_dir, SCALE_FACTOR_300)
+        shortfall = space_shortfall(
+            sf_dir, scaled_dir_for(SCALE_FACTOR_300), SCALE_FACTOR_300
+        )
         if shortfall:
             # the host cannot hold the replica: say so instead of failing
             # mid-write and losing every leg already measured
             payload["scaled_300"] = {"skipped": shortfall}
         else:
-            # heavy rows only; isolation auto-attaches to any >2x row, which
-            # is exactly the "retire top_customers_by_revenue or expose a
-            # real lever" experiment VERDICT r7 asked for
             payload["scaled_300"] = scaled_leg(
                 spark,
                 sf_dir,
@@ -723,7 +635,6 @@ def main() -> None:
                 SCALE_FACTOR_300,
                 names=HEADLINE_HEAVY,
                 iters=ITERS_300,
-                iso=True,
                 incremental=True,
             )
 
@@ -733,7 +644,7 @@ def main() -> None:
     with open(detail_path, "w") as fh:
         json.dump(payload, fh, indent=1)
 
-    print(compact_line(payload))
+    print(summary_line(payload))
     spark.stop()
 
 

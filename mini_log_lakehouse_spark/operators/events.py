@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_log_lakehouse_spark import session
+from mini_log_lakehouse_spark.operators.serve import _sorted_small
 from mini_log_lakehouse_spark.sources.registry import load_events_range, load_table, warm_mode
 
 #: Fixed parameters for the parameterized serving queries (events span
@@ -286,14 +287,6 @@ def _day_filter(fct: DataFrame) -> DataFrame:
     return fct.filter(F.col("date") == F.lit(DAY).cast("date"))
 
 
-def _sorted1(df: DataFrame, *cols) -> DataFrame:
-    """Global sort for bounded-tiny serving results: one partition +
-    in-partition sort skips orderBy's range-partitioning exchange (and
-    its sampling job). Only valid because every serving output is at most
-    days × hours × types rows."""
-    return df.coalesce(1).sortWithinPartitions(*cols)
-
-
 #: Warm-mode rewrites over the memoized fact. Each is value-identical to
 #: its cold twin: the fact partitions the events by (date, hour,
 #: event_type), so summing its requests/errors equals counting/summing
@@ -308,7 +301,7 @@ _WARM_REWRITES = {
             F.sum("errors").cast("long").alias("errors"),
             F.sum("requests").cast("long").alias("requests"),
         )
-        .transform(lambda df: _sorted1(df, F.desc("errors"), F.desc("requests"), "event_type"))
+        .transform(lambda df: _sorted_small(df, F.desc("errors"), F.desc("requests"), "event_type"))
     ),
     "top_event_types": lambda fct: (
         _day_filter(fct)
@@ -317,10 +310,10 @@ _WARM_REWRITES = {
             F.sum("requests").cast("long").alias("requests"),
             F.sum("errors").cast("long").alias("errors"),
         )
-        .transform(lambda df: _sorted1(df, F.desc("requests"), F.desc("errors"), "event_type"))
+        .transform(lambda df: _sorted_small(df, F.desc("requests"), F.desc("errors"), "event_type"))
         .limit(TOP_K)
     ),
-    "available_days": lambda fct: _sorted1(fct.select("date").distinct(), "date"),
+    "available_days": lambda fct: _sorted_small(fct.select("date").distinct(), "date"),
     "kpi_totals": lambda fct: (
         _day_filter(fct)
         .agg(
@@ -346,7 +339,7 @@ _WARM_REWRITES = {
             F.sum("requests").cast("long").alias("requests"),
             F.sum("errors").cast("long").alias("errors"),
         )
-        .transform(lambda df: _sorted1(df, "hour"))
+        .transform(lambda df: _sorted_small(df, "hour"))
     ),
 }
 

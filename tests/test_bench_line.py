@@ -1,126 +1,135 @@
-"""The bench's single printed JSON line must ALWAYS fit the driver's
-~2000-char stdout tail and stay parseable — an over-long line truncates
-at the FRONT and loses the round's bench artifact (it happened in round
-3). compact_line is the pure shed function; these tests feed it real and
-adversarially oversized payloads (VERDICT r11 ask 5: the last-resort
-shed had never fired on a real artifact)."""
+"""The bench's single printed JSON line must always fit a ~2000-char
+stdout tail and stay parseable — an over-long line is cut at
+the FRONT and the run's bench artifact is lost. summary_line builds one
+fixed shape whose per-query maps hold only HEADLINE names, so its length
+has a maximum: these tests check that maximum once (every number at 5
+digits) and the shape on committed artifacts."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
+
 import bench
+from tests.conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+LEG_KEYS = {"factor", "sf", "value", "ratio_total", "iso_ratio_total", "q"}
+TOP_KEYS = {
+    "metric", "value", "unit", "sf", "iters", "ratio_total", "iso_ratio_total",
+    "baseline_total", "queries", "host", "detail",
+}
 
-def _leg(factor: float, n_queries: int, name_len: int = 40) -> dict:
-    qs = {f"query_{'x' * name_len}_{i}": 1.2345 + i for i in range(n_queries)}
+
+def _leg(factor: int, names, t: float) -> dict:
+    qs = {n: t for n in names}
     return {
         "factor": factor,
-        "sf": 0.1 * factor,
-        "value": sum(qs.values()),
+        "sf": t,
+        "value": t,
         "queries": qs,
-        "queries_cold": {k: v * 3 for k, v in qs.items()},
-        "baseline": {k: v / 2 for k, v in qs.items()},
-        "ratios": {k: 2.0 for k in qs},
-        "ratio_total": 1.23,
-        "iso_ratio_total": 1.11,
-        "isolation": {
-            k: {"ratio_isolated": 1.05, "spark": v, "duckdb": v / 2}
-            for k, v in qs.items()
-        },
+        "queries_cold": dict(qs),
+        "baseline": dict(qs),
+        "ratios": {n: t for n in qs},
+        "ratio_total": t,
+        "iso_ratio_total": t,
+        "isolation": {n: {"ratio_isolated": t} for n in qs},
+        "incremental": {"incremental_minhash_pairs": {"speedup": t}},
     }
 
 
-def _payload(n_queries: int, name_len: int = 40) -> dict:
-    qs = {f"query_{'x' * name_len}_{i}": 0.5 + i for i in range(n_queries)}
+def _payload(names, t: float = 1.2345) -> dict:
+    qs = {n: t for n in names}
     return {
         "metric": "headline_query_median_total",
-        "value": sum(qs.values()),
+        "value": t,
         "unit": "sec",
         "queries": qs,
-        "queries_cold": {k: v * 2 for k, v in qs.items()},
-        "sf": 0.1,
-        "baseline": {k: v / 3 for k, v in qs.items()},
+        "queries_cold": dict(qs),
+        "sf": t,
+        "baseline": dict(qs),
         "iters": 5,
-        "ratios": {k: 3.0 for k in qs},
-        "ratio_total": 4.56,
-        "scaled": _leg(10, n_queries, name_len),
-        "scaled_100": _leg(100, n_queries, name_len),
-        "scaled_300": _leg(300, n_queries, name_len),
+        "ratios": {n: t for n in qs},
+        "ratio_total": t,
+        "iso_ratio_total": t,
+        "host": {"cores": 4, "mem_gb": 15.6, "load1": 0.5},
+        "scaled": _leg(10, names, t),
+        "scaled_100": _leg(100, names, t),
+        "scaled_300": _leg(300, names, t),
     }
 
 
 def test_committed_artifact_fits_and_keeps_judged_fields():
-    """The real r11 run-5 payload (the largest committed artifact) must
-    produce a within-budget line with every judged field intact."""
-    with open(os.path.join(REPO, "BENCH_r11_run5.json")) as fh:
-        payload = json.load(fh)
-    line = bench.compact_line(payload)
-    assert len(line) <= 1950
-    got = json.loads(line)
-    assert got["metric"] == "headline_query_median_total"
-    assert "ratio_total" in got
+    """Real payloads (the r11 run-5 artifact and the r16 detail file) give
+    a line within budget with every HEADLINE median at the top, each
+    leg's own medians in its ``q``, the host key and the judged ratios."""
+    for artifact in ("BENCH_r11_run5.json", "BENCH_DETAIL_r16_opt.json"):
+        with open(os.path.join(REPO, artifact)) as fh:
+            payload = json.load(fh)
+        line = bench.summary_line(payload)
+        assert len(line) <= bench.LINE_BUDGET, artifact
+        got = json.loads(line)
+        assert set(got) == TOP_KEYS | {"scaled", "scaled_100", "scaled_300"}
+        assert got["metric"] == "headline_query_median_total"
+        assert got["ratio_total"] == payload["ratio_total"]
+        assert list(got["queries"]) == list(bench.HEADLINE), artifact
+        for name, t in got["queries"].items():
+            assert t == round(payload["queries"][name], 2)
+        for leg in ("scaled", "scaled_100", "scaled_300"):
+            assert set(got[leg]) == LEG_KEYS, (artifact, leg)
+            assert set(got[leg]["q"]) == set(payload[leg]["queries"]), (artifact, leg)
+            assert got[leg]["ratio_total"] == payload[leg]["ratio_total"]
+        assert set(got["scaled_300"]["q"]) == set(bench.HEADLINE_HEAVY)
+        assert got["scaled_300"]["iso_ratio_total"] == payload["scaled_300"][
+            "iso_ratio_total"
+        ]
+
+
+def test_worst_case_line_fits_budget():
+    """Every leg present with every HEADLINE name, every number at 5
+    digits, and names outside HEADLINE in the payload (they never ride
+    the line); then the longest ``skipped`` marker in place of a leg."""
+    big = 99999.99
+    payload = _payload(list(bench.HEADLINE) + [f"extra_{i}" for i in range(50)], big)
+    payload["iters"] = 99999
+    payload["host"] = {"cores": 99999, "mem_gb": big, "load1": big}
     for leg in ("scaled", "scaled_100", "scaled_300"):
-        if leg in payload:
-            assert "ratio_total" in got[leg], leg
-    assert got["scaled_300"]["iso_ratio_total"] == payload["scaled_300"][
-        "iso_ratio_total"
-    ]
-
-
-def test_oversized_payload_sheds_to_valid_line():
-    """60 long-named queries per leg (~4x the real suite) must trigger
-    the shed path and still emit a parseable line that keeps
-    ratio_total + iso_ratio_total per leg."""
-    payload = _payload(60)
-    assert len(json.dumps(bench._compact(payload))) > 1950  # shed must engage
-    line = bench.compact_line(payload)
-    assert len(line) <= 1950
-    got = json.loads(line)
-    assert got["ratio_total"] == 4.56
+        payload[leg]["factor"] = 99999
+    full = bench.summary_line(payload)
+    assert len(full) <= bench.LINE_BUDGET, len(full)
+    assert set(json.loads(full)["scaled"]["q"]) == set(bench.HEADLINE)
+    marker = f"{2**64}/{2**64}"
     for leg in ("scaled", "scaled_100", "scaled_300"):
-        assert got[leg]["ratio_total"] == 1.23, leg
-        assert got[leg]["iso_ratio_total"] == 1.11, leg
-
-
-def test_pathological_payload_never_overflows():
-    """Even when the minimal form itself overflows (hundreds of
-    iso-flagged queries with absurd names), the line stays valid JSON
-    within budget and keeps the top-level headline fields — shedding
-    iso_ratios, then whole legs, is preferred over a corrupt line."""
-    payload = _payload(400, name_len=120)
-    line = bench.compact_line(payload)
-    assert len(line) <= 1950
-    got = json.loads(line)
-    assert got["metric"] == "headline_query_median_total"
-    assert got["ratio_total"] == 4.56
-    assert got["value"] == round(payload["value"], 2)
+        payload[leg] = {"skipped": marker}
+        line = bench.summary_line(payload)
+        assert len(line) <= len(full)
+        assert json.loads(line)[leg] == {"skipped": marker}
 
 
 def test_tiny_payload_keeps_full_detail():
-    """Within budget nothing is shed: per-query dicts and last-leg
-    ratios ride the line untouched."""
-    payload = _payload(3, name_len=4)
-    line = bench.compact_line(payload)
-    assert len(line) <= 1950
-    got = json.loads(line)
-    assert len(got["queries"]) == 3
-    assert "ratios" in got["scaled_300"]  # last leg keeps per-query ratios
-    assert "queries" in got["scaled"]
+    """A partial run (two queries, one leg) still gets the full shape:
+    every measured median rides the line, at 2 decimals."""
+    payload = _payload(["errors_by_type", "ann_knn_join"], t=0.123456)
+    del payload["scaled_100"], payload["scaled_300"], payload["iso_ratio_total"]
+    got = json.loads(bench.summary_line(payload))
+    assert set(got) == TOP_KEYS | {"scaled"}
+    assert got["queries"] == {"errors_by_type": 0.12, "ann_knn_join": 0.12}
+    assert got["scaled"]["q"] == got["queries"]
+    assert got["iso_ratio_total"] is None
+    assert got["host"] == payload["host"]
 
 
 def test_skipped_leg_rides_the_line():
-    """A leg the host could not hold is ``{"skipped": "<needed>/<free>"}``;
-    the line keeps that marker, in the full and in the shed form."""
-    for n_queries, name_len in ((3, 4), (400, 120)):
-        payload = _payload(n_queries, name_len)
-        payload["scaled_300"] = {"skipped": "1500000000/1000"}
-        got = json.loads(bench.compact_line(payload))
-        assert got["scaled_300"] == {"skipped": "1500000000/1000"}
-        assert got["scaled"]["ratio_total"] == 1.23
+    """A leg the host could not hold is ``{"skipped": "<needed>/<free>"}``
+    on the line too, beside the legs that ran."""
+    payload = _payload(bench.HEADLINE)
+    payload["scaled_300"] = {"skipped": "1500000000/1000"}
+    got = json.loads(bench.summary_line(payload))
+    assert got["scaled_300"] == {"skipped": "1500000000/1000"}
+    assert got["scaled"]["ratio_total"] == 1.2345
 
 
 def test_space_shortfall(tmp_path):
@@ -136,3 +145,13 @@ def test_space_shortfall(tmp_path):
     scaled.mkdir(parents=True)
     (scaled / "_SCALED_x1000000000000000").write_text("ok\n")
     assert bench.space_shortfall(str(sf), str(scaled), 10**15) is None
+
+
+@pytest.mark.parametrize("cpus", ["0", ""])
+def test_bench_duckdb_takes_spark_core_count(monkeypatch, cpus):
+    """An unset core count (``0`` or empty) falls back to the host's
+    cores for both engines; DuckDB must not get the raw string."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    out = bench.bench_duckdb(SF_DIR, ["errors_by_type"], iters=1)
+    assert set(out) == {"errors_by_type"} and out["errors_by_type"] > 0
+    assert bench.host()["cores"] == (os.cpu_count() or 8)

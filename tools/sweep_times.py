@@ -31,10 +31,12 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
+    import bench
     from mini_log_lakehouse_spark.entry_registry import QUERIES
     from mini_log_lakehouse_spark.session import get_spark
 
     names = list(QUERIES) if args.all else args.queries
+    machine = bench.host()
     spark = get_spark(app_name="sweep-times-r16")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, float] = {}
@@ -52,7 +54,9 @@ def main() -> None:
         print(f"{name}: {out[name]} s  (runs: {[round(t, 3) for t in times]})",
               file=sys.stderr)
     spark.stop()
-    payload = json.dumps({"sf_dir": args.sf, "iters": args.iters, "times": out})
+    payload = json.dumps(
+        {"sf_dir": args.sf, "iters": args.iters, "host": machine, "times": out}
+    )
     print(payload)
     if args.out:
         with open(args.out, "w") as fh:
