@@ -59,6 +59,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mini_log_lakehouse_spark.entry_registry import ORACLES, QUERIES  # noqa: E402
 from mini_log_lakehouse_spark.session import default_parallelism, get_spark  # noqa: E402
+from mini_log_lakehouse_spark.sources.registry import path_bytes  # noqa: E402
 
 #: Headline queries: the flagship serving shape, the scan-heavy aggregate,
 #: the shuffle-heavy join, a window, text analysis, fuzzy dedup, ANN, and
@@ -412,12 +413,6 @@ def scaled_dir_for(factor: int) -> str:
     )
 
 
-def _tree_bytes(path: str) -> int:
-    return sum(
-        os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(path) for f in files
-    )
-
-
 def space_shortfall(sf_dir: str, scaled_dir: str, factor: int) -> str | None:
     """``"<bytes needed>/<bytes free>"`` when the filesystem holding
     ``scaled_dir`` cannot take a ``factor``× replica of ``sf_dir``, else
@@ -425,7 +420,7 @@ def space_shortfall(sf_dir: str, scaled_dir: str, factor: int) -> str | None:
     no space."""
     if os.path.exists(os.path.join(scaled_dir, f"_SCALED_x{factor}")):
         return None
-    needed = factor * _tree_bytes(sf_dir)
+    needed = factor * path_bytes(sf_dir)
     probe = os.path.abspath(scaled_dir)
     while not os.path.exists(probe):
         probe = os.path.dirname(probe)

@@ -36,7 +36,7 @@ from mini_log_lakehouse_spark.functions.hashing import (
 from mini_log_lakehouse_spark import session
 from mini_log_lakehouse_spark.operators import local_tier
 from mini_log_lakehouse_spark.functions.text import char_shingles, text_or_empty
-from mini_log_lakehouse_spark.functions.vector import cosine
+from mini_log_lakehouse_spark.functions.vector import as_matrix, cosine
 from mini_log_lakehouse_spark.sources.registry import load_table
 
 # MinHash configuration: K = BANDS × ROWS_PER_BAND signatures.
@@ -2121,14 +2121,7 @@ def _blocked_cosine_pairs(
                 )
             blk = tbl.column("_blk")[0]
             ids = tbl.column("vec_id").to_numpy(zero_copy_only=False)
-            mat = (
-                tbl.column("embedding")
-                .combine_chunks()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(n, -1)
-            )
+            mat = as_matrix(tbl.column("embedding"))
             out_a, out_b, out_s = [], [], []
             for ia, ib, s in _fold_pair_scores(ids, mat, threshold):
                 out_a.append(ia)

@@ -14,8 +14,8 @@ Search tiers, per the scale plan (plus the embedding toolbox below):
    queries, not the corpus.
 3. **LSH-bucketed ANN** (scale path): sign-random-projection
    buckets from md5-parity ±1 planes over the FIXED_POINT lattice,
-   computed vectorized in numpy via mapInArrow (zero-copy Arrow
-   batches); queries probe only their bucket (+ hamming-1 multiprobe).
+   computed in numpy per Arrow batch (``vector_map``); queries probe
+   only their bucket (+ hamming-1 multiprobe).
    Sub-linear candidate sets at the cost of recall.
 4. **IVF-flat ANN** (scale path): a coarse INTEGER-LATTICE
    k-means quantizer trained on a driver-held sample partitions the
@@ -31,16 +31,22 @@ Search tiers, per the scale plan (plus the embedding toolbox below):
 
 Every approximate tier is float-free up to the final rounded-cosine
 rerank, so each tier's own top-k rows are hash-gated cross-engine
-(``ann_tier_topk_sql`` rebuilds each tier relationally — VERDICT r10
-ask 1) and ``ann_recall_report`` additionally hash-gates recall@TOP_K
-of ALL tiers against tier 1; local tests pin per-tier recall floors.
+(``ann_tier_topk_sql`` rebuilds each tier relationally) and
+``ann_recall_report`` additionally hash-gates recall@TOP_K of ALL
+tiers against tier 1; local tests pin per-tier recall floors.
 
 Embedding toolbox: JL random projection (exact fixed-point GEMM,
 oracle-checked), per-label centroids, symmetric int8 quantization, and
 distributed Lloyd's k-means (bit-reproducible fixed-point updates).
+
+Every numpy pass over a vector column is a module-level
+``(payload, batch, mat)`` kernel on ``functions/vector.vector_map``,
+so the kernels run without Spark in tests.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mini_log_lakehouse_spark import session
-from mini_log_lakehouse_spark.functions.vector import cosine
+from mini_log_lakehouse_spark.functions.vector import cosine, vector_map
 from mini_log_lakehouse_spark.sources.registry import load_table, warm_mode
 
 QUERY_VEC_ID = 0
@@ -110,8 +116,7 @@ def _topk_tie_safe(s: "np.ndarray", ids: "np.ndarray", m: int) -> "np.ndarray":
     ties — the preselection must agree with the final window's
     (cos DESC, id ASC) order, or a per-batch argpartition on raw sims
     could drop a tied row the oracle's ROW_NUMBER ranks in. O(n)
-    partition + a sort over only the tied rows; shared by every GEMM
-    rerank kernel (knn_join_vectorized, ann_ivf_index_topk)."""
+    partition + a sort over only the tied rows (see _topk_kernel)."""
     n = len(s)
     if n <= m:
         return np.arange(n)
@@ -143,16 +148,64 @@ def _empty_knn_frame(spark: SparkSession) -> DataFrame:
 
 def _unit_rows(mat: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
     """Row-normalize a (n, d) matrix; returns (unit, zero_mask). The
-    ONE body for the zero-norm discipline shared by both kNN GEMM
-    kernels (query and corpus sides): zero-norm rows come back as ZERO
-    rows and are flagged in the mask so the caller can pin their
-    similarities to -1.0 (the measured DuckDB list_cosine_similarity
-    semantics that functions/vector.py:cosine mirrors) — a plain /=
-    would turn them into NaN rows that silently vanish from the
-    candidate set while the oracle still ranks them."""
+    ONE body for the zero-norm discipline of both sides of the top-k
+    kernel: zero-norm rows come back as ZERO rows and are flagged in the
+    mask so the caller can pin their similarities to -1.0 (the measured
+    DuckDB list_cosine_similarity semantics that functions/vector.py:cosine
+    mirrors) — a plain /= would turn them into NaN rows that silently
+    vanish from the candidate set while the oracle still ranks them."""
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     zero = (norms == 0).ravel()
     return np.divide(mat, norms, out=np.zeros_like(mat), where=norms != 0), zero
+
+
+def _topk_kernel(payload, batch, mat):
+    """The k best candidates of one Arrow batch (id column first) for
+    every query: rounded cosines against the unit query matrix,
+    zero-norm rows and queries at -1.0, masked pairs at -2.0 (dropped by
+    _rank_topk), then exactly min(k, n) rows per query with the lowest
+    ids among boundary ties. ``probed`` is None for the kNN join, which
+    masks self-matches, or the (ncells, q) probe matrix of the IVF
+    index, which masks every non-probed (cell, query) pair."""
+    q_ids, q_unit, q_zero, k, probed = payload
+    ids = batch.column(0).to_numpy(zero_copy_only=False)
+    unit, zero_rows = _unit_rows(mat)
+    sims = np.round(unit @ q_unit.T, 6)  # (n, q), ROUNDED
+    sims[zero_rows, :] = -1.0
+    sims[:, q_zero] = -1.0
+    if probed is None:
+        sims[ids[:, None] == q_ids[None, :]] = -2.0
+    else:
+        sims[~probed[batch.column("cell").to_numpy(zero_copy_only=False)]] = -2.0
+    m = min(k, len(ids))
+    rows = np.concatenate([_topk_tie_safe(sims[:, j], ids, m) for j in range(len(q_ids))])
+    qcol = np.repeat(np.arange(len(q_ids)), m)
+    return {"query_id": q_ids[qcol], "neighbor_id": ids[rows], "cos_sim": sims[rows, qcol]}
+
+
+def _rank_topk(
+    frame: DataFrame, vec_col: str, q_ids, q_mat, k: int, probed=None
+) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank) of the k nearest rows of
+    ``frame`` for every query: _topk_kernel candidates per batch, then
+    one window over partitions × queries × k rows."""
+    from pyspark.sql import Window
+
+    q_unit, q_zero = _unit_rows(q_mat)
+    cands = vector_map(
+        frame,
+        vec_col,
+        _topk_kernel,
+        (q_ids, q_unit, q_zero, k, probed),
+        "query_id long, neighbor_id long, cos_sim double",
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        cands.filter(F.col("cos_sim") > -2.0)  # drop masked pairs
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
 
 
 def knn_join_vectorized(
@@ -164,89 +217,20 @@ def knn_join_vectorized(
 ) -> DataFrame:
     """Vectorized tier 2: one numpy GEMM per Arrow batch against the
     (small, driver-held) query matrix, per-batch top-k preselection, then
-    a tiny global window to finalize ranks.
+    a tiny global window to finalize ranks (_rank_topk).
 
     This is the 100 TB shape: the corpus streams through a map-only
     stage (each task does a (batch × dim) @ (dim × q) product and emits
     only q×k candidate rows), and the final window runs over
-    partitions × q × k rows — thousands, not billions.
-
-    ``mapInArrow``, not ``mapInPandas``: the embedding column arrives as
-    an Arrow list<float> whose values buffer flattens to a (n×dim) numpy
-    matrix in one zero-copy-then-astype step. The pandas path built an
-    object ndarray of per-row lists and np.vstack'd it — measured 16×
-    slower end-to-end at sf1.0 (0.74s → 0.046s, on par with single-
-    process DuckDB); the conversion, not the GEMM, was the entire cost.
-
-    Self-matches are masked inside the kernel (sim := -2 where
-    neighbor == query, then exact top-k): the batch emits exactly k
-    candidates per query with no post-hoc slack rows."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import Window
-
+    partitions × q × k rows — thousands, not billions. Self-matches are
+    masked inside the kernel, so a batch emits exactly k candidates per
+    query with no post-hoc slack rows."""
     if not queries:
-        # empty query set (an empty corpus slice / a prune that matched
-        # nothing — routine at scale): the join of nothing is nothing.
-        # Short-circuit with the exact result schema instead of letting
-        # numpy build a 0-d query matrix the GEMM kernel can't use.
+        # the join of an empty query set is empty, with the result schema
         return _empty_knn_frame(corpus.sparkSession)
-
     q_ids = np.array([qid for qid, _ in queries], dtype="int64")
     q_mat = np.array([v for _, v in queries], dtype="float64")
-    q_unit, q_zero = _unit_rows(q_mat)
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def topk_per_batch(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mat = (
-                batch.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype("float64")
-                .reshape(n, -1)
-            )
-            mat, zero_rows = _unit_rows(mat)
-            sims = np.round(mat @ q_unit.T, 6)  # (n, q), ROUNDED
-            if zero_rows.any():
-                sims[zero_rows, :] = -1.0
-            if q_zero.any():
-                sims[:, q_zero] = -1.0
-            sims[ids[:, None] == q_ids[None, :]] = -2.0  # mask self-matches
-            m = min(k, n)
-            out_q, out_n, out_s = [], [], []
-            for j in range(sims.shape[1]):
-                rows = _topk_tie_safe(sims[:, j], ids, m)
-                out_q.extend([q_ids[j]] * len(rows))
-                out_n.extend(ids[rows])
-                out_s.extend(sims[rows, j])
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(out_q, pa.int64()),
-                    "neighbor_id": pa.array(out_n, pa.int64()),
-                    "cos_sim": pa.array(out_s, pa.float64()),
-                }
-            )
-
-    cands = corpus.select(id_col, vec_col).mapInArrow(topk_per_batch, cand_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cands.filter(F.col("cos_sim") > -2.0)  # drop masked self-rows (tiny corpora)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(corpus.select(id_col, vec_col), vec_col, q_ids, q_mat, k)
 
 
 def _nonempty(rows):
@@ -297,38 +281,18 @@ def _srp_planes(dim: int, n_planes: int = LSH_N_PLANES) -> np.ndarray:
     return s
 
 
-def _append_arrow_column(df: DataFrame, vec_col: str, out_col: str, compute) -> DataFrame:
-    """Shared map-only shape for vector→scalar assignment columns: stream
-    Arrow batches, flatten the list<float> embedding column zero-copy
-    into an (n × dim) matrix, append ``compute(mat)`` (an int64 ndarray)
-    as ``out_col``. ``mapInArrow`` for the same reason as
-    knn_join_vectorized — the pandas object-array/vstack path was the
-    dominant cost, not the numpy math."""
-    import pyarrow as pa
+def _with_longs(df: DataFrame, *names: str) -> T.StructType:
+    """``df``'s schema with long columns ``names`` appended."""
+    return T.StructType(df.schema.fields + [T.StructField(n, T.LongType()) for n in names])
 
-    schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.LongType())])
 
-    def assign(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                out = pa.array([], pa.int64())
-            else:
-                idx = batch.schema.get_field_index(vec_col)
-                mat = (
-                    batch.column(idx)
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(n, -1)
-                )
-                out = pa.array(compute(mat).astype("int64"), pa.int64())
-            yield batch.append_column(out_col, out)
-
-    return df.mapInArrow(assign, schema=schema)
+def _lsh_kernel(planes, batch, mat):
+    signs = (_quantize_mat(mat) @ planes.T) > 0  # (n, n_planes)
+    return {"bucket": (signs * (1 << np.arange(planes.shape[0]))).sum(axis=1)}
 
 
 def lsh_bucketed(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> DataFrame:
-    """Assign each vector a sign-random-projection bucket.
+    """Append each vector's sign-random-projection ``bucket``.
 
     One numpy matrix product per Arrow batch (map-only, no shuffle) —
     how the signature step would run over 100 TB. Exactness: vectors
@@ -336,13 +300,7 @@ def lsh_bucketed(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> Da
     each plane dot is an exact int64 sum and the bucket id is the same
     integer in every engine — what lets ann_recall_sql() restate this
     tier relationally."""
-    planes = _srp_planes(dim)
-
-    def compute(mat):
-        signs = (_quantize_mat(mat) @ planes.T) > 0  # (n, n_planes)
-        return (signs * (1 << np.arange(planes.shape[0]))).sum(axis=1)
-
-    return _append_arrow_column(df, vec_col, "bucket", compute)
+    return vector_map(df, vec_col, _lsh_kernel, _srp_planes(dim), _with_longs(df, "bucket"))
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,13 +342,11 @@ IVF_N_PROBE = 4
 IVF_TRAIN_SAMPLE = 256
 IVF_LLOYD_ITERS = 5
 
-#: Corpus-adaptive IVF layout for the INCREMENTAL entry (r13 VERDICT:
-#: the driver-measured 0.48× "speedup" at sf30): with a fixed 16-cell
-#: quantizer, a 32-query batch probing 4 cells each covers ALL 16
-#: cells, so the probe-union filter prunes NOTHING and the increment
+#: Corpus-adaptive IVF layout for the INCREMENTAL entry: with a fixed
+#: 16-cell quantizer, a 32-query batch probing 4 cells each covers ALL
+#: 16 cells, so the probe-union filter prunes NOTHING and the increment
 #: re-reads the whole index — structurally unable to beat the exact-kNN
-#: comparator at any scale (measured: probed cells 16/16, pruned rows
-#: 599,968/599,968 at sf30). Production IVF sizes ncells ~ sqrt(N)
+#: comparator at any scale. Production IVF sizes ncells ~ sqrt(N)
 #: (FAISS guideline), which keeps the probe union a small fraction of
 #: the corpus; this step table approximates that, testable at bench
 #: scale. Tiers are (min_corpus_rows, ncells, train_max), scanned in
@@ -415,9 +371,9 @@ IVF_ADAPTIVE_TIERS: tuple[tuple[int, int, int], ...] = (
     (0, IVF_N_CELLS, IVF_TRAIN_SAMPLE),
 )
 
-# ADVICE r14: both halves of the step function must stay provably
-# identical. (1) The SQL CASE's ELSE arm unconditionally returns the
-# last tier, so the last tier MUST be the min_rows=0 sentinel or Python's
+# Both halves of the step function must stay provably identical.
+# (1) The SQL CASE's ELSE arm unconditionally returns the last tier,
+# so the last tier MUST be the min_rows=0 sentinel or Python's
 # fallthrough and SQL's ELSE could diverge. (2) The oracle's k-means c0
 # init draws the k lowest vec_ids while the Spark trainer samples
 # vec_id < train_max, so every tier needs train_max >= ncells — the
@@ -506,27 +462,27 @@ def ivf_train_centroids(
     return cents
 
 
+def _cell_kernel(centroids, batch, mat):
+    return {"cell": _sq_dists(_quantize_mat(mat), centroids).argmin(axis=1)}
+
+
 def ivf_assign_cells(
     df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Assign every vector its nearest-centroid cell id (exact int64
+    """Append every vector's nearest-centroid ``cell`` (exact int64
     squared-L2 argmin in q-space, ties to the lowest cell — the same
     metric the trainer used) — one numpy GEMM per Arrow batch
     (map-only, no shuffle), same shape as lsh_bucketed."""
     if centroids.shape[0] == 0:
         # the empty quantizer ivf_train_centroids returns for an empty
-        # training sample (ADVICE r12): fail with a named cause here
-        # instead of an opaque numpy matmul shape error inside a worker
+        # training sample: fail with a named cause here instead of an
+        # opaque numpy matmul shape error inside a worker
         raise ValueError(
             "ivf_assign_cells: empty quantizer (0 centroids) — the "
             "training sample was empty; callers must guard the 0-row "
             "shape before assignment"
         )
-
-    def compute(mat):
-        return _sq_dists(_quantize_mat(mat), centroids).argmin(axis=1)
-
-    return _append_arrow_column(df, vec_col, "cell", compute)
+    return vector_map(df, vec_col, _cell_kernel, centroids, _with_longs(df, "cell"))
 
 
 def _ivf_centroids_for(
@@ -657,13 +613,14 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 RP_DIM = 16
 
 
+@functools.lru_cache(maxsize=16)
 def _rp_signs(dim_in: int, dim_out: int) -> "np.ndarray":
     """Deterministic ±1 projection matrix from md5 parity — the same
     bit both engines can derive (('0x' || substr(md5('rp:i:j'), 1,
     12))::BIGINT % 2), so the oracle rebuilds the identical matrix
     relationally. A ±1 (Achlioptas) matrix satisfies the JL lemma like
     a Gaussian one, and makes the projection of fixed-point integers an
-    exact int64 GEMM."""
+    exact int64 GEMM. Cached per shape and read-only."""
     import hashlib
 
     s = np.empty((dim_in, dim_out), dtype=np.int64)
@@ -671,78 +628,14 @@ def _rp_signs(dim_in: int, dim_out: int) -> "np.ndarray":
         for j in range(dim_out):
             h = int(hashlib.md5(f"rp:{i}:{j}".encode()).hexdigest()[:12], 16)
             s[i, j] = 1 if h % 2 == 0 else -1
+    s.flags.writeable = False
     return s
 
 
-def random_project(
-    vectors: DataFrame,
-    dim_out: int = RP_DIM,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Johnson–Lindenstrauss dimensionality reduction: project each
-    vector onto RP_DIM deterministic ±1 hyperplanes. Emits one row per
-    (id, output dimension) with the exact projected value.
-
-    Exactness: components are fixed-point-quantized (FIXED_POINT shift
-    — exact in IEEE), the GEMM is int64 × ±1 (exact, order-free), and
-    the single division back to double is one IEEE op, so the DuckDB
-    oracle — which rebuilds the sign matrix from md5 parity and sums
-    relationally — matches bit-for-bit. Scale shape: map-only Arrow
-    GEMM, no shuffle; the matrix is a closure constant (at real scale a
-    broadcast of dim_in×dim_out bytes). Downstream consumers rerank in
-    the reduced space and refine against the full vectors — the
-    standard two-stage ANN memory/recall trade."""
-    import pyarrow as pa
-
-    first = vectors.select(F.size(vec_col).alias("d")).first()
-    dim_in = int(first["d"]) if first else 0
-    signs = _rp_signs(dim_in, dim_out)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("pos", T.LongType()),
-            T.StructField("proj_val", T.DoubleType()),
-        ]
-    )
-
-    def project(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(batch.schema.get_field_index(id_col)).to_numpy(
-                zero_copy_only=False
-            )
-            mat = (
-                batch.column(batch.schema.get_field_index(vec_col))
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, dim_in)
-                .astype(np.float64)
-            )
-            fixed = np.floor(mat * float(FIXED_POINT) + 0.5).astype(np.int64)
-            proj = fixed @ signs  # (n, dim_out) exact int64
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(ids.astype(np.int64), dim_out), pa.int64()),
-                    pa.array(np.tile(np.arange(dim_out, dtype=np.int64), n), pa.int64()),
-                    pa.array(
-                        proj.astype(np.float64).reshape(-1) / float(FIXED_POINT),
-                        pa.float64(),
-                    ),
-                ],
-                names=[id_col, "pos", "proj_val"],
-            )
-
-    return vectors.select(id_col, vec_col).mapInArrow(project, schema=out_schema)
-
-
-def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: JL-project the embeddings table to RP_DIM dims."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return random_project(e).orderBy("vec_id", "pos")
+def _rp_kernel(payload, batch, mat):
+    out_col, dim_out = payload
+    proj = _quantize_mat(mat) @ _rp_signs(mat.shape[1], dim_out)  # exact int64
+    return {out_col: proj / float(FIXED_POINT)}
 
 
 def random_project_wide(
@@ -751,45 +644,45 @@ def random_project_wide(
     vec_col: str = "embedding",
     out_col: str = "proj",
 ) -> DataFrame:
-    """random_project in wide form: appends the projected vector as one
-    ``array<double>`` column (keeping every input column) — the shape
-    the reduced-space search tier consumes. Same deterministic sign
-    matrix and fixed-point GEMM as the long form."""
-    import pyarrow as pa
+    """Johnson–Lindenstrauss dimensionality reduction: append each
+    vector's projection onto ``dim_out`` deterministic ±1 hyperplanes as
+    one ``array<double>`` column ``out_col``, keeping every input
+    column — the shape the reduced-space search tier consumes. The
+    input width comes from each batch's matrix, so building the frame
+    runs no job.
 
-    first = vectors.select(F.size(vec_col).alias("d")).first()
-    dim_in = int(first["d"]) if first else 0
-    signs = _rp_signs(dim_in, dim_out)
+    Exactness: components are fixed-point-quantized (FIXED_POINT shift
+    — exact in IEEE), the GEMM is int64 × ±1 (exact, order-free), and
+    the single division back to double is one IEEE op, so the DuckDB
+    oracle — which rebuilds the sign matrix from md5 parity and sums
+    relationally — matches bit-for-bit. Scale shape: map-only Arrow
+    GEMM, no shuffle. Downstream consumers rerank in the reduced space
+    and refine against the full vectors — the standard two-stage ANN
+    memory/recall trade."""
     schema = T.StructType(
-        vectors.schema.fields
-        + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
+        vectors.schema.fields + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
     )
+    return vector_map(vectors, vec_col, _rp_kernel, (out_col, dim_out), schema)
 
-    def project(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                out = pa.array([], pa.list_(pa.float64()))
-            else:
-                mat = (
-                    batch.column(batch.schema.get_field_index(vec_col))
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(n, dim_in)
-                    .astype(np.float64)
-                )
-                fixed = np.floor(mat * float(FIXED_POINT) + 0.5).astype(np.int64)
-                proj = fixed @ signs
-                out = pa.FixedSizeListArray.from_arrays(
-                    pa.array(
-                        proj.astype(np.float64).reshape(-1) / float(FIXED_POINT),
-                        pa.float64(),
-                    ),
-                    dim_out,
-                ).cast(pa.list_(pa.float64()))
-            yield batch.append_column(out_col, out)
 
-    return vectors.mapInArrow(project, schema=schema)
+def random_project(
+    vectors: DataFrame,
+    dim_out: int = RP_DIM,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """random_project_wide in long form: one row per (id, output
+    dimension) with the exact projected value ``proj_val``."""
+    wide = random_project_wide(vectors.select(id_col, vec_col), dim_out, vec_col)
+    return wide.select(
+        F.col(id_col).cast("long").alias(id_col), F.posexplode("proj").alias("pos", "proj_val")
+    ).withColumn("pos", F.col("pos").cast("long"))
+
+
+def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver query: JL-project the embeddings table to RP_DIM dims."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return random_project(e).orderBy("vec_id", "pos")
 
 
 # --- incremental ANN: batch queries vs a persisted IVF cell index ------------
@@ -982,17 +875,12 @@ def ann_ivf_index_topk(
        1k-vector batch) it is the difference between scanning 100% and
        ~6% of a 100 TB index;
     3. the rerank is ONE numpy GEMM per index Arrow batch against the
-       unit query matrix (the knn_join_vectorized kernel — measured 16×
-       over the array-expression path, which spent everything in
-       per-row higher-order-function eval: 18.5 s → map-only GEMM for
-       1.5 M × 32 at sf30), with non-probed (cell, query) pairs masked
-       before the per-batch top-k preselection;
+       unit query matrix (_topk_kernel, shared with knn_join_vectorized),
+       with non-probed (cell, query) pairs masked before the per-batch
+       top-k preselection;
     4. the final window runs over partitions × queries × k candidate
        rows — thousands, not millions.
     """
-    import pyarrow as pa
-    from pyspark.sql import Window
-
     # ``batch`` may arrive pre-collected (list of (id, vector)) — the
     # incremental entry memoizes its batch per corpus exactly like the
     # comparator memoizes its query set, so a warm call pays no extra
@@ -1008,73 +896,12 @@ def ann_ivf_index_topk(
     q_mat = np.array([list(r[1]) for r in rows], dtype="float64")
     qd = _sq_dists(_quantize_mat(q_mat), centroids)
     probe = np.argsort(qd, axis=1, kind="stable")[:, :nprobe]  # (q, nprobe)
-    # (ncells, q) membership mask for the in-kernel rerank filter
-    mask = np.zeros((centroids.shape[0], len(q_ids)), dtype=bool)
-    for j in range(len(q_ids)):
-        mask[probe[j], j] = True
+    # (ncells, q) membership matrix of the in-kernel rerank mask
+    probed = np.zeros((centroids.shape[0], len(q_ids)), dtype=bool)
+    probed[probe, np.arange(len(q_ids))[:, None]] = True
     if prune_cells:
-        cells = sorted({int(c) for c in probe.ravel()})
-        index = index.filter(F.col("cell").isin(cells))
-    q_unit, q_zero = _unit_rows(q_mat)
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def topk_per_batch(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0).to_numpy(zero_copy_only=False)
-            cell = b.column(1).to_numpy(zero_copy_only=False)
-            mat = (
-                b.column(2)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype("float64")
-                .reshape(n, -1)
-            )
-            mat, zero_rows = _unit_rows(mat)
-            sims = np.round(mat @ q_unit.T, 6)  # (n, q), ROUNDED
-            if zero_rows.any():
-                sims[zero_rows, :] = -1.0
-            if q_zero.any():
-                sims[:, q_zero] = -1.0
-            sims[~mask[cell]] = -2.0  # only probed (cell, query) pairs count
-            m = min(k, n)
-            out_q, out_n, out_s = [], [], []
-            for j in range(sims.shape[1]):
-                # tie-safe: see _topk_tie_safe (the oracle ranks by
-                # rounded cos DESC, neighbor_id ASC)
-                rows_j = _topk_tie_safe(sims[:, j], ids, m)
-                out_q.extend([q_ids[j]] * len(rows_j))
-                out_n.extend(ids[rows_j])
-                out_s.extend(sims[rows_j, j])
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(out_q, pa.int64()),
-                    "neighbor_id": pa.array(out_n, pa.int64()),
-                    "cos_sim": pa.array(out_s, pa.float64()),
-                }
-            )
-
-    cands = index.select(id_col, "cell", vec_col).mapInArrow(
-        topk_per_batch, cand_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cands.filter(F.col("cos_sim") > -2.0)  # drop masked pairs
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+        index = index.filter(F.col("cell").isin(sorted({int(c) for c in probe.ravel()})))
+    return _rank_topk(index.select(id_col, "cell", vec_col), vec_col, q_ids, q_mat, k, probed)
 
 
 def incremental_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1093,10 +920,10 @@ def incremental_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 distance, candidates restricted to old ids, identical
     rounded-cosine rerank.
 
-    The quantizer geometry is CORPUS-ADAPTIVE (IVF_ADAPTIVE_TIERS,
-    r13 VERDICT ask 3): a fixed 16-cell layout let a 32-query batch's
-    probe union cover every cell, so nothing pruned and the increment
-    lost to the exact-kNN comparator at every scale. The layout is a
+    The quantizer geometry is CORPUS-ADAPTIVE (IVF_ADAPTIVE_TIERS): a
+    fixed 16-cell layout let a 32-query batch's probe union cover every
+    cell, so nothing pruned and the increment lost to the exact-kNN
+    comparator at every scale. The layout is a
     pure step function of COUNT(*) shared with the oracle's params CTE,
     so both engines derive the identical cell structure."""
     import hashlib
@@ -1174,7 +1001,7 @@ def _sq_dists(qmat: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
     if cents.shape[0] == 0:
         # the (0, 0) empty quantizer (ivf_train_centroids on an empty
         # sample) must fail with a named cause, not a matmul dimension
-        # error — ADVICE r12
+        # error
         raise ValueError(
             "_sq_dists: empty centroid set — the quantizer was trained "
             "on an empty sample; guard the 0-row shape upstream"
@@ -1183,6 +1010,11 @@ def _sq_dists(qmat: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
     cc = (cents * cents).sum(axis=1)
     qc = qmat @ cents.T
     return qq[:, None] - 2 * qc + cc[None, :]
+
+
+def _kmeans_kernel(cents, batch, mat):
+    d = _sq_dists(_quantize_mat(mat), cents)
+    return {"cluster": d.argmin(axis=1), "dist_fixed": d.min(axis=1)}
 
 
 def kmeans_assign(
@@ -1195,37 +1027,8 @@ def kmeans_assign(
     Arrow pass — the distance tensor is the dominant cost of a k-means
     sweep, so it is computed once and both outputs read it. ``cents``
     must be int64 q-space centroids (see ``_quantize_mat``)."""
-    import pyarrow as pa
-
-    schema = T.StructType(
-        vectors.schema.fields
-        + [
-            T.StructField("cluster", T.LongType()),
-            T.StructField("dist_fixed", T.LongType()),
-        ]
-    )
-
-    def run(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                cl = pa.array([], pa.int64())
-                df_ = pa.array([], pa.int64())
-            else:
-                mat = (
-                    batch.column(batch.schema.get_field_index(vec_col))
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(n, -1)
-                )
-                d = _sq_dists(_quantize_mat(mat), cents)
-                cl = pa.array(d.argmin(axis=1).astype(np.int64), pa.int64())
-                df_ = pa.array(d.min(axis=1).astype(np.int64), pa.int64())
-            yield batch.append_column("cluster", cl).append_column(
-                "dist_fixed", df_
-            )
-
-    return vectors.mapInArrow(run, schema=schema)
+    schema = _with_longs(vectors, "cluster", "dist_fixed")
+    return vector_map(vectors, vec_col, _kmeans_kernel, cents, schema)
 
 
 def kmeans_fit(
@@ -1354,7 +1157,7 @@ def kmeans_assign_cte_sql(
     # expression (string) k/train_max: this per-call check can't fire, so
     # the same invariant is enforced at definition time on every
     # IVF_ADAPTIVE_TIERS row (train_max >= ncells assert at module load) —
-    # the only source of expression geometry. ADVICE r14.
+    # the only source of expression geometry.
     where = (
         f"WHERE u.pos >= {slice_lo} AND u.pos < {slice_lo + slice_len}"
         if slice_len is not None
@@ -1562,6 +1365,22 @@ def pq_train(
     return cents
 
 
+def _pq_schema(m: int) -> str:
+    codes = "".join(f"code_{s} long, " for s in range(m))
+    return f"vec_id long, {codes}recon_err_fixed long"
+
+
+def _pq_kernel(cents, batch, mat):
+    qmat = _quantize_mat(mat)
+    sub = cents[0].shape[1]
+    out = {"recon_err_fixed": np.zeros(len(qmat), dtype=np.int64)}
+    for s, cb in enumerate(cents):
+        d = _sq_dists(qmat[:, s * sub : (s + 1) * sub], cb)
+        out[f"code_{s}"] = d.argmin(axis=1)
+        out["recon_err_fixed"] += d.min(axis=1)
+    return out
+
+
 def pq_encode(
     vectors: DataFrame, cents: list["np.ndarray"], vec_col: str = "embedding"
 ) -> DataFrame:
@@ -1573,47 +1392,8 @@ def pq_encode(
     implied product centroid). Map-only — at 100 TB the encoder
     pipelines with the scan, codebooks ride as an m·k·(dim/m)
     broadcast constant."""
-    import pyarrow as pa
-
-    m = len(cents)
-    sub = cents[0].shape[1]
-    schema = T.StructType(
-        [T.StructField("vec_id", T.LongType())]
-        + [T.StructField(f"code_{s}", T.LongType()) for s in range(m)]
-        + [T.StructField("recon_err_fixed", T.LongType())]
-    )
-
-    def run(batches):
-        for batch in batches:
-            n = batch.num_rows
-            cols = {
-                "vec_id": batch.column(
-                    batch.schema.get_field_index("vec_id")
-                ).cast(pa.int64())
-            }
-            if n == 0:
-                for s in range(m):
-                    cols[f"code_{s}"] = pa.array([], pa.int64())
-                cols["recon_err_fixed"] = pa.array([], pa.int64())
-            else:
-                mat = (
-                    batch.column(batch.schema.get_field_index(vec_col))
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(n, -1)
-                )
-                qmat = _quantize_mat(mat)
-                err = np.zeros(n, dtype=np.int64)
-                for s in range(m):
-                    d = _sq_dists(qmat[:, s * sub : (s + 1) * sub], cents[s])
-                    cols[f"code_{s}"] = pa.array(
-                        d.argmin(axis=1).astype(np.int64), pa.int64()
-                    )
-                    err += d.min(axis=1)
-                cols["recon_err_fixed"] = pa.array(err, pa.int64())
-            yield pa.RecordBatch.from_pydict(cols)
-
-    return vectors.select("vec_id", vec_col).mapInArrow(run, schema=schema)
+    frame = vectors.select("vec_id", vec_col)
+    return vector_map(frame, vec_col, _pq_kernel, cents, _pq_schema(len(cents)))
 
 
 def _pq_codebooks(
@@ -1651,14 +1431,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     books = _pq_codebooks(spark, sf_dir, e)
     if books is None:  # empty corpus: no fit, empty code table
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [T.StructField("vec_id", T.LongType())]
-                + [T.StructField(f"code_{s}", T.LongType()) for s in range(PQ_M)]
-                + [T.StructField("recon_err_fixed", T.LongType())]
-            ),
-        )
+        return spark.createDataFrame([], _pq_schema(PQ_M))
     return pq_encode(e, books).orderBy("vec_id")
 
 
@@ -1847,8 +1620,8 @@ def ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@TOP_K gate for EVERY ANN tier against the exact tier
-    (VERDICT r7 ask 3): per tier the number of returned neighbors and
+    """Recall@TOP_K gate for EVERY ANN tier against the exact tier:
+    per tier the number of returned neighbors and
     the exact integer intersection with ann_cosine_topk's result set.
     Each tier is deterministic and float-free up to its final rounded-
     cosine rerank (md5-parity SRP planes, integer-lattice IVF quantizer
@@ -1917,9 +1690,8 @@ def _ann_tier_ctes() -> str:
     rounded-cosine rerank, plus the exact tier's set (exact10).
 
     ann_recall_sql() appends the intersection-count report;
-    ann_tier_topk_sql() appends a per-tier (vec_id, cos_sim) final —
-    the VERDICT r10 ask 1 that promotes the approximate tiers from
-    rows-only to hash-gated driver entries."""
+    ann_tier_topk_sql() appends a per-tier (vec_id, cos_sim) final,
+    which makes each approximate tier a hash-gated driver entry."""
     Q, K, FP = QUERY_VEC_ID, TOP_K, FIXED_POINT
     sub = PQ_ORACLE_DIM // PQ_M
     cos = _ann_cos_expr()
@@ -2077,7 +1849,7 @@ def ann_recall_sql() -> str:
 
 
 def ann_tier_topk_sql(tier_cte: str) -> str:
-    """Per-tier DuckDB oracle (VERDICT r10 ask 1): the shared tier-CTE
+    """Per-tier DuckDB oracle: the shared tier-CTE
     chain, then the named tier's top-k row set re-emitted with its
     rounded-cosine score — the exact (vec_id, cos_sim) rows the Spark
     tier returns, so ann_lsh_topk / ann_ivf_topk / ann_ivfpq_topk /

@@ -67,9 +67,17 @@ def warm_mode() -> bool:
 #: 4.7 s in-suite = its isolated number. The 100 TB lesson, measured at
 #: sf30: never pin the fact table — rely on storage layout + columnar
 #: scan; pin dimensions and mid-size inputs only.
-_TABLE_CACHE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CACHE_MAX_BYTES", 2 * 1024 * 1024 * 1024)
-)
+_TABLE_CACHE_MAX_BYTES = 2 * 1024 * 1024 * 1024
+
+
+def path_bytes(path: str) -> int:
+    """On-disk bytes of a file, or of every file under a directory; 0
+    for a missing path."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f)) for root, _, files in os.walk(path) for f in files
+    )
 
 
 def _load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -115,15 +123,7 @@ def _pinned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     task/Python-worker round-trips for microseconds of work each. A real
     100 TB table has thousands of row groups and never needs this."""
     df = _load_raw(spark, sf_dir, name)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):  # multi-file table (e.g. scaled replicas)
-        size = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-        )
-    else:
-        size = os.path.getsize(path)
+    size = path_bytes(os.path.join(sf_dir, f"{name}.parquet"))
     if size > _TABLE_CACHE_MAX_BYTES:
         # too big to pin (see _TABLE_CACHE_MAX_BYTES): memoize the
         # un-persisted frame so repeat loads skip the size walk, and
@@ -142,18 +142,6 @@ def _pinned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: inputs far beyond the bench legs; on a real cluster the equivalent
 #: knob is the storage-memory fraction.
 _BUCKETED_PERSIST_MAX_BYTES = 8 * 1024 * 1024 * 1024
-
-
-def _source_bytes(sf_dir: str, name: str) -> int:
-    """Total on-disk bytes of a source table (file or directory)."""
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(p):
-        return os.path.getsize(p)
-    total = 0
-    for root, _dirs, files in os.walk(p):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def _file_tail_md5(path: str, nbytes: int = 65536) -> str:
@@ -394,7 +382,7 @@ def _bucketed(
     # fact-fact query at the 100× leg — see _BUCKETED_PERSIST_MAX_BYTES
     # for the measurement and the cap's rationale).
     out = spark.table(tbl)
-    if _source_bytes(sf_dir, name) <= _BUCKETED_PERSIST_MAX_BYTES:
+    if path_bytes(os.path.join(sf_dir, f"{name}.parquet")) <= _BUCKETED_PERSIST_MAX_BYTES:
         out = out.persist()
     return out
 

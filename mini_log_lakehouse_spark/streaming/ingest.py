@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from mini_log_lakehouse_spark.session import default_parallelism, memo, scratch_dir, tune
 from mini_log_lakehouse_spark.sources.logs import parse_lines
+from mini_log_lakehouse_spark.sources.registry import path_bytes
 
 #: Target SOURCE bytes per streaming state partition. Every shuffle
 #: partition of a stateful streaming operator owns its own state store
@@ -47,18 +48,6 @@ from mini_log_lakehouse_spark.sources.logs import parse_lines
 #: on it (OPTIMIZATION_r15.md has the measurements). On a real feed
 #: bytes/target saturates the clamp: the local default only DOWN-sizes.
 _STREAM_STATE_TARGET_BYTES = 8 << 20
-
-
-def _path_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(path)
-            for f in files
-        )
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    return 0
 
 
 def _stream_partitions(sf_dir: str, python_stateful: bool = False) -> int:
@@ -77,7 +66,7 @@ def _stream_partitions(sf_dir: str, python_stateful: bool = False) -> int:
     clamp."""
     if python_stateful:
         return default_parallelism()
-    total = _path_bytes(os.path.join(sf_dir, "events.parquet"))
+    total = path_bytes(os.path.join(sf_dir, "events.parquet"))
     if total <= 0:
         return default_parallelism()
     return min(-(-total // _STREAM_STATE_TARGET_BYTES), default_parallelism())

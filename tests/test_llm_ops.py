@@ -276,6 +276,30 @@ def test_lsh_bucket_determinism(spark, sf_dir):
     assert b1 == b2
 
 
+def test_lsh_bucketed_raises_on_null_embeddings(spark):
+    """A NULL vector fails the batch with its count named: Arrow's
+    flatten skips NULL rows, so reading the batch as a matrix would
+    otherwise spread the other rows' values over every row."""
+    vec = [float(i % 7) for i in range(64)]
+    df = spark.createDataFrame(
+        [(1, vec), (2, None), (3, vec), (4, None)], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="2 of 4 vectors are NULL"):
+        similarity.lsh_bucketed(df).collect()
+
+
+def test_random_projections_build_without_a_job(spark, sf_dir):
+    """The input width comes from each batch's matrix, not from a
+    ``first()`` probe: building either projection runs no Spark job."""
+    from mini_log_lakehouse_spark.sources.registry import load_table
+    from tests.job_count import count_jobs
+
+    e = load_table(spark, sf_dir, "embeddings")
+    for build in (similarity.random_project, similarity.random_project_wide):
+        _, jobs = count_jobs(spark, lambda: build(e))
+        assert jobs == 0, build.__name__
+
+
 def test_lang_id_on_real_text(spark):
     rows = [
         (0, "the cat is on the mat and it is warm", "en"),
