@@ -2142,9 +2142,13 @@ def _blocked_cosine_pairs(
                 }
             )
 
+        # a lazy checkpoint: the first action runs the Python stage
+        # once, and the final sort's range sampler reads its blocks
+        # instead of running the stage a second time
         return (
             src.groupBy("_blk")
             .applyInArrow(block_pairs, schema=out_schema)
+            .localCheckpoint(eager=False)
             .select(
                 block_col,
                 "id_a",
@@ -2215,7 +2219,10 @@ def semantic_dedup_pairs(
     pair-joinable, the same dial SemDeDup itself exposes)."""
     from mini_log_lakehouse_spark.operators.similarity import kmeans_assign
 
-    assigned = kmeans_assign(e.select("vec_id", "embedding"), cents).select(
+    # NULL embeddings never pair (_blocked_cosine_pairs drops them) and
+    # the assignment cannot read them: drop them before it
+    vecs = e.select("vec_id", "embedding").filter(F.col("embedding").isNotNull())
+    assigned = kmeans_assign(vecs, cents).select(
         F.col("cluster"), F.col("vec_id"), F.col("embedding")
     )
     return _blocked_cosine_pairs(assigned, "cluster", threshold)

@@ -780,6 +780,36 @@ def test_semdedup_cluster_blocking_agrees_with_label_blocking(spark):
     assert by_label == by_cluster
 
 
+def test_semdedup_skips_null_embeddings(spark):
+    """A NULL embedding never pairs, so 4 NULL rows among 12 leave the
+    pairs of the 8 non-NULL rows unchanged instead of failing the
+    k-means assignment."""
+    from mini_log_lakehouse_spark.operators import similarity as sim_ops
+
+    vecs = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.99, 0.05, 0.0]),
+        (3, [0.98, 0.0, 0.08]),
+        (4, [0.0, 1.0, 0.0]),
+        (5, [0.04, 0.99, 0.0]),
+        (6, [0.0, 0.0, 1.0]),
+        (7, [0.0, 0.07, 0.99]),
+        (8, [0.6, 0.6, 0.5]),
+    ]
+    nulls = [(vid, None) for vid in (9, 10, 11, 12)]
+    ddl = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(vecs, ddl)
+    e = spark.createDataFrame(vecs + nulls, ddl)
+    _, cents, _ = sim_ops.kmeans_fit(clean, k=3, iters=3)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in dedup.semantic_dedup_pairs(df, cents, 0.9).collect())
+
+    expected = pairs(clean)
+    assert expected
+    assert pairs(e) == expected
+
+
 def test_hybrid_rrf_fusion_semantics(spark, sf_dir):
     """RRF invariants on the real corpus: a doc in both tiers scores
     the sum of its two terms, a single-tier doc scores exactly its one

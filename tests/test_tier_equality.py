@@ -17,8 +17,36 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+class _KernelSpy:
+    """Wraps kernel ``module.name`` to tell which tier ran: calls in this
+    process land in ``local`` (the driver strip), and the accumulator
+    also counts the calls made in Python workers (worker strips or the
+    grouped tier). Neither moves when the distributed tier runs."""
+
+    def __init__(self, spark, monkeypatch, module, name):
+        real = getattr(module, name)
+        self.local = local = []
+        self.acc = acc = spark.sparkContext.accumulator(0)
+
+        def spy(*args):
+            local.append(1)
+            acc.add(1)
+            return real(*args)
+
+        monkeypatch.setattr(module, name, spy)
+
+    def rows(self, build):
+        """(sorted rows of ``build()``, the tier that produced them)."""
+        self.local.clear()
+        self.acc.value = 0
+        rows = _rows(build())
+        where = "driver" if self.local else "workers" if self.acc.value else "distributed"
+        return rows, where
+
+
+def _worker_strips(monkeypatch):
+    # strip_rows == 1 < n: block_map takes the mapInArrow path
+    monkeypatch.setattr(local_tier, "LOCAL_STRIP_BYTES", 1)
 
 
 @pytest.fixture(scope="module")
@@ -40,22 +68,36 @@ def dense_graph(spark):
 def test_triangle_tiers_identical(spark, dense_graph, monkeypatch):
     # default on this near-clique fixture: the dense GEMM tier (the
     # guard sanity check in the link-prediction test below proves
-    # V² < wedge mass on the same graph)
-    dense = _rows(funnels.triangle_counts(dense_graph))
+    # V² < wedge mass on the same graph), one strip on the driver
+    spy = _KernelSpy(spark, monkeypatch, funnels, "_triangle_kernel")
+    tri = lambda: funnels.triangle_counts(dense_graph)  # noqa: E731
+    driver, where = spy.rows(tri)
+    assert where == "driver"
+    _worker_strips(monkeypatch)
+    workers, where = spy.rows(tri)
+    assert where == "workers"
     monkeypatch.setattr(local_tier, "DENSE_MAX_NODES", 0)
-    bcast = _rows(funnels.triangle_counts(dense_graph))
+    bcast, where = spy.rows(tri)
+    assert where == "distributed"
     monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
-    wedge = _rows(funnels.triangle_counts(dense_graph))
-    assert dense == bcast == wedge
-    assert len(dense) > 0
+    wedge, where = spy.rows(tri)
+    assert driver == workers == bcast == wedge
+    assert len(driver) > 0
 
 
 def test_link_prediction_tiers_identical(spark, dense_graph, monkeypatch):
-    dense = _rows(funnels.link_prediction(dense_graph))
+    spy = _KernelSpy(spark, monkeypatch, funnels, "_lp_kernel")
+    lp = lambda: funnels.link_prediction(dense_graph)  # noqa: E731
+    driver, where = spy.rows(lp)
+    assert where == "driver"
+    _worker_strips(monkeypatch)
+    workers, where = spy.rows(lp)
+    assert where == "workers"
     monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
-    wedge = _rows(funnels.link_prediction(dense_graph))
-    assert dense == wedge
-    assert len(dense) > 0
+    wedge, where = spy.rows(lp)
+    assert where == "distributed"
+    assert driver == workers == wedge
+    assert len(driver) > 0
     # guard sanity: the fixture really does take the dense tier by
     # default — its V² is below the wedge mass
     deg = {}
@@ -76,17 +118,17 @@ def test_blocked_cosine_tiers_identical(spark, monkeypatch):
     e = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
+    spy = _KernelSpy(spark, monkeypatch, dedup, "_fold_pair_scores")
+    pairs = lambda: dedup.embedding_cosine_pairs(e, threshold=-1.0)  # noqa: E731
     # largest block: label 0, 12 rows × 8 dims = 96 cells
     monkeypatch.setattr(local_tier, "LOCAL_MAX_CELLS", 96)
-    vec = dedup.embedding_cosine_pairs(e, threshold=-1.0)
-    assert "FlatMapGroupsInArrow" in _plan(vec)
-    gemm = _rows(vec)
+    gemm, where = spy.rows(pairs)
+    assert where == "workers"  # one grouped task per block
     # 12 rows are under a 95-cell cap read as rows, but 96 cells are over
     # it: the block must not ride into one task
     monkeypatch.setattr(local_tier, "LOCAL_MAX_CELLS", 95)
-    pairs = dedup.embedding_cosine_pairs(e, threshold=-1.0)
-    assert "FlatMapGroupsInArrow" not in _plan(pairs)
-    join = _rows(pairs)
+    join, where = spy.rows(pairs)
+    assert where == "distributed"
     assert gemm == join  # includes cos_sim values, bit-for-bit after round
     assert len(gemm) > 0
 
@@ -134,15 +176,19 @@ def test_ngram_jaccard_tiers_identical(spark, monkeypatch):
         None,
     ]
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    spy = _KernelSpy(spark, monkeypatch, dedup, "_ngram_gemm_kernel")
     # budget None: the guard has its own test; this one pins the rows
-    dense_df = dedup.ngram_jaccard_pairs(docs, candidate_budget=None)
-    assert "MapInArrow" in _plan(dense_df)
-    dense = _rows(dense_df)
+    pairs = lambda: dedup.ngram_jaccard_pairs(docs, candidate_budget=None)  # noqa: E731
+    driver, where = spy.rows(pairs)
+    assert where == "driver"
+    _worker_strips(monkeypatch)
+    workers, where = spy.rows(pairs)
+    assert where == "workers"
     monkeypatch.setattr(local_tier, "LOCAL_MAX_ROWS", -1)
-    join_df = dedup.ngram_jaccard_pairs(docs, candidate_budget=None)
-    assert "MapInArrow" not in _plan(join_df)
-    assert dense == _rows(join_df)
-    ids = {(a, b) for a, b, _ in dense}
+    join, where = spy.rows(pairs)
+    assert where == "distributed"
+    assert driver == workers == join
+    ids = {(a, b) for a, b, _ in driver}
     assert {(0, 1), (0, 2), (1, 2), (0, 3), (8, 9)} <= ids
     assert not any(11 in p or 12 in p for p in ids)
 
