@@ -7,6 +7,12 @@ Run: python tools/sweep_times.py [--sf SF_DIR] [--iters N] query [query ...]
 The r16 optimization round's A/B harness (same methodology as the r15
 sweep): each query is built fresh per iteration (no cross-iteration
 result reuse), executed to the noop sink, labeled in the UI.
+
+``compiles`` maps each query to ``[count, seconds]``: the Janino
+compiles over its timed iterations (Spark's ``CodegenMetrics`` and
+``CodeGenerator.compileTime``). The warm-up has compiled every shape,
+so a nonzero count means an evicting codegen cache or code that
+inlines a literal varying between iterations.
 """
 
 from __future__ import annotations
@@ -39,23 +45,33 @@ def main() -> None:
     machine = bench.host()
     spark = get_spark(app_name="sweep-times-r16")
     spark.sparkContext.setLogLevel("ERROR")
+    jvm = spark._jvm
+    compile_count = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime
     out: dict[str, float] = {}
+    compiles: dict[str, list] = {}
     for name in names:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"warmup: {name}")
         fn(spark, args.sf).write.format("noop").mode("overwrite").save()
         times = []
+        count0, ns0 = compile_count(), compile_ns()
         for i in range(args.iters):
             spark.sparkContext.setJobDescription(f"timed[{i}]: {name}")
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
         out[name] = round(statistics.median(times), 4)
-        print(f"{name}: {out[name]} s  (runs: {[round(t, 3) for t in times]})",
-              file=sys.stderr)
+        compiles[name] = [compile_count() - count0,
+                          round((compile_ns() - ns0) / 1e9, 4)]
+        print(f"{name}: {out[name]} s  (runs: {[round(t, 3) for t in times]}, "
+              f"compiles: {compiles[name]})", file=sys.stderr)
     spark.stop()
     payload = json.dumps(
-        {"sf_dir": args.sf, "iters": args.iters, "host": machine, "times": out}
+        {"sf_dir": args.sf, "iters": args.iters, "host": machine, "times": out,
+         "compiles": compiles}
     )
     print(payload)
     if args.out:
