@@ -451,12 +451,163 @@ def _band_join_pairs(banded: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _pair_candidates(banded: DataFrame, key: str, small: bool) -> DataFrame:
-    """Size-adaptive candidate pairing (strategies emit identical pair
-    sets; see _band_join_pairs vs _bucket_pairs). ``small`` comes from
-    the memoized per-corpus decision aggregate; unknown sizes default to
-    the scale-safe group-and-pair."""
-    return _band_join_pairs(banded, key) if small else _bucket_pairs(banded, key)
+# --- the dedup pair pipeline --------------------------------------------------
+#
+# Every pair path (MinHash direct, collapsed and incremental; n-gram
+# Jaccard) runs the same fragments: _collapse, then _signatures,
+# _pair_candidates and _estimate_join (MinHash), then _doc_pairs /
+# _expand_pairs back to doc grain.
+
+
+def _collapse(
+    docs: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The exact-duplicate collapse: ``(members, reps)``, with members
+    (_fp, id_col) mapping every doc to its md5 text fingerprint and reps
+    (_fp, text_col) holding one row per distinct text. Identical texts
+    have identical shingle sets, signatures and bands, so a pair result
+    at doc grain is the result over reps plus the member map
+    (_doc_pairs)."""
+    fp = F.md5(F.col(text_col)).alias("_fp")
+    members = docs.select(fp, F.col(id_col))
+    reps = docs.select(fp, F.col(text_col)).dropDuplicates(["_fp"])
+    return members, reps
+
+
+def _signatures(df: DataFrame, key: str, text_col: str, k: int) -> DataFrame:
+    """(key, sig) MinHash signatures of the non-NULL texts of ``df``: a
+    NULL text has no shingles, so it gets no signature and pairs with
+    nothing on any path. Two selects: the shingle-hash array
+    materializes once, then the K integer-only affine folds read it
+    (CollapseProject keeps the boundary because ``_base`` is non-cheap
+    and referenced K times)."""
+    base = _cached_expr(
+        ("minhash_base", text_col), lambda: minhash_base_hashes(F.col(text_col))
+    )
+    sig = _cached_expr(
+        ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
+    )
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(key, base.alias("_base"))
+        .select(key, sig.alias("sig"))
+    )
+
+
+def _hashed_bands(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """Band rows of rep signatures (_fp, sig) plus ``bh``, the 64-bit
+    hash of (band, band_key) that buckets the index band table (see
+    minhash_signature_index)."""
+    return _banded(sigs, "_fp", bands=bands, rows=rows).withColumn(
+        "bh", F.xxhash64("band", "band_key")
+    )
+
+
+def _pair_candidates(
+    sigs: DataFrame,
+    key: str,
+    pair: tuple[str, str],
+    small: bool,
+    bands: int = MINHASH_BANDS,
+    rows: int = MINHASH_ROWS,
+) -> DataFrame:
+    """Distinct LSH candidate pairs of the (key, sig) table ``sigs``,
+    named ``pair``: keys sharing ≥ 1 band bucket, paired size-adaptively
+    (the strategies emit identical pair sets; see _band_join_pairs vs
+    _bucket_pairs). ``small`` comes from the memoized per-corpus
+    decision aggregate; unknown sizes default to the scale-safe
+    group-and-pair. The pair-dedup runs before signatures are
+    re-attached, so the estimate join touches each pair once."""
+    banded = _banded(sigs, key, bands=bands, rows=rows)
+    pairs = _band_join_pairs(banded, key) if small else _bucket_pairs(banded, key)
+    return pairs.select(
+        F.col(f"{key}_a").alias(pair[0]), F.col(f"{key}_b").alias(pair[1])
+    ).distinct()
+
+
+def _estimate_join(
+    cand: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    key: str,
+    pair: tuple[str, str],
+    k: int,
+    min_est: float | None,
+    hints: tuple[str | None, str | None] = (None, None),
+) -> DataFrame:
+    """The MinHash estimate join: each candidate ``pair`` of ``cand``
+    re-reads its signatures from the materialized (key, sig) tables
+    ``sigs_a`` and ``sigs_b`` (each side join-hinted as ``hints`` says)
+    and scores ``est_jaccard = round(agree / k, 6)``. ``min_est``
+    filters here, before any expansion multiplies rows."""
+    a, b = pair
+    sa = sigs_a.select(F.col(key).alias(a), F.col("sig").alias("sig_a"))
+    sb = sigs_b.select(F.col(key).alias(b), F.col("sig").alias("sig_b"))
+    sa = sa if hints[0] is None else sa.hint(hints[0])
+    sb = sb if hints[1] is None else sb.hint(hints[1])
+    est = F.round(_sig_agreement(k) / F.lit(k), 6).alias("est_jaccard")
+    pairs = cand.join(sa, a).join(sb, b).select(a, b, est)
+    if min_est is not None:
+        pairs = pairs.filter(F.col("est_jaccard") >= min_est)
+    return pairs
+
+
+def _expand_pairs(
+    rep_pairs: DataFrame,
+    members_a: DataFrame,
+    members_b: DataFrame,
+    pair: tuple[str, str],
+    id_col: str,
+    score: str,
+) -> DataFrame:
+    """Doc pairs (id_a < id_b, ``score``) from the rep pairs ``pair`` of
+    ``rep_pairs``, through each side's member map (_fp, id_col)."""
+    a, b = pair
+    ma = members_a.select(F.col("_fp").alias(a), F.col(id_col).alias("_ida"))
+    mb = members_b.select(F.col("_fp").alias(b), F.col(id_col).alias("_idb"))
+    return (
+        rep_pairs.join(ma, a)
+        .join(mb, b)
+        .select(
+            F.least("_ida", "_idb").alias("id_a"),
+            F.greatest("_ida", "_idb").alias("id_b"),
+            score,
+        )
+    )
+
+
+def _doc_pairs(
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    id_col: str,
+    score: str,
+    min_score: float | None,
+    classes: DataFrame | None = None,
+) -> DataFrame:
+    """The doc-grain tail of a collapsed pair path: the rep pairs
+    (_fp_a, _fp_b, ``score``) expanded through ``members``, plus every
+    same-text pair at ``score`` exactly 1.0 (identical texts agree
+    everywhere). A NULL fingerprint never equals itself, so NULL texts
+    form no same-text pair. ``classes`` (_shfp), when given, further
+    limits same-text pairs to the fingerprints it holds."""
+    same = members.alias("x").join(
+        members.alias("y"),
+        (F.col("x._fp") == F.col("y._fp"))
+        & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+    )
+    if classes is not None:
+        same = same.join(classes, F.col("x._fp") == F.col("_shfp"), "left_semi")
+    same = same.select(
+        F.col(f"x.{id_col}").alias("id_a"),
+        F.col(f"y.{id_col}").alias("id_b"),
+        F.lit(1.0).alias(score),
+    )
+    if min_score is not None and min_score > 1.0:
+        same = same.filter(F.lit(False))
+    cross = _expand_pairs(
+        rep_pairs, members, members, ("_fp_a", "_fp_b"), id_col, score
+    )
+    return cross.unionByName(same)
 
 
 def minhash_candidate_pairs(
@@ -479,44 +630,45 @@ def minhash_candidate_pairs(
     what the bench entry measures; re-dialing does not change any
     plan shape, only the band explode width and bucket selectivity.
 
-    Execution shape (the one that survives 100 TB):
+    One pair pipeline, shared with the incremental
+    (minhash_pairs_vs_index) and n-gram (ngram_jaccard_pairs) paths:
 
-    1. the signature table is **computed once and cached** (lazy
-       ``persist``; on a cluster you'd write it to a table) — every
-       downstream branch reads the 0.5 KB/doc signatures without
-       recomputing shingle hashes. Lazy persist, not localCheckpoint:
-       checkpointing pays a separate materialization job + RDD
-       conversion that costs more than the signatures themselves
-       (measured 5.2 s → 1.3 s for the whole pipeline at sf0.1), while a
-       deterministic expression tree caches safely on first use;
-    2. the band self-join shuffles only narrow (id, band, raw 4-long
-       band_key tuple) rows — no hashed key anywhere, so bucketing is
-       collision-free and bit-identical to the relational oracle;
-    3. pair-dedup happens on bare (id_a, id_b) *before* signatures are
-       re-attached, so the estimate join touches each surviving pair once.
+    1. _collapse: the member map (_fp, id) and one rep per distinct text;
+    2. _signatures: the (key, sig) table of the non-NULL texts, persisted
+       once (lazy ``persist``; on a cluster you'd write it to a table)
+       and re-read by every downstream branch without re-hashing
+       shingles. Lazy persist, not localCheckpoint: checkpointing pays
+       a separate materialization job and an RDD conversion that cost
+       more than the signatures themselves;
+    3. _pair_candidates: only the narrow (key, band, raw 4-long
+       band_key tuple) rows pair — no hashed key, so bucketing is
+       collision-free and bit-identical to the relational oracle — and
+       the pairs are deduplicated before signatures are re-attached;
+    4. _estimate_join: the estimate and the ``min_est`` filter;
+    5. _doc_pairs: rep pairs expand to doc pairs through the member map,
+       plus every same-text pair at exactly 1.0.
 
-    Measured at 10× sf0.1 (50k docs): 23 s with signatures carried through
-    the explode → ~4 s with this shape.
-
-    ``collapse`` controls the exact-duplicate collapse pre-pass (see
-    below). ``None`` (default) decides from the data, ONCE per corpus
-    (memoized on the input's canonicalized plan hash — re-running the
-    operator over the same corpus never re-runs the decision job): one
+    Steps 2–4 are the key-grain core, _minhash_pairs_direct, and
+    ``collapse`` picks its grain: docs (no collapse) or reps (steps 1
+    and 5 around it). ``None`` (default) decides from the data, ONCE
+    per corpus (memoized on the input's canonicalized plan hash —
+    re-running the operator over the same corpus never re-runs the
+    decision job, and a memo hit builds no fingerprint plan): one
     aggregate over the 16 B/doc fingerprint table yields the duplicate
-    mass and the largest duplicate-class size, and the collapse engages
-    only when either is material (>2% duplicate docs, or any class
-    larger than 32). Both paths emit identical rows in ALL cases —
-    identical texts have identical signatures, so they share every band
-    and estimate 1.0 with or without the collapse (tested) — the choice
-    is purely which is cheaper: a near-duplicate-free corpus skips the
-    rep/member bookkeeping (a dropDuplicates shuffle plus two expansion
-    joins that are ~identity maps), while duplicate-heavy corpora keep
-    the collapse that makes the 100× bench leg feasible (quadratic-size
-    classes cost one signature each; 189 s → ~8 s warm). The class-size
-    guard matters more than the total fraction: the direct path's cost
-    blowup is per-class-pair (|A|·|B| signature-join rows where the
-    collapsed path processes 1), so one 1000-doc boilerplate class is
-    catastrophic even at 0.2% duplicate mass.
+    mass and the largest duplicate-class size, and the collapse
+    engages only when either is material (>2% duplicate docs, or any
+    class larger than 32). Both grains emit identical rows in ALL
+    cases — identical texts share every band and estimate 1.0 either
+    way, and a NULL text pairs with nothing on either (tested) — so the
+    choice is purely cost: a near-duplicate-free corpus skips the
+    rep/member bookkeeping (a dropDuplicates shuffle plus two ~identity
+    expansion joins), while a duplicate-heavy corpus pays one signature
+    per class instead of a signature join quadratic in class size
+    (SCALING.md, "Exact-duplicate collapse before MinHash LSH"). The
+    class-size guard matters more than the total fraction: the direct
+    path's cost is per class pair (|A|·|B| signature-join rows where
+    the collapsed path processes 1), so one 1000-doc boilerplate class
+    is catastrophic even at 0.2% duplicate mass.
     """
     # Signature computation is CPU-bound per row (K affine passes over the
     # shingle array) — spread it across the cores regardless of how few
@@ -524,38 +676,17 @@ def minhash_candidate_pairs(
     from mini_log_lakehouse_spark.session import default_parallelism
 
     docs = docs.repartition(default_parallelism(), F.col(id_col))
-    # Exact-duplicate collapse FIRST (the production fuzzy-dedup shape:
-    # exact dedup, then near-dup over distinct content). Identical texts
-    # have identical signatures, hence identical bands and est=1, so the
-    # LSH result at doc grain is fully determined by the result at
-    # distinct-text grain + the class membership map. Without this, a
-    # corpus with large exact-duplicate classes (normal at 100 TB —
-    # mirrors, boilerplate) makes the signature join quadratic in class
-    # size: measured at the 100× bench leg (500k docs, classes up to
-    # 2.5k), 76M candidate pairs dragged ~76 GB of signature arrays
-    # through the estimate join. Collapsed, signatures/banding/estimates
-    # run on distinct texts only and the doc-grain pairs are recovered by
-    # two cheap codegen'd expansion joins.
     corpus_hash = docs.semanticHash()
-
-    def _members() -> DataFrame:
-        return _persist_sigs(
-            "minhash_members",
-            docs.select(
-                F.col(id_col).alias("_mid"), F.md5(F.col(text_col)).alias("_fp")
-            ),
-        )
 
     def decide() -> tuple[bool, int]:
         # One aggregate over the UNPERSISTED fingerprint plan (the memo
         # guarantees it runs once per corpus per session): persisting
         # here would pin a 16 B/doc table that the no-collapse path
-        # never reads again — the accumulated-pin pressure SCALING.md
-        # documents elsewhere. When the collapse does engage, _members()
-        # below re-runs the cheap md5 scan once and persists the copy
-        # that IS re-read.
-        fps = docs.select(F.md5(F.col(text_col)).alias("_fp"))
-        classes = fps.groupBy("_fp").agg(F.count(F.lit(1)).alias("_c"))
+        # never reads again. When the collapse does engage, the member
+        # map below re-runs the cheap md5 scan once and persists the
+        # copy that IS re-read.
+        members, _ = _collapse(docs, id_col, text_col)
+        classes = members.groupBy("_fp").agg(F.count(F.lit(1)).alias("_c"))
         n_fps, n_docs, max_class = classes.agg(
             F.count(F.lit(1)), F.sum("_c"), F.max("_c")
         ).first()
@@ -579,168 +710,52 @@ def minhash_candidate_pairs(
             docs.sparkSession, ("dedup.collapse", corpus_hash), decide
         )
     small = n_keys is not None and n_keys <= _PAIR_JOIN_MAX_KEYS
-    k = bands * rows
     if not collapse:
-        # Memo-hit direct calls never even construct the fingerprint
-        # plan — the warm path is exactly the signature pipeline.
         return _minhash_pairs_direct(
             docs, id_col, text_col, min_est, small, bands, rows, n_keys
         )
-    members = _members()
-    reps = docs.select(
-        F.md5(F.col(text_col)).alias("_fp"), F.col(text_col).alias("_rtext")
-    ).dropDuplicates(["_fp"])
-    # Two selects: the shingle-hash array materializes once, then the K
-    # integer-only affine folds read it. CollapseProject keeps the
-    # boundary because `_base` is non-cheap and referenced K times.
-    base_expr = _cached_expr(
-        ("minhash_base", "_rtext"), lambda: minhash_base_hashes(F.col("_rtext"))
+    members, reps = _collapse(docs, id_col, text_col)
+    members = _persist_sigs("minhash_members", members)
+    rep_pairs = _minhash_pairs_direct(
+        reps, "_fp", text_col, min_est, small, bands, rows, n_keys, grain="rep"
     )
-    sig_expr = _cached_expr(
-        ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
-    )
-    sigs = _persist_sigs(
-        # rep-grain (_fp, sig) — distinct from the doc-grain fast-path
-        # table; keyed by the dial so a re-dialed corpus gets its own slot
-        f"minhash_rep_{bands}x{rows}",
-        reps.select("_fp", base_expr.alias("_base")).select(
-            "_fp", sig_expr.alias("sig")
-        ),
-    )
-    bcast = (
-        not small and n_keys is not None and n_keys <= _EST_BROADCAST_MAX_KEYS
-    )
-    # Pair-dedup stays EARLY (before the estimate joins): moving it
-    # after the est filter was measured SLOWER on the broadcast tier
-    # (3.1 s vs 2.3 s warm at sf1) even at a ~1.03 duplicate factor —
-    # without the distinct's exchange the interpreted-HOF estimate runs
-    # fused into the group-and-pair aggregation stage and loses the
-    # post-exchange parallelism rebalance.
-    cand = _pair_candidates(
-        _banded(sigs, "_fp", bands=bands, rows=rows), "_fp", small
-    ).distinct()
-    # Estimate-join strategy, three tiers (see _EST_BROADCAST_MAX_KEYS):
-    # tiny corpora let AQE broadcast on its own; broadcast-sized sig
-    # tables get an explicit broadcast (the per-pair alternative shuffles
-    # 2 × sig bytes × candidate count — measured 633 MB/run at sf1 on
-    # the heavy corpus profile, vs a 26 MB sig broadcast); above that,
-    # SHUFFLE_HASH — the signature rows need no ordering, and the
-    # planner's static estimate of the (cand ⋈ sig_a) intermediate
-    # otherwise falls back to SortMergeJoin, paying a sort of the wide
-    # signature rows on BOTH est joins (measured at the 10× leg).
-    sa = sigs.select(F.col("_fp").alias("_fp_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("_fp").alias("_fp_b"), F.col("sig").alias("sig_b"))
-    if not small:
-        if bcast:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        else:
-            sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
-    agree = _sig_agreement(k)
-    rep_pairs = (
-        cand.join(sa, "_fp_a")
-        .join(sb, "_fp_b")
-        .select(
-            "_fp_a",
-            "_fp_b",
-            F.round(agree / F.lit(k), 6).alias("est_jaccard"),
-        )
-    )
-    if min_est is not None:
-        # Filter at rep-pair grain, BEFORE expansion multiplies rows.
-        rep_pairs = rep_pairs.filter(F.col("est_jaccard") >= min_est)
-    ma = members.select(F.col("_fp").alias("_fp_a"), F.col("_mid").alias("_ida"))
-    mb = members.select(F.col("_fp").alias("_fp_b"), F.col("_mid").alias("_idb"))
-    cross = (
-        rep_pairs.join(ma, "_fp_a")
-        .join(mb, "_fp_b")
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "est_jaccard",
-        )
-    )
-    # Same-text pairs: identical signatures agree in every band/position,
-    # so they are always candidates with est exactly 1.0.
-    intra = (
-        members.alias("x")
-        .join(
-            members.alias("y"),
-            (F.col("x._fp") == F.col("y._fp")) & (F.col("x._mid") < F.col("y._mid")),
-        )
-        .select(
-            F.col("x._mid").alias("id_a"),
-            F.col("y._mid").alias("id_b"),
-            F.lit(1.0).alias("est_jaccard"),
-        )
-    )
-    if min_est is not None and min_est > 1.0:
-        intra = intra.filter(F.lit(False))
-    return cross.unionByName(intra)
+    return _doc_pairs(rep_pairs, members, id_col, "est_jaccard", min_est)
 
 
 def _minhash_pairs_direct(
-    docs: DataFrame, id_col: str, text_col: str, min_est: float | None,
+    docs: DataFrame, key: str, text_col: str, min_est: float | None,
     small: bool = False,
     bands: int = MINHASH_BANDS,
     rows: int = MINHASH_ROWS,
     n_keys: int | None = None,
+    grain: str = "doc",
 ) -> DataFrame:
-    """Near-duplicate-free fast path: signatures at doc grain, candidate
-    pairing per _pair_candidates, estimates re-read from the
-    materialized signature table. Row-identical to the collapsed path in
-    all cases (identical texts share every band and agree at all K
-    positions), minus the dropDuplicates shuffle and the two ~identity
-    expansion joins."""
+    """The key-grain core of minhash_candidate_pairs: signatures of
+    ``docs`` (persisted in the slot ``minhash_{grain}_{bands}x{rows}``),
+    LSH candidates, then estimates. ``grain="doc"`` keys by the doc id
+    and names the pairs id_a/id_b (the direct path); ``grain="rep"``
+    runs on the collapse's reps, keyed by ``_fp``, and names them
+    _fp_a/_fp_b.
+
+    The estimate join has three tiers (see _EST_BROADCAST_MAX_KEYS):
+    no hint at ≤ _PAIR_JOIN_MAX_KEYS keys (AQE broadcasts on its own),
+    an explicit broadcast while the signature table is broadcast-sized,
+    SHUFFLE_HASH beyond — the signature rows need no ordering, and the
+    planner's static size estimate would otherwise pick a SortMergeJoin
+    that sorts the wide rows on both joins."""
     k = bands * rows
-    base_expr = _cached_expr(
-        ("minhash_base", text_col), lambda: minhash_base_hashes(F.col(text_col))
-    )
-    sig_expr = _cached_expr(
-        ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
-    )
+    pair = ("id_a", "id_b") if grain == "doc" else ("_fp_a", "_fp_b")
     sigs = _persist_sigs(
-        # doc-grain (id, sig) — distinct from the rep-grain collapsed-path
-        # table; keyed by the dial so a re-dialed corpus gets its own slot
-        f"minhash_doc_{bands}x{rows}",
-        docs.select(F.col(id_col), base_expr.alias("_base")).select(
-            id_col, sig_expr.alias("sig")
-        ),
+        f"minhash_{grain}_{bands}x{rows}", _signatures(docs, key, text_col, k)
     )
-    bcast = (
-        not small and n_keys is not None and n_keys <= _EST_BROADCAST_MAX_KEYS
-    )
-    cand = (
-        _pair_candidates(
-            _banded(sigs, id_col, bands=bands, rows=rows), id_col, small
-        )
-        .select(
-            F.col(f"{id_col}_a").alias("id_a"), F.col(f"{id_col}_b").alias("id_b")
-        )
-        .distinct()
-    )
-    # Same three-tier estimate-join strategy as the collapsed path:
-    # explicit broadcast while the sig table is broadcast-sized, SHJ
-    # beyond — never SortMergeJoin on wide signature rows.
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    if not small:
-        if bcast:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        else:
-            sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
-    agree = _sig_agreement(k)
-    pairs = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(k), 6).alias("est_jaccard"),
-        )
-    )
-    if min_est is not None:
-        pairs = pairs.filter(F.col("est_jaccard") >= min_est)
-    return pairs
+    if small:
+        hint = None
+    elif n_keys is not None and n_keys <= _EST_BROADCAST_MAX_KEYS:
+        hint = "broadcast"
+    else:
+        hint = "shuffle_hash"
+    cand = _pair_candidates(sigs, key, pair, small, bands, rows)
+    return _estimate_join(cand, sigs, sigs, key, pair, k, min_est, (hint, hint))
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,15 +826,13 @@ def minhash_signature_index(
     sources/registry.py attach_or_build_bucketed). Returns
     ``(members, sigs, bands)``.
 
-    REP GRAIN, exactly like minhash_candidate_pairs' collapse path: one
-    signature per DISTINCT text (keyed by its md5 fingerprint), plus
-    the fingerprint -> doc-id member map. Identical texts have
-    identical signatures, so the LSH result at doc grain is fully
-    determined by the rep-grain result + the member map — and a
-    replica-heavy corpus (mirrors, boilerplate — normal at 100 TB)
-    costs one signature per distinct text instead of a signature join
-    quadratic in class size (the v1 doc-grain layout measured
-    74 s/increment at sf30; see _MINHASH_INDEX_VERSION).
+    REP GRAIN, built by the same _collapse and _signatures as
+    minhash_candidate_pairs' collapse path: one signature per DISTINCT
+    non-NULL text (keyed by its md5 fingerprint), plus the fingerprint
+    -> doc-id member map. A replica-heavy corpus (mirrors, boilerplate
+    — normal at 100 TB) costs one signature per distinct text instead
+    of a signature join quadratic in class size (see
+    _MINHASH_INDEX_VERSION).
 
     - ``mhmem_*`` (_fp, id) bucketed+sorted by _fp: the doc-grain
       expansion map, co-located for the final expansion joins.
@@ -854,38 +867,15 @@ def minhash_signature_index(
     fp = _minhash_index_fp(fingerprint, bands, rows)
     mem_tbl, sig_tbl, band_tbl = _minhash_index_tables(index_id, bands, rows, n)
 
+    members, reps = _collapse(old_docs, id_col, text_col)
+    attach_or_build_bucketed(spark, mem_tbl, fp, "_fp", n, lambda: members)
     attach_or_build_bucketed(
-        spark,
-        mem_tbl,
-        fp,
-        "_fp",
-        n,
-        lambda: old_docs.select(
-            F.md5(F.col(text_col)).alias("_fp"), F.col(id_col)
-        ),
+        spark, sig_tbl, fp, "_fp", n, lambda: _signatures(reps, "_fp", text_col, k)
     )
-
-    def _build_sigs() -> DataFrame:
-        reps = old_docs.select(
-            F.md5(F.col(text_col)).alias("_fp"), F.col(text_col).alias("_rtext")
-        ).dropDuplicates(["_fp"])
-        base_expr = _cached_expr(
-            ("minhash_base", "_rtext"), lambda: minhash_base_hashes(F.col("_rtext"))
-        )
-        sig_expr = _cached_expr(
-            ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
-        )
-        return reps.select("_fp", base_expr.alias("_base")).select(
-            "_fp", sig_expr.alias("sig")
-        )
-
-    attach_or_build_bucketed(spark, sig_tbl, fp, "_fp", n, _build_sigs)
-
-    def _build_bands() -> DataFrame:
-        banded = _banded(spark.table(sig_tbl), "_fp", bands=bands, rows=rows)
-        return banded.withColumn("bh", F.xxhash64("band", "band_key"))
-
-    attach_or_build_bucketed(spark, band_tbl, fp, "bh", n, _build_bands)
+    attach_or_build_bucketed(
+        spark, band_tbl, fp, "bh", n,
+        lambda: _hashed_bands(spark.table(sig_tbl), bands, rows),
+    )
     return spark.table(mem_tbl), spark.table(sig_tbl), spark.table(band_tbl)
 
 
@@ -934,21 +924,10 @@ def minhash_index_append(
                 f"minhash_index_append: index table {t} does not exist — "
                 "build it first with minhash_signature_index"
             )
-    fpd = ingested_docs.select(
-        F.md5(F.col(text_col)).alias("_fp"), F.col(id_col), F.col(text_col)
-    )
-    append_bucketed(spark, mem_tbl, fpd.select("_fp", id_col), "_fp", n, fp)
-    base_expr = _cached_expr(
-        ("minhash_base", text_col), lambda: minhash_base_hashes(F.col(text_col))
-    )
-    sig_expr = _cached_expr(
-        ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
-    )
-    fresh = (
-        fpd.dropDuplicates(["_fp"])
-        .join(spark.table(sig_tbl), "_fp", "left_anti")
-        .select("_fp", base_expr.alias("_base"))
-        .select("_fp", sig_expr.alias("sig"))
+    members, reps = _collapse(ingested_docs, id_col, text_col)
+    append_bucketed(spark, mem_tbl, members, "_fp", n, fp)
+    fresh = _signatures(
+        reps.join(spark.table(sig_tbl), "_fp", "left_anti"), "_fp", text_col, k
     )
     # One narrow pass feeds two inserts: materialize the genuinely-new
     # signatures once (the left-anti probe re-reads the sig table
@@ -956,16 +935,7 @@ def minhash_index_append(
     # not re-derive it after the sig insert lands).
     fresh = fresh.localCheckpoint(eager=True)
     append_bucketed(spark, sig_tbl, fresh, "_fp", n, fp)
-    append_bucketed(
-        spark,
-        band_tbl,
-        _banded(fresh, "_fp", bands=bands, rows=rows).withColumn(
-            "bh", F.xxhash64("band", "band_key")
-        ),
-        "bh",
-        n,
-        fp,
-    )
+    append_bucketed(spark, band_tbl, _hashed_bands(fresh, bands, rows), "bh", n, fp)
 
 
 def minhash_pairs_vs_index(
@@ -993,9 +963,10 @@ def minhash_pairs_vs_index(
     distinct text, and only the surviving pairs expand through the
     member maps to doc grain. Execution shape:
 
-    1. batch fingerprints + rep signatures: one codegen'd map pass over
-       distinct batch texts, session-persisted (the production
-       increment would append them to the index);
+    1. batch member map and rep signatures (_collapse, _signatures):
+       one codegen'd map pass over distinct batch texts,
+       session-persisted (the production increment would append them
+       to the index);
     2. candidate join: narrow batch band rows against the bh-bucketed
        index band table — broadcast when the batch is small (the index
        streams map-side, zero exchange anywhere), SHUFFLE_HASH of the
@@ -1003,40 +974,27 @@ def minhash_pairs_vs_index(
        hashpartitioning(bh, N) buckets, still no index shuffle). A
        same-fingerprint (old, new) pair is an ordinary candidate here:
        identical signatures share every band;
-    3. batch-internal rep pairs reuse the size-adaptive LSH pairing of
-       the batch path (_pair_candidates); same-fingerprint batch pairs
-       (est exactly 1.0) come straight off the member map;
-    4. estimate joins re-read rep signatures from the _fp-bucketed sig
-       index (old side) and the persisted batch table (new side), and
-       min_est filters BEFORE the expansion multiplies rows.
+    3. batch-internal rep pairs run the batch path's _pair_candidates;
+    4. both estimate joins are the batch path's _estimate_join, re-reading
+       rep signatures from the _fp-bucketed sig index (old side) and
+       the persisted batch table (new side); min_est filters BEFORE the
+       expansion multiplies rows;
+    5. (old, new) rep pairs expand through both member maps
+       (_expand_pairs), batch-internal ones through _doc_pairs, which
+       adds the same-fingerprint batch pairs at est exactly 1.0.
     """
     k = bands * rows
-    fpd = new_docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("_fp"), F.col(text_col)
-    )
-    new_members = _persist_sigs(
-        f"minhash_incr_mem_{bands}x{rows}", fpd.select("_fp", id_col)
-    )
-    base_expr = _cached_expr(
-        ("minhash_base", text_col), lambda: minhash_base_hashes(F.col(text_col))
-    )
-    sig_expr = _cached_expr(
-        ("minhash_sig", "_base", k), lambda: minhash_from_base(F.col("_base"), k)
-    )
+    members, reps = _collapse(new_docs, id_col, text_col)
+    new_members = _persist_sigs(f"minhash_incr_mem_{bands}x{rows}", members)
     new_sigs = _persist_sigs(
-        f"minhash_incr_new_{bands}x{rows}",
-        fpd.dropDuplicates(["_fp"])
-        .select("_fp", base_expr.alias("_base"))
-        .select("_fp", sig_expr.alias("sig")),
+        f"minhash_incr_new_{bands}x{rows}", _signatures(reps, "_fp", text_col, k)
     )
     # Cheap: the persisted batch rep table is the thing being counted,
     # and the count decides broadcast-vs-shuffle for BOTH candidate
     # joins.
     n_new = new_sigs.count()
     small = n_new <= _PAIR_JOIN_MAX_KEYS
-    new_banded = _banded(new_sigs, "_fp", bands=bands, rows=rows).withColumn(
-        "bh", F.xxhash64("band", "band_key")
-    )
+    new_banded = _hashed_bands(new_sigs, bands, rows)
     probe = (
         F.broadcast(new_banded) if small else new_banded.hint("shuffle_hash")
     )
@@ -1052,70 +1010,28 @@ def minhash_pairs_vs_index(
         )
         .distinct()
     )
-    intra_cand = (
-        _pair_candidates(new_banded, "_fp", small)
-        .select(F.col("_fp_a"), F.col("_fp_b"))
-        .distinct()
+    # The index side stays unhinted (its _fp buckets need no exchange);
+    # the batch side shuffles hash-partitioned past the broadcast size.
+    shj = None if small else "shuffle_hash"
+    cross_rep = _estimate_join(
+        cross_cand, index_sigs, new_sigs, "_fp", ("_fpo", "_fpn"), k, min_est,
+        (None, shj),
     )
-    agree = _sig_agreement(k)
-    est = F.round(agree / F.lit(k), 6).alias("est_jaccard")
-    so = index_sigs.select(F.col("_fp").alias("_fpo"), F.col("sig").alias("sig_a"))
-    sn = new_sigs.select(F.col("_fp").alias("_fpn"), F.col("sig").alias("sig_b"))
-    sa = new_sigs.select(F.col("_fp").alias("_fp_a"), F.col("sig").alias("sig_a"))
-    sb = new_sigs.select(F.col("_fp").alias("_fp_b"), F.col("sig").alias("sig_b"))
-    if not small:
-        sn, sa, sb = sn.hint("shuffle_hash"), sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
-    cross_rep = cross_cand.join(so, "_fpo").join(sn, "_fpn").select(
-        "_fpo", "_fpn", est
+    intra_pair = ("_fp_a", "_fp_b")
+    intra_rep = _estimate_join(
+        _pair_candidates(new_sigs, "_fp", intra_pair, small, bands, rows),
+        new_sigs, new_sigs, "_fp", intra_pair, k, min_est, (shj, shj),
     )
-    intra_rep = intra_cand.join(sa, "_fp_a").join(sb, "_fp_b").select(
-        "_fp_a", "_fp_b", est
+    cross = _expand_pairs(
+        cross_rep, index_members, new_members, ("_fpo", "_fpn"), id_col,
+        "est_jaccard",
     )
-    if min_est is not None:
-        # At rep-pair grain, BEFORE expansion multiplies rows.
-        cross_rep = cross_rep.filter(F.col("est_jaccard") >= min_est)
-        intra_rep = intra_rep.filter(F.col("est_jaccard") >= min_est)
-    mo = index_members.select(F.col("_fp").alias("_fpo"), F.col(id_col).alias("_ido"))
-    mn = new_members.select(F.col("_fp").alias("_fpn"), F.col(id_col).alias("_idn"))
-    ma = new_members.select(F.col("_fp").alias("_fp_a"), F.col(id_col).alias("_ida"))
-    mb = new_members.select(F.col("_fp").alias("_fp_b"), F.col(id_col).alias("_idb"))
-    cross_pairs = (
-        cross_rep.join(mo, "_fpo")
-        .join(mn, "_fpn")
-        .select(
-            F.least("_ido", "_idn").alias("id_a"),
-            F.greatest("_ido", "_idn").alias("id_b"),
-            "est_jaccard",
-        )
+    # Same-fingerprint (old, new) pairs are ordinary cross candidates
+    # (identical signatures share every band); same-fingerprint batch
+    # pairs come off the batch member map in _doc_pairs.
+    return cross.unionByName(
+        _doc_pairs(intra_rep, new_members, id_col, "est_jaccard", min_est)
     )
-    intra_pairs = (
-        intra_rep.join(ma, "_fp_a")
-        .join(mb, "_fp_b")
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "est_jaccard",
-        )
-    )
-    # Same-fingerprint pairs WITHIN the batch: identical signatures
-    # agree everywhere — est exactly 1.0, straight off the member map.
-    # (Old-new same-fingerprint pairs are ordinary cross candidates.)
-    intra_same = (
-        new_members.alias("x")
-        .join(
-            new_members.alias("y"),
-            (F.col("x._fp") == F.col("y._fp"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-            F.lit(1.0).alias("est_jaccard"),
-        )
-    )
-    if min_est is not None and min_est > 1.0:
-        intra_same = intra_same.filter(F.lit(False))
-    return cross_pairs.unionByName(intra_pairs).unionByName(intra_same)
 
 
 def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1334,7 +1250,7 @@ def ngram_jaccard_pairs(
     ``min ≥ t·max`` prunes inside the join, exact verify runs on
     candidates only.
 
-    TOKEN ORDER (r14): the global order that defines each doc's prefix
+    TOKEN ORDER: the global order that defines each doc's prefix
     is ascending DOCUMENT FREQUENCY (ties lexicographic) — the
     AllPairs/PPJoin ordering — NOT lexicographic. The correctness proof
     above holds for ANY total order, so the output is identical; the
@@ -1345,8 +1261,8 @@ def ngram_jaccard_pairs(
     family — at the cost of one extra linear DF-count + re-sort pass,
     which is how every production set-similarity join pays for it.
 
-    EXACT-DUPLICATE COLLAPSE (r14, same shape as
-    minhash_candidate_pairs' collapse path): the join runs at
+    EXACT-DUPLICATE COLLAPSE (the _collapse and _doc_pairs that
+    minhash_candidate_pairs' collapse path runs): the join runs at
     DISTINCT-TEXT grain and doc-grain pairs are recovered by expansion
     joins. Identical texts have identical shingle sets, so J(a, b) for
     members of classes A, B equals J(rep_A, rep_B) — substitution is
@@ -1361,9 +1277,9 @@ def ngram_jaccard_pairs(
     and must not pair here either (NULL-text docs additionally drop out
     because NULL = NULL is not true in the intra self-join).
 
-    MEASURED LIMIT (r14, heavy-profile sfx100: 500k docs, 129,792
-    distinct texts, ~204 shingles/doc): the two r14 changes cut the
-    identical-class multiplier to 1 and the largest prefix bucket from
+    MEASURED LIMIT (heavy-profile sfx100: 500k docs, 129,792
+    distinct texts, ~204 shingles/doc): the collapse and the token
+    order cut the identical-class multiplier to 1 and the largest prefix bucket from
     3,916 to 555, but the corpus is near-dup SATURATED — thousands of
     distinct texts per near-dup family share most shingles — so the
     candidate mass at rep grain is still Σc² ≈ 4.7B occurrence rows
@@ -1378,18 +1294,13 @@ def ngram_jaccard_pairs(
     deliberately-quadratic (bench BASELINE_SKIP). On a cluster the
     candidate shuffle distributes; on one box, size the slice.
     """
-    members = docs.select(
-        F.col(id_col).alias("_mid"), F.md5(F.col(text_col)).alias("_fp")
-    )
-    reps = docs.select(
-        F.md5(F.col(text_col)).alias("_fp"), F.col(text_col).alias("_rtext")
-    ).dropDuplicates(["_fp"])
+    members, reps = _collapse(docs, id_col, text_col)
     # (_fp, shingle) occurrences of the non-NULL texts: a NULL text's
     # single NULL shingle never joins, so neither tier pairs it
-    texts = reps.filter(F.col("_rtext").isNotNull())
+    texts = reps.filter(F.col(text_col).isNotNull())
     ex = texts.select(
         "_fp",
-        F.explode(F.array_distinct(char_shingles(F.col("_rtext"), shingle_n))).alias(
+        F.explode(F.array_distinct(char_shingles(F.col(text_col), shingle_n))).alias(
             "tok"
         ),
     )
@@ -1398,9 +1309,9 @@ def ngram_jaccard_pairs(
         if rep_pairs is not None:
             # sh-membership ⇔ the class has ≥ 1 shingle ⇔ its text is
             # non-null (char_shingles of non-null text always yields ≥ 1
-            # token) — the intra gate below needs no shingle pass.
+            # token) — the same-text gate needs no shingle pass.
             shfps = texts.select(F.col("_fp").alias("_shfp"))
-            return _ngram_pair_tail(members, rep_pairs, shfps, threshold)
+            return _doc_pairs(rep_pairs, members, id_col, "jaccard", threshold, shfps)
     dfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     sh = (
         ex.join(dfreq, "tok")
@@ -1467,46 +1378,11 @@ def ngram_jaccard_pairs(
         .filter(jac >= threshold)
         .select("_fp_a", "_fp_b", F.round(jac, 6).alias("jaccard"))
     )
-    return _ngram_pair_tail(
-        members, rep_pairs, sh.select(F.col("_fp").alias("_shfp")), threshold
-    )
-
-
-def _ngram_pair_tail(
-    members: DataFrame, rep_pairs: DataFrame, shfps: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail of both ngram_jaccard_pairs tiers: expand rep-grain
-    pairs back to doc grain, then add same-text pairs (J exactly 1.0)
-    for classes with at least one shingle (``shfps``: the fps the join
-    tier's ``sh`` contains — explode() dropped empty-shingle
-    fingerprints, and the direct join never paired such docs)."""
-    ma = members.select(F.col("_fp").alias("_fp_a"), F.col("_mid").alias("_ida"))
-    mb = members.select(F.col("_fp").alias("_fp_b"), F.col("_mid").alias("_idb"))
-    cross = (
-        rep_pairs.join(ma, "_fp_a")
-        .join(mb, "_fp_b")
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    intra = (
-        members.alias("x")
-        .join(
-            members.alias("y"),
-            (F.col("x._fp") == F.col("y._fp")) & (F.col("x._mid") < F.col("y._mid")),
-        )
-        .join(shfps, F.col("x._fp") == F.col("_shfp"), "left_semi")
-        .select(
-            F.col("x._mid").alias("id_a"),
-            F.col("y._mid").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:
-        intra = intra.filter(F.lit(False))
-    return cross.unionByName(intra)
+    # Same-text pairs only for classes with ≥ 1 shingle: explode()
+    # dropped empty-shingle fingerprints from ``sh``, and the direct
+    # join never paired such docs.
+    shfps = sh.select(F.col("_fp").alias("_shfp"))
+    return _doc_pairs(rep_pairs, members, id_col, "jaccard", threshold, shfps)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,37 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_log_lakehouse_spark.functions.skew import salted_join as _salted_join
+from mini_log_lakehouse_spark.functions.skew import salted_join
 from mini_log_lakehouse_spark.sources.registry import load_table
 
 #: Default salt fan-out: enough to spread one hot key over every core of
 #: a 32-way local run or a few executors of a real cluster; raising it
 #: costs linear replication of the salted-right side.
 DEFAULT_SALTS = 16
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salts: int = DEFAULT_SALTS,
-    how: str = "inner",
-) -> DataFrame:
-    """``left ⋈ right ON left.on = right.on`` with the shuffle spread
-    over ``salts`` sub-keys per join key.
-
-    ``right`` is replicated ×salts (it must be the small-per-key side);
-    ``left`` gets a uniform deterministic salt from its whole row hash.
-    Result equals the plain join exactly — salting only changes the
-    physical key layout, never the match set (every left row meets the
-    one replica of its key carrying its salt).
-
-    Thin wrapper over functions/skew.salted_join (the one implementation),
-    which also enforces the contract that makes the equality claim true:
-    ``how`` must be big-side-preserving (inner/left/semi/anti — an outer
-    form would emit unmatched small-side rows once per salt replica) and
-    ``salts`` >= 1."""
-    return _salted_join(left, right, key=on, salt=salts, how=how)
 
 
 def salted_hot_key_agg(
@@ -98,9 +74,9 @@ def events_hot_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Events are bucketed so ~70% of rows share bucket 0 (a synthetic hot
     key with the same shape as a real hot tenant/session); the bucket
     dimension (per-bucket event-type counts at dim grain) joins back via
-    ``salted_join``, then rolls up — the oracle restates the identical
-    join relationally, proving the salt changed the layout and not the
-    semantics."""
+    functions/skew.salted_join with DEFAULT_SALTS salts, then rolls up —
+    the oracle restates the identical join relationally, proving the
+    salt changed the layout and not the semantics."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -114,7 +90,7 @@ def events_hot_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = ev.groupBy(F.col("bucket").alias("b")).agg(
         F.count_distinct("user_id").alias("bucket_users")
     ).withColumnRenamed("b", "bucket")
-    joined = salted_join(ev, dim, on="bucket")
+    joined = salted_join(ev, dim, "bucket", salt=DEFAULT_SALTS)
     return (
         joined.groupBy("bucket", "bucket_users")
         .agg(

@@ -87,7 +87,7 @@ def test_minhash_pair_strategies_identical(docs_with_dups):
 
 
 def test_minhash_estimate_join_tiers_identical(docs_with_dups):
-    """The r13 estimate-join tiers (AQE-broadcast / explicit broadcast /
+    """The estimate-join tiers (AQE-broadcast / explicit broadcast /
     shuffle-hash — see _EST_BROADCAST_MAX_KEYS) are purely physical:
     forcing each tier via n_keys must emit identical rows."""
     def run(small, n_keys):
@@ -1130,6 +1130,101 @@ def test_incremental_minhash_index_reattaches(spark, tmp_path):
         shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
 
 
+def _drop_index_tables(spark, index_id):
+    """Drop a test's external index tables: catalog entries AND files."""
+    import os
+    import shutil
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in [x.name for x in spark.catalog.listTables() if index_id in x.name]:
+        spark.sql(f"DROP TABLE {t}")
+        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+
+
+def test_minhash_paths_never_pair_null_texts(spark):
+    """A NULL text has no shingles, so it pairs with nothing: the direct
+    path (both pairing strategies), the collapsed path and the
+    incremental path emit the same rows, and none touches a NULL-text
+    doc — also with ``min_est=None``, where a NULL estimate would not be
+    filtered out."""
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat watches "
+        "from the warm windowsill and the rain falls softly outside"
+    )
+    rows = [
+        (0, base),
+        (1, base),
+        (2, base.replace("rain", "snow")),
+        (3, None),
+        (4, None),
+        (5, "abc"),
+        (6, None),
+        (7, base),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    nulls = {3, 4, 6}
+
+    def collected(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    direct = [
+        collected(dedup._minhash_pairs_direct(docs, "doc_id", "text", None, small=s))
+        for s in (True, False)
+    ]
+    collapsed = collected(dedup.minhash_candidate_pairs(docs, collapse=True))
+    assert direct[0] == direct[1] == collapsed
+    assert {(0, 1, 1.0), (0, 7, 1.0), (1, 7, 1.0)} <= set(collapsed)
+    assert not [r for r in collapsed if r[0] in nulls or r[1] in nulls]
+
+    is_batch = F.col("doc_id") % 2 == 0
+    members, sigs, bands = dedup.minhash_signature_index(
+        spark, docs.filter(~is_batch), "t_nulltext", "fp-nulltext"
+    )
+    try:
+        incr = collected(
+            dedup.minhash_pairs_vs_index(docs.filter(is_batch), members, sigs, bands)
+        )
+    finally:
+        _drop_index_tables(spark, "t_nulltext")
+    assert incr == [r for r in collapsed if r[0] % 2 == 0 or r[1] % 2 == 0]
+
+
+def test_minhash_repeat_calls_keep_their_job_budget(spark, sf_dir):
+    """Repeat calls over one corpus: building the batch pairs runs no job
+    (the collapse decision is memoized per corpus, and a memo hit builds
+    no fingerprint plan), building the increment runs only the batch
+    size count (2 jobs), and neither collect runs more jobs than the
+    hand-written paths this pipeline replaced did (4 and 13 on this
+    corpus)."""
+    from mini_log_lakehouse_spark.sources.registry import load_table
+    from tests.job_count import count_jobs
+
+    d = load_table(spark, sf_dir, "documents")
+    dedup.minhash_candidate_pairs(d, min_est=0.5).collect()  # warm
+    pairs, build = count_jobs(
+        spark, lambda: dedup.minhash_candidate_pairs(d, min_est=0.5)
+    )
+    _, run = count_jobs(spark, pairs.collect)
+    assert build == 0
+    assert run <= 4
+
+    is_batch = F.col("doc_id") % 10 == 0
+    index = dedup.minhash_signature_index(
+        spark, d.filter(~is_batch), "t_jobbudget", "fp-jobbudget"
+    )
+    try:
+        def increment():
+            return dedup.minhash_pairs_vs_index(d.filter(is_batch), *index, min_est=0.5)
+
+        increment().collect()  # warm
+        pairs, build = count_jobs(spark, increment)
+        _, run = count_jobs(spark, pairs.collect)
+    finally:
+        _drop_index_tables(spark, "t_jobbudget")
+    assert build == 2
+    assert run <= 13
+
+
 # --- incremental ANN (persisted IVF cell index) -------------------------------
 
 
@@ -1392,7 +1487,7 @@ def test_topk_tie_safe_matches_full_sort():
 
 
 def test_minhash_est_join_broadcasts_in_middle_tier(spark):
-    """The r13 estimate-join middle tier (_EST_BROADCAST_MAX_KEYS): at a
+    """The estimate-join middle tier (_EST_BROADCAST_MAX_KEYS): at a
     pairing-key count above _PAIR_JOIN_MAX_KEYS (group-and-pair pairing)
     but a broadcast-sized signature table, the estimate joins must be
     BROADCAST hash joins — the pair-grain alternative shuffles

@@ -4,10 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mini_log_lakehouse_spark.operators.skew import (
-    salted_hot_key_agg,
-    salted_join,
-)
+from mini_log_lakehouse_spark.functions.skew import salted_join
+from mini_log_lakehouse_spark.operators.skew import DEFAULT_SALTS, salted_hot_key_agg
 
 
 def _skewed(spark, n=5000):
@@ -25,14 +23,14 @@ def test_salted_join_equals_plain_join(spark):
     left = _skewed(spark)
     right = left.groupBy("k").agg(F.sum("v").alias("kv"))
     plain = left.join(right, "k").select("row_id", "k", "kv")
-    salted = salted_join(left, right, on="k").select("row_id", "k", "kv")
+    salted = salted_join(left, right, "k", salt=DEFAULT_SALTS).select("row_id", "k", "kv")
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_salted_join_spreads_hot_key(spark):
     left = _skewed(spark)
     right = left.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
-    salted = salted_join(left, right, on="k", salts=8)
+    salted = salted_join(left, right, "k", salt=8)
     # before dropping _salt the hot key must occupy every salt sub-key;
     # reconstruct the salt the same way the operator does.
     l = left.withColumn(
@@ -44,17 +42,17 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_salted_join_rejects_small_side_preserving_forms(spark):
-    """The operators-layer wrapper must enforce the shared guard: outer
-    forms would emit unmatched small-side rows once per salt replica."""
+    """The join must refuse outer forms, which would emit unmatched
+    small-side rows once per salt replica, and a salt below 1."""
     import pytest
 
     left = _skewed(spark, n=100)
     right = left.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
     for how in ("right", "full", "full_outer"):
         with pytest.raises(ValueError, match="big-side-preserving"):
-            salted_join(left, right, on="k", how=how)
+            salted_join(left, right, "k", how=how)
     with pytest.raises(ValueError, match="salt must be >= 1"):
-        salted_join(left, right, on="k", salts=0)
+        salted_join(left, right, "k", salt=0)
 
 
 def test_salted_hot_key_agg_matches_plain_agg(spark):
